@@ -177,41 +177,44 @@ object N2kBinding {
   // Merged states are store-sized, so the localCheckpoints materialize a
   // sliver (in production the state instead reads back from the database
   // between imports — see StorePipelineSpec's snapshot-stream test).
-  // Cost shape: each merge is one full-outer sort-merge join on its own
-  // key — a full outer can never broadcast, so the 14-table × 2-import
-  // gate pays ~26 tiny exchanges of store-sized frames; at 100 TB the
-  // same exchanges carry the real per-table state and ARE the plan you
-  // want (one keyed shuffle per table, facts never re-scanned).
+  // Cost shape: ONE Spark job per table and import materializes the merge
+  // (its AQE query stages aside), and the validation, the extract and the
+  // merge all run inside it — nothing is checkpointed or collected before
+  // the merge. Each merge is one full-outer sort-merge join on its own key
+  // — a full outer can never broadcast, so every table pays a couple of
+  // tiny exchanges of store-sized frames; at 100 TB the same exchanges
+  // carry the real per-table state and ARE the plan you want (one keyed
+  // shuffle per table, facts never re-scanned). At this scale the fixed
+  // per-job and per-plan costs (scheduling, planning, code generation)
+  // dominate, so the import is shaped to start as few jobs and generate
+  // as few distinct classes as it can.
 
-  /** Phase 1 of an import, independent of any prior import's outcome:
-    * extract + validate every table of the window CONCURRENTLY (the
-    * report collect doubles as the lazy-checkpointed extract's
-    * materializer). Because staging depends only on the export window,
-    * consecutive imports can prepare while their predecessors merge —
-    * exactly how production stages exports into the database ahead of
-    * the transaction. Throws on any validation violation (the
-    * reference's stop-on-invalid rule over the whole transaction). */
-  def prepareImport(w: DataFrame): Seq[(Table, DataFrame)] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(Graph.size, 16))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try {
-      // finite bound (a hung extract surfaces as a timeout, not a wedged
-      // driver); Future.sequence fails fast on the first error and the
-      // finally's shutdownNow drops queued sibling tasks
-      val extractsAndBad = Await.result(
-        Future.sequence(Graph.toList.map(t => Future {
-          val src = extract(t, w).localCheckpoint(false)
-          val bad = Validate.report(src,
-              t.keyCols.map(k => Validate.Rule(s"${t.name}_${k}_nonnull", col(k).isNotNull)))
-            .filter(col("n_violations") > 0).collect()
-          (t, src, bad)
-        })), PoolTimeout)
-      val bad = extractsAndBad.flatMap(_._3)
-      require(bad.isEmpty, s"validation failed: ${bad.mkString(", ")}")
-      extractsAndBad.map { case (t, src, _) => t -> src }
-    } finally pool.shutdownNow()
+  /** Phase 1 of an import: every table's extract of the window, each
+    * carrying the no-NA-keys rule (the reference's stop-on-invalid) as an
+    * in-plan assertion — see [[checkKeys]]. LAZY: no job runs here. The
+    * rule is enforced inside the commitImport job that materializes the
+    * merge, and commitImport fails before returning any state, so a
+    * violation still aborts the import before storeAll stores anything. */
+  def prepareImport(w: DataFrame): Seq[(Table, DataFrame)] =
+    Graph.map(t => t -> checkKeys(t, extract(t, w)))
+
+  /** The no-NA-keys rule as a filter that raises `validation failed:
+    * <table> ...` on the first row with a null key column, inside whatever
+    * job evaluates it — no separate validation pass, no collect.
+    *
+    * The predicate reads only key columns and is deterministic, so the
+    * optimizer pushes it below a keyed aggregate. For `anomaly` that means
+    * the check runs on every (sg_brand, ship_yr) group of the window
+    * BEFORE the return-ratio filter: a null-key group fails the import
+    * even when its ratio would keep it out of the extract (N2kStoreSpec
+    * pins this). For every other table the extract has a null key exactly
+    * when some window row maps to one, so where the check runs does not
+    * change its outcome. */
+  private[graft] def checkKeys(t: Table, df: DataFrame): DataFrame = {
+    val keyNull = t.keyCols.map(col(_).isNull).reduce(_ || _)
+    df.filter(when(keyNull, raise_error(lit(
+      s"validation failed: ${t.name} has a null key (${t.keyCols.mkString(", ")})")))
+      .otherwise(lit(true)))
   }
 
   def importAll(state: Map[String, DataFrame], w: DataFrame, stamp: Long): Map[String, DataFrame] =
@@ -230,24 +233,16 @@ object N2kBinding {
       sum(when(t.keyCols.map(col(_).isNull).reduce(_ || _), 1L).otherwise(0L))
         .as("null_keys"))
 
-  /** Read an observation with the bounded-deadline poll (Components
-    * discipline) and enforce the no-NA-keys rule; falls back to one
-    * Validate.report pass if the metric never lands. */
-  private def requireValidKeys(t: Table, w: DataFrame,
-      obs: org.apache.spark.sql.Observation, which: String): Unit = {
-    import org.apache.spark.sql.graftshim.ObservationBridge
-    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-    var metrics = ObservationBridge.getOrEmpty(obs)
-    while (metrics.isEmpty && System.nanoTime() < deadline) {
-      Thread.sleep(25); metrics = ObservationBridge.getOrEmpty(obs)
-    }
-    val nullKeys = metrics.get("null_keys") match {
-      case Some(n: Long) => n
-      case Some(null)    => 0L // sum over an empty extract
-      case _ => // metric lost — validate the slow way rather than skip
-        Validate.report(extract(t, w),
-            t.keyCols.map(k => Validate.Rule(s"${t.name}_${k}_nonnull", col(k).isNotNull)))
-          .filter(col("n_violations") > 0).count()
+  /** Enforce the no-NA-keys rule from an observe() metric, read with the
+    * bounded poll; if the metric never lands, count the null-key rows of
+    * the window's extract (`cond` carves the window out of `span`) the
+    * slow way rather than skip the check. */
+  private def requireValidKeys(t: Table, span: DataFrame, cond: Column,
+      obs: org.apache.spark.sql.Observation, which: String, metric: String): Unit = {
+    val nullKeys = org.apache.spark.sql.graftshim.ObservationBridge.awaitLong(obs, metric) {
+      Validate.report(extract(t, span.filter(cond)),
+          t.keyCols.map(k => Validate.Rule(s"${t.name}_${k}_nonnull", col(k).isNotNull)))
+        .agg(coalesce(sum("n_violations"), lit(0L))).head.getLong(0)
     }
     require(nullKeys == 0L,
       s"validation failed: ${t.name} $which has $nullKeys null-key rows")
@@ -268,7 +263,7 @@ object N2kBinding {
     * full-outer join hash-partitions its output on the table key, so
     * merge₂ exchanges only the second extract. Flows that write a
     * database keep the two-phase prepareImport/commitImport path with its
-    * eager per-table validation and transaction. */
+    * in-plan key check and transaction. */
   def importPairSummary(w1: DataFrame, w2: DataFrame): DataFrame = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(Graph.size, 16))
@@ -283,8 +278,8 @@ object N2kBinding {
           // EAGER checkpoint: materializes the fused chain and fires the
           // CollectMetrics listeners (a raw toRdd.count() would not)
           val proj = summaryOf(t, m2).localCheckpoint()
-          requireValidKeys(t, w1, obs1, "import 1")
-          requireValidKeys(t, w2, obs2, "import 2")
+          requireValidKeys(t, w1, lit(true), obs1, "import 1", "null_keys")
+          requireValidKeys(t, w2, lit(true), obs2, "import 2", "null_keys")
           proj
         }
       }
@@ -317,33 +312,10 @@ object N2kBinding {
       .repartition(1).sortWithinPartitions(col("table_name"), col("nk"))
       .localCheckpoint()
     chains.foreach { case (t, o1, o2, _) =>
-      requireValidKeys(t, w1, o1, "import 1")
-      requireValidKeys(t, w2, o2, "import 2")
+      requireValidKeys(t, w1, lit(true), o1, "import 1", "null_keys")
+      requireValidKeys(t, w2, lit(true), o2, "import 2", "null_keys")
     }
     out
-  }
-
-  /** requireValidKeys for the one-pass path: same bounded-deadline poll,
-    * but the metric name carries the window and the fallback re-validates
-    * the window's extract (identical rule to the two-phase path). */
-  private def requireValidKeysMetric(t: Table, span: DataFrame, cond: Column,
-      obs: org.apache.spark.sql.Observation, which: String, metric: String): Unit = {
-    import org.apache.spark.sql.graftshim.ObservationBridge
-    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-    var metrics = ObservationBridge.getOrEmpty(obs)
-    while (metrics.isEmpty && System.nanoTime() < deadline) {
-      Thread.sleep(25); metrics = ObservationBridge.getOrEmpty(obs)
-    }
-    val nullKeys = metrics.get(metric) match {
-      case Some(n: Long) => n
-      case Some(null)    => 0L // sum over an empty span
-      case _ => // metric lost — validate the slow way rather than skip
-        Validate.report(extract(t, span.filter(cond)),
-            t.keyCols.map(k => Validate.Rule(s"${t.name}_${k}_nonnull", col(k).isNotNull)))
-          .filter(col("n_violations") > 0).count()
-    }
-    require(nullKeys == 0L,
-      s"validation failed: ${t.name} $which has $nullKeys null-key rows")
   }
 
   /** r16 optimization — the ONE-PASS two-import summary (guide §1.1
@@ -386,8 +358,8 @@ object N2kBinding {
         Future {
           val obs = new org.apache.spark.sql.Observation()
           val proj = onePassSummary(t, span, in1, in2, Some(obs)).localCheckpoint()
-          requireValidKeysMetric(t, span, in1, obs, "import 1", "null_keys_1")
-          requireValidKeysMetric(t, span, in2, obs, "import 2", "null_keys_2")
+          requireValidKeys(t, span, in1, obs, "import 1", "null_keys_1")
+          requireValidKeys(t, span, in2, obs, "import 2", "null_keys_2")
           proj
         }
       }
@@ -412,8 +384,8 @@ object N2kBinding {
       .repartition(1).sortWithinPartitions(col("table_name"), col("nk"))
       .localCheckpoint()
     chains.foreach { case (t, o, _) =>
-      requireValidKeysMetric(t, span, in1, o, "import 1", "null_keys_1")
-      requireValidKeysMetric(t, span, in2, o, "import 2", "null_keys_2")
+      requireValidKeys(t, span, in1, o, "import 1", "null_keys_1")
+      requireValidKeys(t, span, in2, o, "import 2", "null_keys_2")
     }
     out
   }
@@ -542,30 +514,30 @@ object N2kBinding {
         d.as("despawned"))
   }
 
-  /** Phase 2: merge prepared extracts into the state. The per-table
-    * pipelines are independent until the single DB transaction in
-    * storeAll, so BOTH driver-side costs run concurrently from a thread
-    * pool: (a) Catalyst planning — localCheckpoint plans eagerly even
-    * when lazy, and 13 sequential analyze/optimize/plan passes were the
-    * gate's hidden driver floor — and (b) the merge materialization
-    * jobs, each one store-sized keyed shuffle that cannot fill the
-    * cluster alone. */
+  /** Phase 2: merge prepared extracts into the state. Each table's merge
+    * is materialized by ONE job that also evaluates its extract and the
+    * extract's key check, so a validation failure surfaces here — this
+    * call then throws and returns no state, and nothing reaches storeAll.
+    * The per-table pipelines are independent until the single DB
+    * transaction in storeAll, so BOTH driver-side costs run concurrently
+    * from a thread pool: (a) Catalyst planning — localCheckpoint plans
+    * eagerly even when lazy, and 13 sequential analyze/optimize/plan
+    * passes were the gate's hidden driver floor — and (b) the merge
+    * materialization jobs, each one store-sized keyed shuffle that cannot
+    * fill the cluster alone. */
   def commitImport(state: Map[String, DataFrame], extracts: Seq[(Table, DataFrame)],
       stamp: Long): Map[String, DataFrame] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
     val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(Graph.size, 16))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     try {
       val merged = Await.result(
         Future.sequence(extracts.map { case (t, src) => Future {
           val tgt = state(t.name).drop("action")
-          val m =
-            if (t.stamped) UpsertMerge.stampedMerge(tgt, src, t.keyCols, t.attrCols, lit(stamp))
-            else UpsertMerge.merge(tgt, src, t.keyCols, t.attrCols)
-          val ck = m.localCheckpoint(false)
-          ck.queryExecution.toRdd.count() // materialize while siblings overlap
-          t.name -> ck
+          // eager: counts the checkpointed RDD itself while siblings
+          // overlap (a lazy checkpoint counted through a plan compiled one
+          // more scan class per table)
+          t.name -> mergeOf(t, tgt, src, stamp).localCheckpoint()
         } }), PoolTimeout)
       merged.toMap
     } finally pool.shutdownNow()

@@ -70,17 +70,8 @@ object Components {
       // path that bypasses withAction would otherwise hang the driver
       // forever), and fall back to one count() on the materialized state
       // if the metric never lands.
-      import org.apache.spark.sql.graftshim.ObservationBridge
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      var metrics = ObservationBridge.getOrEmpty(obs)
-      while (metrics.isEmpty && System.nanoTime() < deadline) {
-        Thread.sleep(25); metrics = ObservationBridge.getOrEmpty(obs)
-      }
-      changed = metrics.get("changed") match {
-        case Some(n: Long) => n
-        case Some(null)    => 0L // sum over zero rows
-        case _ => upd.filter(col("new_lbl") < col("lbl")).count() // metric lost
-      }
+      changed = org.apache.spark.sql.graftshim.ObservationBridge.awaitLong(obs, "changed")(
+        upd.filter(col("new_lbl") < col("lbl")).count()) // metric lost
       lbl = upd.select(col("id"), col("new_lbl").as("lbl"))
       it += 1
     }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ObservationBridge.awaitLong
 
 /** CONVERGENCE-CHECKED iteration for the edge-sized graph loops (BFS
   * relaxation, k-core peeling, synchronous label propagation) — the
@@ -29,22 +30,6 @@ import org.apache.spark.sql.functions._
   *    at sf0.1).
   */
 object GraphIterate {
-
-  /** Bounded poll for an observe() metric with a recompute fallback —
-    * the Hierarchy.resolve listener-bus discipline. */
-  private def metric(obs: Observation, key: String, fallback: => Long): Long = {
-    import org.apache.spark.sql.graftshim.ObservationBridge
-    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-    var m = ObservationBridge.getOrEmpty(obs)
-    while (m.isEmpty && System.nanoTime() < deadline) {
-      Thread.sleep(25); m = ObservationBridge.getOrEmpty(obs)
-    }
-    m.get(key) match {
-      case Some(n: Long) => n
-      case Some(null)    => 0L // aggregate over zero rows
-      case _             => fallback
-    }
-  }
 
   private def exhausted(what: String, maxRounds: Int): Nothing =
     throw new IllegalStateException(
@@ -84,8 +69,8 @@ object GraphIterate {
       val next = step(dist)
         .observe(obs, count(lit(1)).as("n"), sum(col("dist")).as("s"))
       dist = next.localCheckpoint()
-      val cur = (metric(obs, "n", dist.count()),
-        metric(obs, "s", dist.agg(sum(col("dist"))).head.getLong(0)))
+      val cur = (awaitLong(obs, "n")(dist.count()),
+        awaitLong(obs, "s")(dist.agg(sum(col("dist"))).head.getLong(0)))
       if (cur == prev) return dist // fixed point: further rounds are identity
       prev = cur
       round += 1
@@ -127,7 +112,7 @@ object GraphIterate {
       val obs = new Observation()
       val next = step(edges).observe(obs, count(lit(1)).as("n"))
       edges = next.localCheckpoint()
-      val cur = metric(obs, "n", edges.count())
+      val cur = awaitLong(obs, "n")(edges.count())
       if (cur == prev) return edges // nothing peeled: stable core reached
       prev = cur
       round += 1
@@ -194,8 +179,8 @@ object GraphIterate {
           count(lit(1)).as("n"))
         .select(col("v"), col("label"))
       labels = next.localCheckpoint()
-      val changed = metric(obs, "changed", -1L)
-      val curN = metric(obs, "n", -1L)
+      val changed = awaitLong(obs, "changed")(-1L)
+      val curN = awaitLong(obs, "n")(-1L)
       // fixed point requires BOTH no label flips AND every seed vertex
       // still holding a row — on directed adjacency step() can silently
       // drop vertices whose out-neighbors all lack labels, which the

@@ -69,17 +69,8 @@ object Hierarchy {
       // the checkpoint action already ran; the metric only has to cross the
       // listener bus — bounded poll (Components.scala discipline), with a
       // recompute fallback if it never lands.
-      import org.apache.spark.sql.graftshim.ObservationBridge
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      var metrics = ObservationBridge.getOrEmpty(obs)
-      while (metrics.isEmpty && System.nanoTime() < deadline) {
-        Thread.sleep(25); metrics = ObservationBridge.getOrEmpty(obs)
-      }
-      hits = metrics.get("hits") match {
-        case Some(n: Long) => n
-        case Some(null)    => 0L // sum over zero rows
-        case _             => joined.filter(col("j_key").isNotNull).count()
-      }
+      hits = org.apache.spark.sql.graftshim.ObservationBridge.awaitLong(obs, "hits")(
+        joined.filter(col("j_key").isNotNull).count())
       round += 1
     }
     require(hits == 0,

@@ -2,7 +2,8 @@ package graft.sources
 
 import java.sql.{Connection, DriverManager, PreparedStatement}
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.types._
 
 /** Staged JDBC upsert sink — the reference's write path, Spark-first.
@@ -136,18 +137,29 @@ object JdbcUpsertSink {
       extraCols: String = ""): String =
     DerbyDialect.ddl(table, schema, keyCols, extraCols)
 
-  private def bind(ps: PreparedStatement, i: Int, dt: DataType, row: Row, field: Int): Unit = {
-    if (row.isNullAt(field)) ps.setObject(i, null)
-    else dt match {
-      case LongType => ps.setLong(i, row.getLong(field))
-      case IntegerType => ps.setInt(i, row.getInt(field))
-      case DoubleType => ps.setDouble(i, row.getDouble(field))
-      case FloatType => ps.setFloat(i, row.getFloat(field))
-      case BooleanType => ps.setBoolean(i, row.getBoolean(field))
-      case StringType => ps.setString(i, row.getString(field))
-      case _ => ps.setObject(i, row.get(field))
+  /** One setter per column of `schema`, binding that column of an
+    * InternalRow to a statement parameter: primitives and strings read
+    * straight off the row, every other type goes through Spark's
+    * converter to the external value JDBC takes (Timestamp, Date,
+    * BigDecimal). The writers read InternalRows (`queryExecution.toRdd`),
+    * so no per-schema Row deserializer is generated and compiled, and no
+    * row is boxed on its way to the database. */
+  private def binders(schema: StructType): Array[(PreparedStatement, Int, InternalRow) => Unit] =
+    schema.fields.zipWithIndex.map { case (f, field) =>
+      val set: (PreparedStatement, Int, InternalRow) => Unit = f.dataType match {
+        case LongType => (ps, i, r) => ps.setLong(i, r.getLong(field))
+        case IntegerType => (ps, i, r) => ps.setInt(i, r.getInt(field))
+        case DoubleType => (ps, i, r) => ps.setDouble(i, r.getDouble(field))
+        case FloatType => (ps, i, r) => ps.setFloat(i, r.getFloat(field))
+        case BooleanType => (ps, i, r) => ps.setBoolean(i, r.getBoolean(field))
+        case StringType => (ps, i, r) => ps.setString(i, r.getUTF8String(field).toString)
+        case dt =>
+          val toScala = CatalystTypeConverters.createToScalaConverter(dt)
+          (ps, i, r) => ps.setObject(i, toScala(r.get(field, dt)))
+      }
+      (ps: PreparedStatement, i: Int, r: InternalRow) =>
+        if (r.isNullAt(field)) ps.setObject(i, null) else set(ps, i, r)
     }
-  }
 
   /** Executor-parallel batched INSERT of every partition into `table`
     * (staging step; table must exist and carry a `graft_part INT` column).
@@ -165,8 +177,9 @@ object JdbcUpsertSink {
         s"VALUES (${colNames.map(_ => "?").mkString(", ")}, ?)"
     val deleteSql = s"DELETE FROM ${cfg.table} WHERE graft_part = ?"
     val (url, batch) = (cfg.url, cfg.batchSize)
-    df.foreachPartition { (rows: Iterator[Row]) =>
+    df.queryExecution.toRdd.foreachPartition { (rows: Iterator[InternalRow]) =>
       val part = org.apache.spark.TaskContext.getPartitionId()
+      val bind = binders(schema)
       val conn = DriverManager.getConnection(url)
       try {
         conn.setAutoCommit(false)
@@ -175,8 +188,8 @@ object JdbcUpsertSink {
         val ps = conn.prepareStatement(insertSql)
         var n = 0
         rows.foreach { r =>
-          schema.fields.zipWithIndex.foreach { case (f, i) => bind(ps, i + 1, f.dataType, r, i) }
-          ps.setInt(schema.fields.length + 1, part)
+          bind.indices.foreach(i => bind(i)(ps, i + 1, r))
+          ps.setInt(bind.length + 1, part)
           ps.addBatch(); n += 1
           if (n % batch == 0) ps.executeBatch()
         }
@@ -303,20 +316,20 @@ object JdbcUpsertSink {
       s"INSERT INTO ${cfg.table} (${colNames.mkString(", ")}) VALUES (${colNames.map(_ => "?").mkString(", ")})"
     val url = cfg.url
     val fieldIdx = schema.fieldNames.zipWithIndex.toMap
-    df.foreachPartition { (rows: Iterator[Row]) =>
+    // UPDATE binds the attrs, then the keys; INSERT binds every column
+    val updFields = (attrs ++ cfg.keyCols).map(fieldIdx)
+    df.queryExecution.toRdd.foreachPartition { (rows: Iterator[InternalRow]) =>
       if (rows.nonEmpty) {
+        val bind = binders(schema)
         val conn = DriverManager.getConnection(url)
         try {
           conn.setAutoCommit(false)
           val upd = conn.prepareStatement(updateSql)
           val ins = conn.prepareStatement(insertSql)
           rows.foreach { r =>
-            attrs.zipWithIndex.foreach { case (a, i) =>
-              bind(upd, i + 1, schema(a).dataType, r, fieldIdx(a)) }
-            cfg.keyCols.zipWithIndex.foreach { case (k, i) =>
-              bind(upd, attrs.size + i + 1, schema(k).dataType, r, fieldIdx(k)) }
+            updFields.zipWithIndex.foreach { case (f, i) => bind(f)(upd, i + 1, r) }
             if (upd.executeUpdate() == 0) {
-              schema.fields.zipWithIndex.foreach { case (f, i) => bind(ins, i + 1, f.dataType, r, i) }
+              bind.indices.foreach(i => bind(i)(ins, i + 1, r))
               ins.executeUpdate()
             }
           }

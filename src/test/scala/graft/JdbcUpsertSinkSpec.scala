@@ -53,6 +53,36 @@ class JdbcUpsertSinkSpec extends AnyFunSuite {
     assert(fetchAll("t2") == Map(1 -> ("one-v2", 1.5), 2 -> ("two", 2.0), 4 -> ("four", 4.0)))
   }
 
+  test("staging binds every supported type from InternalRows, nulls included") {
+    import org.apache.spark.sql.functions._
+    val conn = DriverManager.getConnection(url)
+    try {
+      try conn.createStatement().executeUpdate("DROP TABLE t_types") catch { case _: Exception => () }
+      conn.createStatement().executeUpdate(
+        "CREATE TABLE t_types (k INT PRIMARY KEY, b BIGINT, f REAL, flag BOOLEAN, " +
+          "s VARCHAR(100), ts TIMESTAMP, d DATE, amt DECIMAL(18,6))")
+    } finally conn.close()
+    val batch = spark.range(1, 3).select(col("id").cast("int").as("k"),
+      (col("id") * 10L).as("b"), (col("id") / 4).cast("float").as("f"),
+      (col("id") === 1L).as("flag"),
+      when(col("id") === 1L, lit("one")).as("s"), // NULL for k = 2
+      timestamp_seconds(col("id") * 86400L).as("ts"),
+      date_add(lit("2001-02-03").cast("date"), col("id").cast("int")).as("d"),
+      (col("id") / 8).cast("decimal(18,6)").as("amt"))
+    JdbcUpsertSink.upsertViaStaging(batch, Config(url, "t_types", Seq("k")))
+    val c = DriverManager.getConnection(url)
+    try {
+      val rs = c.createStatement().executeQuery(
+        "SELECT k, b, f, flag, s, CAST(d AS VARCHAR(20)), amt, ts FROM t_types ORDER BY k")
+      val rows = Iterator.continually(rs).takeWhile(_.next()).map(r =>
+        ((1 to 7).map(i => String.valueOf(r.getObject(i))) :+
+          r.getTimestamp(8).getTime.toString).mkString("|")).toList
+      assert(rows == List(
+        "1|10|0.25|true|one|2001-02-04|0.125000|86400000",
+        "2|20|0.5|false|null|2001-02-05|0.250000|172800000"))
+    } finally c.close()
+  }
+
   // ------------------------------------------------------------ dialects
   // The dialect seam (VERDICT r12 missing #1): Derby is the EXECUTED path
   // (everything above); the reference's actual n2kresult target is

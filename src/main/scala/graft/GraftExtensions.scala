@@ -41,9 +41,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // plausible-but-wrong exact decimal — worse than the decimal
     // accumulator it replaces, which never wraps in either mode. Enforce
     // the dependency at analysis: any plan carrying a SplitSum-shaped
-    // aggregate under ANSI-off is rejected (r15 VERDICT "what's wrong"
-    // #1; SplitSumSpec pins both directions). Cost: one conf read per
-    // query — the plan is only traversed when ANSI is actually off.
+    // aggregate (a Sum with a `>> Shift` anywhere in its input, so a
+    // wrapping `when` cannot hide it) under ANSI-off is rejected (r15
+    // VERDICT "what's wrong" #1; SplitSumSpec pins both directions).
+    // Cost: one conf read per query — the plan is only traversed when
+    // ANSI is actually off.
     e.injectCheckRule { session => plan =>
       import org.apache.spark.sql.catalyst.expressions.{Literal, ShiftRight}
       import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
@@ -51,7 +53,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       if (!session.conf.get("spark.sql.ansi.enabled", "true").toBoolean &&
           plan.exists {
             case agg: Aggregate => agg.aggregateExpressions.exists(_.exists {
-              case s: Sum => s.child match {
+              case s: Sum => s.child.exists {
                 case ShiftRight(_, Literal(v, _)) =>
                   v == graft.operators.SplitSum.Shift
                 case _ => false

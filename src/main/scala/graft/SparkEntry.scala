@@ -2,24 +2,26 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
+/** Driver contract — see SURVEY.md §7. */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Relational.q5(spark, "/root/testdata/sf0.001")
 
+  private val gates: Map[String, Gate] = Gate.index(Seq(
+    Relational.gates, Relational2.gates, Relational3.gates, Relational4.gates,
+    Relational5.gates, Relational6.gates, Relational7.gates, Relational8.gates,
+    Relational9.gates, Relational10.gates, Relational11.gates, Relational12.gates,
+    GraphQ.gates, Events.gates, Etl.gates, Etl2.gates, Etl3.gates, Etl4.gates,
+    Text.gates, Text2.gates, Web.gates, DedupQ.gates, Similarity.gates,
+    Similarity2.gates, Modal.gates, Modal2.gates, Modal3.gates, Modal4.gates,
+    N2k.gates).flatten)
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ Relational2.queries ++ Relational3.queries ++ Relational4.queries ++
-      Relational5.queries ++ Relational6.queries ++ Relational7.queries ++ Relational8.queries ++ Relational9.queries ++ Relational10.queries ++ Relational11.queries ++ Relational12.queries ++ GraphQ.queries ++ Events.queries ++
-      Etl.queries ++ Etl2.queries ++ Etl3.queries ++ Etl4.queries ++
-      Text.queries ++ Text2.queries ++ Web.queries ++ DedupQ.queries ++ Similarity.queries ++ Similarity2.queries ++ Modal.queries ++ Modal2.queries ++ Modal3.queries ++ Modal4.queries ++ N2k.queries
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    gates.map { case (k, g) => k -> g.build }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    Relational.oracle ++ Relational2.oracle ++ Relational3.oracle ++ Relational4.oracle ++
-      Relational5.oracle ++ Relational6.oracle ++ Relational7.oracle ++ Relational8.oracle ++ Relational9.oracle ++ Relational10.oracle ++ Relational11.oracle ++ Relational12.oracle ++ GraphQ.oracle ++ Events.oracle ++
-      Etl.oracle ++ Etl2.oracle ++ Etl3.oracle ++ Etl4.oracle ++
-      Text.oracle ++ Text2.oracle ++ Web.oracle ++ DedupQ.oracle ++ Similarity.oracle ++ Similarity2.oracle ++ Modal.oracle ++ Modal2.oracle ++ Modal3.oracle ++ Modal4.oracle ++ N2k.oracle
+    * the same parquet tables. */
+  val oracleSql: Map[String, String] = gates.map { case (k, g) => k -> g.oracleSql }
 }

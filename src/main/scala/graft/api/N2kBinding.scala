@@ -248,7 +248,8 @@ object N2kBinding {
       s"validation failed: ${t.name} $which has $nullKeys null-key rows")
   }
 
-  /** Fused two-import flagship path (the e_store_n2k gate shape): each
+  /** Two-extract two-import summary, the reference implementation the
+    * e_store_n2k gate's `importPairSummaryOnePass` is pinned against: each
     * table's chain — extract₁ → merge₁ → merge₂(extract₂) → summary
     * projection — runs end-to-end from its own pool thread with NO
     * cross-table barrier: language's second merge proceeds while
@@ -287,35 +288,6 @@ object N2kBinding {
         .reduce(_ unionByName _)
         .repartition(1).sortWithinPartitions(col("table_name"), col("nk"))
     } finally pool.shutdownNow()
-  }
-
-  /** Single-job variant of importPairSummary: every per-table chain is a
-    * branch of ONE union plan, materialized by ONE action — the DAG
-    * scheduler overlaps the branches' stages with no driver pool and no
-    * per-table job submission overhead, and every observe() CollectMetrics
-    * fires on the same job. Trade-off vs the pooled path: Catalyst
-    * analyzes/optimizes one ~14× plan single-threaded instead of 14
-    * plans concurrently — and MEASURED (N2kProbe, sf0.1 local[32]) that
-    * loses: 6.9–8.2 s here vs 4.9–5.4 s pooled, because plan
-    * optimization, not stage scheduling, is the bigger driver cost at
-    * this scale. Kept as the measured negative result behind the pooled
-    * default; on a real cluster with long stages the two converge. */
-  def importPairSummaryFused(w1: DataFrame, w2: DataFrame): DataFrame = {
-    val chains = Graph.map { t =>
-      val obs1 = new org.apache.spark.sql.Observation()
-      val obs2 = new org.apache.spark.sql.Observation()
-      val m1 = mergeOf(t, emptyState(t, w1), observedExtract(t, w1, obs1), stamp = 1L)
-      val m2 = mergeOf(t, m1.drop("action"), observedExtract(t, w2, obs2), stamp = 2L)
-      (t, obs1, obs2, summaryOf(t, m2))
-    }
-    val out = chains.map(_._4).reduce(_ unionByName _)
-      .repartition(1).sortWithinPartitions(col("table_name"), col("nk"))
-      .localCheckpoint()
-    chains.foreach { case (t, o1, o2, _) =>
-      requireValidKeys(t, w1, lit(true), o1, "import 1", "null_keys")
-      requireValidKeys(t, w2, lit(true), o2, "import 2", "null_keys")
-    }
-    out
   }
 
   /** r16 optimization — the ONE-PASS two-import summary (guide §1.1
@@ -367,27 +339,6 @@ object N2kBinding {
         .reduce(_ unionByName _)
         .repartition(1).sortWithinPartitions(col("table_name"), col("nk"))
     } finally pool.shutdownNow()
-  }
-
-  /** Single-job variant of importPairSummaryOnePass: the 14 one-pass
-    * aggregations are branches of ONE union plan materialized by ONE
-    * action. With the two-extract+merge chains this lost to the pool
-    * (Catalyst optimizing one ~14× plan single-threaded beat 14
-    * concurrent plannings — see importPairSummaryFused); the one-pass
-    * chains are ~4× smaller plans, so the trade is re-measured here. */
-  def importPairSummaryOnePassFused(span: DataFrame, in1: Column, in2: Column): DataFrame = {
-    val chains = Graph.map { t =>
-      val obs = new org.apache.spark.sql.Observation()
-      (t, obs, onePassSummary(t, span, in1, in2, Some(obs)))
-    }
-    val out = chains.map(_._3).reduce(_ unionByName _)
-      .repartition(1).sortWithinPartitions(col("table_name"), col("nk"))
-      .localCheckpoint()
-    chains.foreach { case (t, o, _) =>
-      requireValidKeys(t, span, in1, o, "import 1", "null_keys_1")
-      requireValidKeys(t, span, in2, o, "import 2", "null_keys_2")
-    }
-    out
   }
 
   /** One table's two-import summary rows from ONE aggregation over the

@@ -1330,55 +1330,29 @@ object DedupQ {
        |  CAST(CAST(CAST(total_tokens - survivor_tokens AS DOUBLE) / CAST(total_tokens AS DOUBLE) AS DECIMAL(18,6)) AS DOUBLE) AS waste_share
        |FROM m""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "d_dup_mass"      -> dDupMass _,
-    "d_cos_hist"      -> dCosHist _,
-    "d_lsh_tune"      -> dLshTune _,
-    "d_cdc_chunks"    -> dCdcChunks _,
-    "d_decontam_sem"  -> dDecontamSem _,
-    "d_source_overlap" -> dSourceOverlap _,
-    "d_substring_overlap" -> dSubstringOverlap _,
-    "d_editdist"      -> dEditdist _,
-    "d_paragraph"     -> dParagraph _,
-    "d_exact"         -> dExact _,
-    "d_minhash_pairs" -> dMinhashPairs _,
-    "d_minhash_est"   -> dMinhashEst _,
-    "d_jaccard"       -> dJaccard _,
-    "d_components"    -> dComponents _,
-    "d_curate"        -> dCurate _,
-    "d_contamination" -> dContamination _,
-    "d_incremental"   -> dIncremental _,
-    "d_containment"   -> dContainment _,
-    "d_simhash"       -> dSimhash _,
-    "d_simhash128"    -> dSimhash128 _,
-    "d_embed_neardup" -> dEmbedNeardup _,
-    "d_semdedup"      -> dSemdedup _,
-    "d_report"        -> dReport _,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "d_dup_mass"      -> dDupMassSql,
-    "d_cos_hist"      -> dCosHistSql,
-    "d_lsh_tune"      -> dLshTuneSql,
-    "d_cdc_chunks"    -> dCdcChunksSql,
-    "d_decontam_sem"  -> dDecontamSemSql,
-    "d_source_overlap" -> dSourceOverlapSql,
-    "d_substring_overlap" -> dSubstringOverlapSql,
-    "d_editdist"      -> dEditdistSql,
-    "d_paragraph"     -> dParagraphSql,
-    "d_exact"         -> dExactSql,
-    "d_minhash_pairs" -> dMinhashPairsSql,
-    "d_minhash_est"   -> dMinhashEstSql,
-    "d_jaccard"       -> dJaccardSql,
-    "d_components"    -> dComponentsSql,
-    "d_curate"        -> dCurateSql,
-    "d_contamination" -> dContaminationSql,
-    "d_incremental"   -> dIncrementalSql,
-    "d_containment"   -> dContainmentSql,
-    "d_simhash"       -> dSimhashSql,
-    "d_simhash128"    -> dSimhash128Sql,
-    "d_embed_neardup" -> dEmbedNeardupSql,
-    "d_semdedup"      -> dSemdedupSql,
-    "d_report"        -> dReportSql,
+  val gates: Seq[Gate] = Seq(
+    Gate("d_dup_mass", dDupMass _, dDupMassSql),
+    Gate("d_cos_hist", dCosHist _, dCosHistSql),
+    Gate("d_lsh_tune", dLshTune _, dLshTuneSql),
+    Gate("d_cdc_chunks", dCdcChunks _, dCdcChunksSql),
+    Gate("d_decontam_sem", dDecontamSem _, dDecontamSemSql),
+    Gate("d_source_overlap", dSourceOverlap _, dSourceOverlapSql),
+    Gate("d_substring_overlap", dSubstringOverlap _, dSubstringOverlapSql),
+    Gate("d_editdist", dEditdist _, dEditdistSql),
+    Gate("d_paragraph", dParagraph _, dParagraphSql),
+    Gate("d_exact", dExact _, dExactSql),
+    Gate("d_minhash_pairs", dMinhashPairs _, dMinhashPairsSql),
+    Gate("d_minhash_est", dMinhashEst _, dMinhashEstSql),
+    Gate("d_jaccard", dJaccard _, dJaccardSql),
+    Gate("d_components", dComponents _, dComponentsSql),
+    Gate("d_curate", dCurate _, dCurateSql),
+    Gate("d_contamination", dContamination _, dContaminationSql),
+    Gate("d_incremental", dIncremental _, dIncrementalSql),
+    Gate("d_containment", dContainment _, dContainmentSql),
+    Gate("d_simhash", dSimhash _, dSimhashSql),
+    Gate("d_simhash128", dSimhash128 _, dSimhash128Sql),
+    Gate("d_embed_neardup", dEmbedNeardup _, dEmbedNeardupSql),
+    Gate("d_semdedup", dSemdedup _, dSemdedupSql),
+    Gate("d_report", dReport _, dReportSql),
   )
 }

@@ -752,63 +752,33 @@ object Etl {
       |FROM st LEFT JOIN arrivals a ON a.sp_key = st.sp_key
       |ORDER BY st.sp_key""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "e_inferred_dim"  -> eInferredDim _,
-    "e_view_delta"    -> eViewDelta _,
-    "e_view_delta_del" -> eViewDeltaDel _,
-    "e_skew_report"   -> eSkewReport _,
-    "e_anomaly"       -> eAnomaly _,
-    "e_partition_overwrite" -> ePartitionOverwrite _,
-    "e_gdpr_purge"    -> eGdprPurge _,
-    "e_schema_evolve" -> eSchemaEvolve _,
-    "e_profile"       -> eProfile _,
-    "e_agg_refresh"   -> eAggRefresh _,
-    "e_salted_join"   -> eSaltedJoin _,
-    "e_cdc_apply"     -> eCdcApply _,
-    "e_stable_id"     -> eStableId _,
-    "e_stable_id_sha" -> eStableIdSha _,
-    "e_validate"      -> eValidate _,
-    "e_check_unique"  -> eCheckUnique _,
-    "e_check_fk"      -> eCheckFk _,
-    "e_dim_normalize" -> eDimNormalize _,
-    "e_upsert_merge"  -> eUpsertMerge _,
-    "e_despawn"       -> eDespawn _,
-    "e_store_stamps"  -> eStoreStamps _,
-    "e_scd2"          -> eScd2 _,
-    "e_scd2_asof"     -> eScd2Asof _,
-    "e_bitemporal"    -> eBitemporal _,
-    "e_k_anon"        -> eKAnon _,
-    "e_link_diff"     -> eLinkDiff _,
-    "e_import_stamp"  -> eImportStamp _,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "e_inferred_dim"  -> eInferredDimSql,
-    "e_view_delta"    -> eViewDeltaSql,
-    "e_view_delta_del" -> eViewDeltaDelSql,
-    "e_skew_report"   -> eSkewReportSql,
-    "e_anomaly"       -> eAnomalySql,
-    "e_partition_overwrite" -> ePartitionOverwriteSql,
-    "e_gdpr_purge"    -> eGdprPurgeSql,
-    "e_schema_evolve" -> eSchemaEvolveSql,
-    "e_profile"       -> eProfileSql,
-    "e_agg_refresh"   -> eAggRefreshSql,
-    "e_salted_join"   -> eSaltedJoinSql,
-    "e_cdc_apply"     -> eCdcApplySql,
-    "e_stable_id"     -> eStableIdSql,
-    "e_stable_id_sha" -> eStableIdShaSql,
-    "e_validate"      -> eValidateSql,
-    "e_check_unique"  -> eCheckUniqueSql,
-    "e_check_fk"      -> eCheckFkSql,
-    "e_dim_normalize" -> eDimNormalizeSql,
-    "e_upsert_merge"  -> eUpsertMergeSql,
-    "e_despawn"       -> eDespawnSql,
-    "e_store_stamps"  -> eStoreStampsSql,
-    "e_scd2"          -> eScd2Sql,
-    "e_scd2_asof"     -> eScd2AsofSql,
-    "e_bitemporal"    -> eBitemporalSql,
-    "e_k_anon"        -> eKAnonSql,
-    "e_link_diff"     -> eLinkDiffSql,
-    "e_import_stamp"  -> eImportStampSql,
+  val gates: Seq[Gate] = Seq(
+    Gate("e_inferred_dim", eInferredDim _, eInferredDimSql),
+    Gate("e_view_delta", eViewDelta _, eViewDeltaSql),
+    Gate("e_view_delta_del", eViewDeltaDel _, eViewDeltaDelSql),
+    Gate("e_skew_report", eSkewReport _, eSkewReportSql),
+    Gate("e_anomaly", eAnomaly _, eAnomalySql),
+    Gate("e_partition_overwrite", ePartitionOverwrite _, ePartitionOverwriteSql),
+    Gate("e_gdpr_purge", eGdprPurge _, eGdprPurgeSql),
+    Gate("e_schema_evolve", eSchemaEvolve _, eSchemaEvolveSql),
+    Gate("e_profile", eProfile _, eProfileSql),
+    Gate("e_agg_refresh", eAggRefresh _, eAggRefreshSql),
+    Gate("e_salted_join", eSaltedJoin _, eSaltedJoinSql),
+    Gate("e_cdc_apply", eCdcApply _, eCdcApplySql),
+    Gate("e_stable_id", eStableId _, eStableIdSql),
+    Gate("e_stable_id_sha", eStableIdSha _, eStableIdShaSql),
+    Gate("e_validate", eValidate _, eValidateSql),
+    Gate("e_check_unique", eCheckUnique _, eCheckUniqueSql),
+    Gate("e_check_fk", eCheckFk _, eCheckFkSql),
+    Gate("e_dim_normalize", eDimNormalize _, eDimNormalizeSql),
+    Gate("e_upsert_merge", eUpsertMerge _, eUpsertMergeSql),
+    Gate("e_despawn", eDespawn _, eDespawnSql),
+    Gate("e_store_stamps", eStoreStamps _, eStoreStampsSql),
+    Gate("e_scd2", eScd2 _, eScd2Sql),
+    Gate("e_scd2_asof", eScd2Asof _, eScd2AsofSql),
+    Gate("e_bitemporal", eBitemporal _, eBitemporalSql),
+    Gate("e_k_anon", eKAnon _, eKAnonSql),
+    Gate("e_link_diff", eLinkDiff _, eLinkDiffSql),
+    Gate("e_import_stamp", eImportStamp _, eImportStampSql),
   )
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.Tables
+import graft.Ckpt._
 import graft.operators.Quarantine
 
 /** ETL surface, continued (SURVEY.md §2B): row-level quarantine and
@@ -267,7 +268,7 @@ object Etl2 {
     // (flag, x, count) histogram and computes BOTH medians from it with
     // percentile's frequency argument — two fact scans become one plus a
     // domain-bounded histogram (value-identical buffers, so bit-identical
-    // medians; OptProbe IDENTICAL=true, 1.96 -> 1.68 s at sf0.1). The
+    // medians, 1.96 -> 1.68 s at sf0.1). The
     // approx toggle keeps the per-row passes: percentile_approx's GK
     // sketch has no frequency form.
     val mad = if (approx) {
@@ -278,7 +279,7 @@ object Etl2 {
         .agg(expr(s"$pct(abs(x - med), 0.5D$acc)").as("mad"), first(col("med")).as("med"))
     } else {
       val hist = li.groupBy(col("l_returnflag"), col("x"))
-        .agg(count(lit(1)).as("cnt")).localCheckpoint()
+        .agg(count(lit(1)).as("cnt")).cpEager
       val med = hist.groupBy(col("l_returnflag"))
         .agg(expr("percentile(x, 0.5D, cnt)").as("med"))
       hist.join(broadcast(med), "l_returnflag")
@@ -629,33 +630,18 @@ object Etl2 {
       |FROM b LEFT JOIN best ON best.b_id = b.b_id
       |ORDER BY b.b_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "e_record_linkage" -> eRecordLinkage _,
-    "e_rate_convert" -> eRateConvert _,
-    "e_survivorship" -> eSurvivorship _,
-    "e_gap_audit"    -> eGapAudit _,
-    "e_coldiff"      -> eColdiff _,
-    "e_mad_outliers" -> eMadOutliers _,
-    "e_quarantine"   -> eQuarantine _,
-    "e_drift"        -> eDrift _,
-    "e_l_diversity"  -> eLDiversity _,
-    "e_expectations" -> eExpectations _,
-    "e_pseudonymize" -> ePseudonymize _,
-    "e_sanitize"     -> eSanitize _,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "e_record_linkage" -> eRecordLinkageSql,
-    "e_rate_convert" -> eRateConvertSql,
-    "e_survivorship" -> eSurvivorshipSql,
-    "e_gap_audit"    -> eGapAuditSql,
-    "e_coldiff"      -> eColdiffSql,
-    "e_mad_outliers" -> eMadOutliersSql,
-    "e_quarantine"   -> eQuarantineSql,
-    "e_drift"        -> eDriftSql,
-    "e_l_diversity"  -> eLDiversitySql,
-    "e_expectations" -> eExpectationsSql,
-    "e_pseudonymize" -> ePseudonymizeSql,
-    "e_sanitize"     -> eSanitizeSql,
+  val gates: Seq[Gate] = Seq(
+    Gate("e_record_linkage", eRecordLinkage _, eRecordLinkageSql),
+    Gate("e_rate_convert", eRateConvert _, eRateConvertSql),
+    Gate("e_survivorship", eSurvivorship _, eSurvivorshipSql),
+    Gate("e_gap_audit", eGapAudit _, eGapAuditSql),
+    Gate("e_coldiff", eColdiff _, eColdiffSql),
+    Gate("e_mad_outliers", eMadOutliers _, eMadOutliersSql),
+    Gate("e_quarantine", eQuarantine _, eQuarantineSql),
+    Gate("e_drift", eDrift _, eDriftSql),
+    Gate("e_l_diversity", eLDiversity _, eLDiversitySql),
+    Gate("e_expectations", eExpectations _, eExpectationsSql),
+    Gate("e_pseudonymize", ePseudonymize _, ePseudonymizeSql),
+    Gate("e_sanitize", eSanitize _, eSanitizeSql),
   )
 }

@@ -636,20 +636,6 @@ object Etl3 {
        |  UNION ALL SELECT * FROM un UNION ALL SELECT * FROM fl)
        |ORDER BY extract""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "e_hwm_extract"    -> eHwmExtract _,
-    "e_hash_chain"     -> eHashChain _,
-    "e_key_infer"      -> eKeyInfer _,
-    "e_hash_ring"      -> eHashRing _,
-    "e_json_validate"  -> eJsonValidate _,
-    "e_table_checksum" -> eTableChecksum _,
-    "e_type_infer"     -> eTypeInfer _,
-    "e_mask"           -> eMask _,
-    "io_mor_roundtrip" -> ioMorRoundtrip _,
-    "e_scd2_compact"   -> eScd2Compact _,
-    "e_dq_score"       -> eDqScore _,
-  )
-
   // ------------------------------------------------------------ e_dq_score
 
   /** e_dq_score: the composite DATA-QUALITY SCORECARD — the one-screen
@@ -748,17 +734,17 @@ object Etl3 {
        |FROM t ORDER BY table_name""".stripMargin
   }
 
-  val oracle: Map[String, String] = Map(
-    "e_hwm_extract"    -> eHwmExtractSql,
-    "e_hash_chain"     -> eHashChainSql,
-    "e_key_infer"      -> eKeyInferSql,
-    "e_hash_ring"      -> eHashRingSql,
-    "e_json_validate"  -> eJsonValidateSql,
-    "e_table_checksum" -> eTableChecksumSql,
-    "e_type_infer"     -> eTypeInferSql,
-    "e_mask"           -> eMaskSql,
-    "io_mor_roundtrip" -> ioMorRoundtripSql,
-    "e_scd2_compact"   -> eScd2CompactSql,
-    "e_dq_score"       -> eDqScoreSql,
+  val gates: Seq[Gate] = Seq(
+    Gate("e_hwm_extract", eHwmExtract _, eHwmExtractSql),
+    Gate("e_hash_chain", eHashChain _, eHashChainSql),
+    Gate("e_key_infer", eKeyInfer _, eKeyInferSql),
+    Gate("e_hash_ring", eHashRing _, eHashRingSql),
+    Gate("e_json_validate", eJsonValidate _, eJsonValidateSql),
+    Gate("e_table_checksum", eTableChecksum _, eTableChecksumSql),
+    Gate("e_type_infer", eTypeInfer _, eTypeInferSql),
+    Gate("e_mask", eMask _, eMaskSql),
+    Gate("io_mor_roundtrip", ioMorRoundtrip _, ioMorRoundtripSql),
+    Gate("e_scd2_compact", eScd2Compact _, eScd2CompactSql),
+    Gate("e_dq_score", eDqScore _, eDqScoreSql),
   )
 }

@@ -257,17 +257,10 @@ object Etl4 {
        |FROM p ORDER BY k""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "e_reconcile"       -> eReconcile _,
-    "e_late_arrivals"   -> eLateArrivals _,
-    "e_interval_audit"  -> eIntervalAudit _,
-    "e_payload_vectors" -> ePayloadVectors _,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "e_reconcile"       -> eReconcileSql,
-    "e_late_arrivals"   -> eLateArrivalsSql,
-    "e_interval_audit"  -> eIntervalAuditSql,
-    "e_payload_vectors" -> ePayloadVectorsSql,
+  val gates: Seq[Gate] = Seq(
+    Gate("e_reconcile", eReconcile _, eReconcileSql),
+    Gate("e_late_arrivals", eLateArrivals _, eLateArrivalsSql),
+    Gate("e_interval_audit", eIntervalAudit _, eIntervalAuditSql),
+    Gate("e_payload_vectors", ePayloadVectors _, ePayloadVectorsSql),
   )
 }

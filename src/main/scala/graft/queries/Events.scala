@@ -943,51 +943,27 @@ object Events {
        |WHERE nn.n >= 3
        |ORDER BY o_orderpriority""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_holt_backtest" -> qHoltBacktest _,
-    "q_holt"          -> qHolt _,
-    "q_sketch_setops" -> qSketchSetops _,
-    "q_decay"        -> qDecay _,
-    "q_wape"         -> qWape _,
-    "q_survival"     -> qSurvival _,
-    "q_islands"      -> qIslands _,
-    "q_ewma"         -> qEwma _,
-    "q_kmv_distinct" -> qKmvDistinct _,
-    "q_range_join"   -> qRangeJoin _,
-    "q_cohort_retention" -> qCohortRetention _,
-    "q_seasonal"      -> qSeasonal _,
-    "q_transitions"   -> qTransitions _,
-    "q_dau_mau"       -> qDauMau _,
-    "q_ltv"           -> qLtv _,
-    "q_semi_additive" -> qSemiAdditive _,
-    "q_gapfill"      -> qGapfill _,
-    "q_asof_join"     -> qAsofJoin _,
-    "q_events_hourly" -> qEventsHourly _,
-    "q_sessionize"    -> qSessionize _,
-    "q_events_json"   -> qEventsJson _,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q_holt_backtest" -> qHoltBacktestSql,
-    "q_holt"          -> qHoltSql,
-    "q_sketch_setops" -> qSketchSetopsSql,
-    "q_decay"        -> qDecaySql,
-    "q_wape"         -> qWapeSql,
-    "q_survival"     -> qSurvivalSql,
-    "q_islands"      -> qIslandsSql,
-    "q_ewma"         -> qEwmaSql,
-    "q_kmv_distinct" -> qKmvDistinctSql,
-    "q_range_join"   -> qRangeJoinSql,
-    "q_cohort_retention" -> qCohortRetentionSql,
-    "q_seasonal"      -> qSeasonalSql,
-    "q_transitions"   -> qTransitionsSql,
-    "q_dau_mau"       -> qDauMauSql,
-    "q_ltv"           -> qLtvSql,
-    "q_semi_additive" -> qSemiAdditiveSql,
-    "q_gapfill"      -> qGapfillSql,
-    "q_asof_join"     -> qAsofJoinSql,
-    "q_events_hourly" -> qEventsHourlySql,
-    "q_sessionize"    -> qSessionizeSql,
-    "q_events_json"   -> qEventsJsonSql,
+  val gates: Seq[Gate] = Seq(
+    Gate("q_holt_backtest", qHoltBacktest _, qHoltBacktestSql),
+    Gate("q_holt", qHolt _, qHoltSql),
+    Gate("q_sketch_setops", qSketchSetops _, qSketchSetopsSql),
+    Gate("q_decay", qDecay _, qDecaySql),
+    Gate("q_wape", qWape _, qWapeSql),
+    Gate("q_survival", qSurvival _, qSurvivalSql),
+    Gate("q_islands", qIslands _, qIslandsSql),
+    Gate("q_ewma", qEwma _, qEwmaSql),
+    Gate("q_kmv_distinct", qKmvDistinct _, qKmvDistinctSql),
+    Gate("q_range_join", qRangeJoin _, qRangeJoinSql),
+    Gate("q_cohort_retention", qCohortRetention _, qCohortRetentionSql),
+    Gate("q_seasonal", qSeasonal _, qSeasonalSql),
+    Gate("q_transitions", qTransitions _, qTransitionsSql),
+    Gate("q_dau_mau", qDauMau _, qDauMauSql),
+    Gate("q_ltv", qLtv _, qLtvSql),
+    Gate("q_semi_additive", qSemiAdditive _, qSemiAdditiveSql),
+    Gate("q_gapfill", qGapfill _, qGapfillSql),
+    Gate("q_asof_join", qAsofJoin _, qAsofJoinSql),
+    Gate("q_events_hourly", qEventsHourly _, qEventsHourlySql),
+    Gate("q_sessionize", qSessionize _, qSessionizeSql),
+    Gate("q_events_json", qEventsJson _, qEventsJsonSql),
   )
 }

@@ -573,27 +573,15 @@ object GraphQ {
        |    CAST(n * sxx - sx * sx AS DOUBLE) AS assortativity
        |FROM a""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_pagerank"       -> qPagerank _,
-    "q_triangles"      -> qTriangles _,
-    "q_basket"         -> qBasket _,
-    "q_label_prop"     -> qLabelProp _,
-    "q_link_pred"      -> qLinkPred _,
-    "q_kcore"          -> qKcore _,
-    "q_bfs"            -> qBfs _,
-    "q_local_cc"       -> qLocalCc _,
-    "q_assortativity"  -> qAssortativity _,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q_pagerank"       -> qPagerankSql,
-    "q_triangles"      -> qTrianglesSql,
-    "q_basket"         -> qBasketSql,
-    "q_label_prop"     -> qLabelPropSql,
-    "q_link_pred"      -> qLinkPredSql,
-    "q_kcore"          -> qKcoreSql,
-    "q_bfs"            -> qBfsSql,
-    "q_local_cc"       -> qLocalCcSql,
-    "q_assortativity"  -> qAssortativitySql,
+  val gates: Seq[Gate] = Seq(
+    Gate("q_pagerank", qPagerank _, qPagerankSql),
+    Gate("q_triangles", qTriangles _, qTrianglesSql),
+    Gate("q_basket", qBasket _, qBasketSql),
+    Gate("q_label_prop", qLabelProp _, qLabelPropSql),
+    Gate("q_link_pred", qLinkPred _, qLinkPredSql),
+    Gate("q_kcore", qKcore _, qKcoreSql),
+    Gate("q_bfs", qBfs _, qBfsSql),
+    Gate("q_local_cc", qLocalCc _, qLocalCcSql),
+    Gate("q_assortativity", qAssortativity _, qAssortativitySql),
   )
 }

@@ -809,53 +809,28 @@ object Modal {
       |SELECT a_id, b_id, hamming FROM (SELECT * FROM star UNION ALL SELECT * FROM crossp)
       |ORDER BY a_id, b_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "m_phash_neardup"   -> mPhashNeardup _,
-    "m_resize_px"       -> mResizePx _,
-    "m_scene_cut"       -> mSceneCut _,
-    "m_keyframe"        -> mKeyframe _,
-    "m_shard"           -> mShard _,
-    "m_audio"           -> mAudio _,
-    "m_audio_fp"        -> mAudioFp _,
-    "m_vad"             -> mVad _,
-    "st_sliding"        -> stSliding _,
-    "st_topk"           -> stTopk _,
-    "st_enrich"         -> stEnrich _,
-    "st_anomaly"        -> stAnomaly _,
-    "st_dedup"          -> stDedup _,
-    "st_interval_join"  -> stIntervalJoin _,
-    "st_outer_join"     -> stOuterJoin _,
-    "st_session_window" -> stSessionWindow _,
-    "m_blob_stats"   -> mBlobStats _,
-    "m_frame_sample" -> mFrameSample _,
-    "m_features_knn" -> mFeaturesKnn _,
-    "m_resize" -> mResize _,
-    "st_hourly"      -> stHourly _,
-    "st_stateful"    -> stStateful _,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "m_phash_neardup"   -> mPhashNeardupSql,
-    "m_resize_px"       -> mResizePxSql,
-    "m_scene_cut"       -> mSceneCutSql,
-    "m_keyframe"        -> mKeyframeSql,
-    "m_shard"           -> mShardSql,
-    "m_audio"           -> mAudioSql,
-    "m_audio_fp"        -> mAudioFpSql,
-    "m_vad"             -> mVadSql,
-    "st_sliding"        -> stSlidingSql,
-    "st_topk"           -> stTopkSql,
-    "st_enrich"         -> stEnrichSql,
-    "st_anomaly"        -> stAnomalySql,
-    "st_dedup"          -> stDedupSql,
-    "st_interval_join"  -> stIntervalJoinSql,
-    "st_outer_join"     -> stOuterJoinSql,
-    "st_session_window" -> stSessionWindowSql,
-    "m_blob_stats"   -> mBlobStatsSql,
-    "m_frame_sample" -> mFrameSampleSql,
-    "m_features_knn" -> mFeaturesKnnSql,
-    "m_resize" -> mResizeSql,
-    "st_hourly"      -> stHourlySql,
-    "st_stateful"    -> Events.qSessionizeSql,
+  val gates: Seq[Gate] = Seq(
+    Gate("m_phash_neardup", mPhashNeardup _, mPhashNeardupSql),
+    Gate("m_resize_px", mResizePx _, mResizePxSql),
+    Gate("m_scene_cut", mSceneCut _, mSceneCutSql),
+    Gate("m_keyframe", mKeyframe _, mKeyframeSql),
+    Gate("m_shard", mShard _, mShardSql),
+    Gate("m_audio", mAudio _, mAudioSql),
+    Gate("m_audio_fp", mAudioFp _, mAudioFpSql),
+    Gate("m_vad", mVad _, mVadSql),
+    Gate("st_sliding", stSliding _, stSlidingSql),
+    Gate("st_topk", stTopk _, stTopkSql),
+    Gate("st_enrich", stEnrich _, stEnrichSql),
+    Gate("st_anomaly", stAnomaly _, stAnomalySql),
+    Gate("st_dedup", stDedup _, stDedupSql),
+    Gate("st_interval_join", stIntervalJoin _, stIntervalJoinSql),
+    Gate("st_outer_join", stOuterJoin _, stOuterJoinSql),
+    Gate("st_session_window", stSessionWindow _, stSessionWindowSql),
+    Gate("m_blob_stats", mBlobStats _, mBlobStatsSql),
+    Gate("m_frame_sample", mFrameSample _, mFrameSampleSql),
+    Gate("m_features_knn", mFeaturesKnn _, mFeaturesKnnSql),
+    Gate("m_resize", mResize _, mResizeSql),
+    Gate("st_hourly", stHourly _, stHourlySql),
+    Gate("st_stateful", stStateful _, Events.qSessionizeSql),
   )
 }

@@ -239,15 +239,9 @@ object Modal2 {
       |  CAST(abs_l AS DOUBLE) / CAST(greatest(abs_r, 1) AS DOUBLE) AS balance
       |FROM agg ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "m_letterbox" -> mLetterbox _,
-    "m_rgb_stats" -> mRgbStats _,
-    "m_stereo"    -> mStereo _,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "m_letterbox" -> mLetterboxSql,
-    "m_rgb_stats" -> mRgbStatsSql,
-    "m_stereo"    -> mStereoSql,
+  val gates: Seq[Gate] = Seq(
+    Gate("m_letterbox", mLetterbox _, mLetterboxSql),
+    Gate("m_rgb_stats", mRgbStats _, mRgbStatsSql),
+    Gate("m_stereo", mStereo _, mStereoSql),
   )
 }

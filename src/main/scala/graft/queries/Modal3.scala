@@ -700,29 +700,16 @@ object Modal3 {
        |ORDER BY event_type""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "st_holt"          -> stHolt _,
-    "m_subtitle_align" -> mSubtitleAlign _,
-    "m_clipping"     -> mClipping _,
-    "m_codec_matrix" -> mCodecMatrix _,
-    "m_srt_parse"    -> mSrtParse _,
-    "m_png_meta"   -> mPngMeta _,
-    "m_hist_eq"    -> mHistEq _,
-    "m_gif_frames" -> mGifFrames _,
-    "m_patchify"   -> mPatchify _,
-    "st_cep"       -> stCep _,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "m_png_meta"   -> mPngMetaSql,
-    "m_hist_eq"    -> mHistEqSql,
-    "m_gif_frames" -> mGifFramesSql,
-    "m_patchify"   -> mPatchifySql,
-    "m_codec_matrix" -> mCodecMatrixSql,
-    "m_srt_parse"    -> mSrtParseSql,
-    "m_clipping"     -> mClippingSql,
-    "st_cep"         -> stCepSql,
-    "m_subtitle_align" -> mSubtitleAlignSql,
-    "st_holt"        -> stHoltSql,
+  val gates: Seq[Gate] = Seq(
+    Gate("st_holt", stHolt _, stHoltSql),
+    Gate("m_subtitle_align", mSubtitleAlign _, mSubtitleAlignSql),
+    Gate("m_clipping", mClipping _, mClippingSql),
+    Gate("m_codec_matrix", mCodecMatrix _, mCodecMatrixSql),
+    Gate("m_srt_parse", mSrtParse _, mSrtParseSql),
+    Gate("m_png_meta", mPngMeta _, mPngMetaSql),
+    Gate("m_hist_eq", mHistEq _, mHistEqSql),
+    Gate("m_gif_frames", mGifFrames _, mGifFramesSql),
+    Gate("m_patchify", mPatchify _, mPatchifySql),
+    Gate("st_cep", stCep _, stCepSql),
   )
 }

@@ -442,23 +442,13 @@ object Modal4 {
       |  CAST(30000 + (doc_id % 7) * 1000 AS BIGINT) AS len_ms
       |FROM documents WHERE doc_id % 4 = 0 ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "m_aspect_bucket" -> mAspectBucket _,
-    "m_wav_meta"      -> mWavMeta _,
-    "m_jpeg_meta"     -> mJpegMeta _,
-    "m_exif_meta"     -> mExifMeta _,
-    "m_id3_meta"      -> mId3Meta _,
-    "st_bus_hourly"   -> stBusHourly _,
-    "st_quantile"     -> stQuantile _,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "m_aspect_bucket" -> mAspectBucketSql,
-    "m_wav_meta"      -> mWavMetaSql,
-    "m_jpeg_meta"     -> mJpegMetaSql,
-    "m_exif_meta"     -> mExifMetaSql,
-    "m_id3_meta"      -> mId3MetaSql,
-    "st_bus_hourly"   -> stBusHourlySql,
-    "st_quantile"     -> stQuantileSql,
+  val gates: Seq[Gate] = Seq(
+    Gate("m_aspect_bucket", mAspectBucket _, mAspectBucketSql),
+    Gate("m_wav_meta", mWavMeta _, mWavMetaSql),
+    Gate("m_jpeg_meta", mJpegMeta _, mJpegMetaSql),
+    Gate("m_exif_meta", mExifMeta _, mExifMetaSql),
+    Gate("m_id3_meta", mId3Meta _, mId3MetaSql),
+    Gate("st_bus_hourly", stBusHourly _, stBusHourlySql),
+    Gate("st_quantile", stQuantile _, stQuantileSql),
   )
 }

@@ -258,15 +258,9 @@ object N2k {
        |ORDER BY sg_brand, ship_yr""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "e_store_n2k"        -> eStoreN2k _,
-    "e_fk_orphans"       -> eFkOrphans _,
-    "e_analysis_version" -> eAnalysisVersion _,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "e_store_n2k"        -> eStoreN2kSql,
-    "e_fk_orphans"       -> eFkOrphansSql,
-    "e_analysis_version" -> eAnalysisVersionSql,
+  val gates: Seq[Gate] = Seq(
+    Gate("e_store_n2k", eStoreN2k _, eStoreN2kSql),
+    Gate("e_fk_orphans", eFkOrphans _, eFkOrphansSql),
+    Gate("e_analysis_version", eAnalysisVersion _, eAnalysisVersionSql),
   )
 }

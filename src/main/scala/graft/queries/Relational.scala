@@ -343,37 +343,20 @@ object Relational {
       |  TRUE AS parts_est_ok, TRUE AS supps_est_ok
       |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_pricing_summary"   -> q1 _,
-    "q3_shipping_priority" -> q3 _,
-    "q5_local_supplier"    -> q5 _,
-    "q6_forecast_revenue"  -> q6 _,
-    "q10_returned_items"   -> q10 _,
-    "q18_large_orders"     -> q18 _,
-    "q_window_running"     -> qWindowRunning _,
-    "q_topn_per_group"     -> qTopnPerGroup _,
-    "q_pivot"              -> qPivot _,
-    "q_rollup"             -> qRollup _,
-    "q_setops"             -> qSetops _,
-    "q_exists_anti"        -> qExistsAnti _,
-    "q_distinct_agg"       -> qDistinctAgg _,
-    "q_approx_distinct"    -> qApproxDistinct _,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q1_pricing_summary"   -> q1Sql,
-    "q3_shipping_priority" -> q3Sql,
-    "q5_local_supplier"    -> q5Sql,
-    "q6_forecast_revenue"  -> q6Sql,
-    "q10_returned_items"   -> q10Sql,
-    "q18_large_orders"     -> q18Sql,
-    "q_window_running"     -> qWindowRunningSql,
-    "q_topn_per_group"     -> qTopnPerGroupSql,
-    "q_pivot"              -> qPivotSql,
-    "q_rollup"             -> qRollupSql,
-    "q_setops"             -> qSetopsSql,
-    "q_exists_anti"        -> qExistsAntiSql,
-    "q_distinct_agg"       -> qDistinctAggSql,
-    "q_approx_distinct"    -> qApproxDistinctSql,
+  val gates: Seq[Gate] = Seq(
+    Gate("q1_pricing_summary", q1 _, q1Sql),
+    Gate("q3_shipping_priority", q3 _, q3Sql),
+    Gate("q5_local_supplier", q5 _, q5Sql),
+    Gate("q6_forecast_revenue", q6 _, q6Sql),
+    Gate("q10_returned_items", q10 _, q10Sql),
+    Gate("q18_large_orders", q18 _, q18Sql),
+    Gate("q_window_running", qWindowRunning _, qWindowRunningSql),
+    Gate("q_topn_per_group", qTopnPerGroup _, qTopnPerGroupSql),
+    Gate("q_pivot", qPivot _, qPivotSql),
+    Gate("q_rollup", qRollup _, qRollupSql),
+    Gate("q_setops", qSetops _, qSetopsSql),
+    Gate("q_exists_anti", qExistsAnti _, qExistsAntiSql),
+    Gate("q_distinct_agg", qDistinctAgg _, qDistinctAggSql),
+    Gate("q_approx_distinct", qApproxDistinct _, qApproxDistinctSql),
   )
 }

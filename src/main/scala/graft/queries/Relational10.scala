@@ -39,8 +39,9 @@ object Relational10 {
     * deterministic, and an x6 pin would INTRODUCE the only cross-engine
     * rounding boundary — the r13 driver hash-fail hit exactly that class
     * while the same gate passed the local oracle bitwise at two scale
-    * factors; tools/KsProbe.scala dumps the raw bits per row so any
-    * future divergence names its column instead of failing a hash).
+    * factors; ExperimentBitsProbeSpec compares the raw bits per row with a
+    * plain-JVM recomputation so any future divergence names its column
+    * instead of failing a hash).
     *
     * Scale shape (the VERDICT r12 banded-rank rewrite): one (type, value)
     * count (map-side partial), then the two ECDFs are DISTRIBUTED prefix
@@ -663,8 +664,8 @@ object Relational10 {
 
   /** Slope scale S: S > calendar-span² for key injectivity and
     * |slope|max·S < 2⁶³ for the BIGINT key — ONE constant interpolated
-    * into the Spark key expression, the DuckDB oracle, and TheilProbe so
-    * the knob cannot drift between them. */
+    * into the Spark key expression and the DuckDB oracle so the knob
+    * cannot drift between them. */
   val TheilSenScale = 100000000L
 
   /** The slope core over any (day DATE, cents BIGINT) daily frame —
@@ -981,31 +982,17 @@ object Relational10 {
       |  CAST(top10_m AS DOUBLE) / CAST(total_m AS DOUBLE) AS top10_share
       |FROM top, tot""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_topn_share"  -> qTopnShare _,
-    "q_power"       -> qPower _,
-    "q_otif"        -> qOtif _,
-    "q_ks_test"     -> qKsTest _,
-    "q_brunner_munzel" -> qBrunnerMunzel _,
-    "q_cliff_delta" -> qCliffDelta _,
-    "q_runs_test"   -> qRunsTest _,
-    "q_cramers_v"   -> qCramersV _,
-    "q_mk_trend"    -> qMkTrend _,
-    "q_theil_sen"   -> qTheilSen _,
-    "q_changepoint" -> qChangepoint _,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q_topn_share"  -> qTopnShareSql,
-    "q_power"       -> qPowerSql,
-    "q_otif"        -> qOtifSql,
-    "q_ks_test"     -> qKsTestSql,
-    "q_brunner_munzel" -> qBrunnerMunzelSql,
-    "q_cliff_delta" -> qCliffDeltaSql,
-    "q_runs_test"   -> qRunsTestSql,
-    "q_cramers_v"   -> qCramersVSql,
-    "q_mk_trend"    -> qMkTrendSql,
-    "q_theil_sen"   -> qTheilSenSql,
-    "q_changepoint" -> qChangepointSql,
+  val gates: Seq[Gate] = Seq(
+    Gate("q_topn_share", qTopnShare _, qTopnShareSql),
+    Gate("q_power", qPower _, qPowerSql),
+    Gate("q_otif", qOtif _, qOtifSql),
+    Gate("q_ks_test", qKsTest _, qKsTestSql),
+    Gate("q_brunner_munzel", qBrunnerMunzel _, qBrunnerMunzelSql),
+    Gate("q_cliff_delta", qCliffDelta _, qCliffDeltaSql),
+    Gate("q_runs_test", qRunsTest _, qRunsTestSql),
+    Gate("q_cramers_v", qCramersV _, qCramersVSql),
+    Gate("q_mk_trend", qMkTrend _, qMkTrendSql),
+    Gate("q_theil_sen", qTheilSen _, qTheilSenSql),
+    Gate("q_changepoint", qChangepoint _, qChangepointSql),
   )
 }

@@ -964,25 +964,14 @@ object Relational11 {
       |  COALESCE(pr.rnk <= im.i_max, FALSE) AS rejected
       |FROM pr CROSS JOIN mm CROSS JOIN im ORDER BY pr.event_type""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_kruskal_wallis" -> qKruskalWallis _,
-    "q_kendall_tau"    -> qKendallTau _,
-    "q_brown_forsythe" -> qBrownForsythe _,
-    "q_anova"          -> qAnova _,
-    "q_perm_test"      -> qPermTest _,
-    "q_cuped"          -> qCuped _,
-    "q_auc"            -> qAuc _,
-    "q_bh_fdr"         -> qBhFdr _,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q_kruskal_wallis" -> qKruskalWallisSql,
-    "q_kendall_tau"    -> qKendallTauSql,
-    "q_brown_forsythe" -> qBrownForsytheSql,
-    "q_anova"          -> qAnovaSql,
-    "q_perm_test"      -> qPermTestSql,
-    "q_cuped"          -> qCupedSql,
-    "q_auc"            -> qAucSql,
-    "q_bh_fdr"         -> qBhFdrSql,
+  val gates: Seq[Gate] = Seq(
+    Gate("q_kruskal_wallis", qKruskalWallis _, qKruskalWallisSql),
+    Gate("q_kendall_tau", qKendallTau _, qKendallTauSql),
+    Gate("q_brown_forsythe", qBrownForsythe _, qBrownForsytheSql),
+    Gate("q_anova", qAnova _, qAnovaSql),
+    Gate("q_perm_test", qPermTest _, qPermTestSql),
+    Gate("q_cuped", qCuped _, qCupedSql),
+    Gate("q_auc", qAuc _, qAucSql),
+    Gate("q_bh_fdr", qBhFdr _, qBhFdrSql),
   )
 }

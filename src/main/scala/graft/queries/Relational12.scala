@@ -1218,27 +1218,16 @@ object Relational12 {
       |    abs(didx / sqrt(var_sum)) END, 0.0) > 1.96 AS significant
       |FROM k ORDER BY event_type""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_boot_ci" -> (qBootCi _),
-    "q_did" -> (qDid _),
-    "q_overdispersion" -> (qOverdispersion _),
-    "q_sketch_quantile" -> (qSketchQuantile _),
-    "q_welch_ttest" -> (qWelchTtest _),
-    "q_lift_gains" -> (qLiftGains _),
-    "q_median_ci" -> (qMedianCi _),
-    "q_cmh" -> (qCmh _),
-    "q_tost" -> (qTost _),
-    "q_rate_test" -> (qRateTest _))
-
-  val oracle: Map[String, String] = Map(
-    "q_boot_ci" -> qBootCiSql,
-    "q_did" -> qDidSql,
-    "q_overdispersion" -> qOverdispersionSql,
-    "q_sketch_quantile" -> qSketchQuantileSql,
-    "q_welch_ttest" -> qWelchTtestSql,
-    "q_lift_gains" -> qLiftGainsSql,
-    "q_median_ci" -> qMedianCiSql,
-    "q_cmh" -> qCmhSql,
-    "q_tost" -> qTostSql,
-    "q_rate_test" -> qRateTestSql)
+  val gates: Seq[Gate] = Seq(
+    Gate("q_boot_ci", qBootCi _, qBootCiSql),
+    Gate("q_did", qDid _, qDidSql),
+    Gate("q_overdispersion", qOverdispersion _, qOverdispersionSql),
+    Gate("q_sketch_quantile", qSketchQuantile _, qSketchQuantileSql),
+    Gate("q_welch_ttest", qWelchTtest _, qWelchTtestSql),
+    Gate("q_lift_gains", qLiftGains _, qLiftGainsSql),
+    Gate("q_median_ci", qMedianCi _, qMedianCiSql),
+    Gate("q_cmh", qCmh _, qCmhSql),
+    Gate("q_tost", qTost _, qTostSql),
+    Gate("q_rate_test", qRateTest _, qRateTestSql),
+  )
 }

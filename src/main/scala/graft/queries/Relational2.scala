@@ -150,11 +150,11 @@ object Relational2 {
     // r16 opt (guide §4): the three l_quantity percentiles share ONE
     // array-percentile buffer instead of three separate value-count maps —
     // identical values (same getPercentiles over the same buffer, one
-    // formula application per percentage; OptProbe IDENTICAL=true,
-    // 1.09 -> 1.03 s at sf0.1). The price map stays per-row: collapsing to
-    // (value, count) + the frequency argument was measured SLOWER for the
-    // near-distinct price column (583k distinct of 600k rows; 0.69 ->
-    // 0.79 s) — that rewrite only pays on low-cardinality columns.
+    // formula application per percentage; 1.09 -> 1.03 s at sf0.1). The
+    // price map stays per-row: collapsing to (value, count) + the
+    // frequency argument was measured SLOWER for the near-distinct price
+    // column (583k distinct of 600k rows; 0.69 -> 0.79 s) — that rewrite
+    // only pays on low-cardinality columns.
     Tables.lineitem(s, dir)
       .groupBy(col("l_returnflag"))
       .agg(
@@ -276,27 +276,15 @@ object Relational2 {
       |  FROM lineitem GROUP BY l_returnflag)
       |ORDER BY l_returnflag""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_corr"             -> qCorr _,
-    "q_approx_quantiles" -> qApproxQuantiles _,
-    "q_quantiles"     -> qQuantiles _,
-    "q_outer_join"    -> qOuterJoin _,
-    "q7_nation_volume" -> q7 _,
-    "q_corr_subquery" -> qCorrSubquery _,
-    "q_string_funcs"  -> qStringFuncs _,
-    "q_date_funcs"    -> qDateFuncs _,
-    "q_funnel"        -> qFunnel _,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q_corr"             -> qCorrSql,
-    "q_approx_quantiles" -> qApproxQuantilesSql,
-    "q_quantiles"     -> qQuantilesSql,
-    "q_outer_join"    -> qOuterJoinSql,
-    "q7_nation_volume" -> q7Sql,
-    "q_corr_subquery" -> qCorrSubquerySql,
-    "q_string_funcs"  -> qStringFuncsSql,
-    "q_date_funcs"    -> qDateFuncsSql,
-    "q_funnel"        -> qFunnelSql,
+  val gates: Seq[Gate] = Seq(
+    Gate("q_corr", qCorr _, qCorrSql),
+    Gate("q_approx_quantiles", qApproxQuantiles _, qApproxQuantilesSql),
+    Gate("q_quantiles", qQuantiles _, qQuantilesSql),
+    Gate("q_outer_join", qOuterJoin _, qOuterJoinSql),
+    Gate("q7_nation_volume", q7 _, q7Sql),
+    Gate("q_corr_subquery", qCorrSubquery _, qCorrSubquerySql),
+    Gate("q_string_funcs", qStringFuncs _, qStringFuncsSql),
+    Gate("q_date_funcs", qDateFuncs _, qDateFuncsSql),
+    Gate("q_funnel", qFunnel _, qFunnelSql),
   )
 }

@@ -443,45 +443,24 @@ object Relational3 {
       |      FROM lineitem GROUP BY l_orderkey)
       |WHERE len(qs) >= 4 ORDER BY l_orderkey""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_nested"          -> qNested _,
-    "q_lateral"         -> qLateral _,
-    "q_unpivot"         -> qUnpivot _,
-    "q_histogram"       -> qHistogram _,
-    "q_mode"            -> qMode _,
-    "q_null_semantics"  -> qNullSemantics _,
-    "q_window_funcs2"   -> qWindowFuncs2 _,
-    "q_setops_all"      -> qSetopsAll _,
-    "io_json_roundtrip" -> ioJsonRoundtrip _,
-    "io_orc_roundtrip"  -> ioOrcRoundtrip _,
-    "io_zorder_roundtrip" -> ioZorderRoundtrip _,
-    "io_dpp_roundtrip"  -> ioDppRoundtrip _,
-    "io_compact_roundtrip" -> ioCompactRoundtrip _,
-    "q_window_funcs"   -> qWindowFuncs _,
-    "q_grouping_sets"  -> qGroupingSets _,
-    "q_cube"           -> qCube _,
-    "q_collect_list"   -> qCollectList _,
-    "io_csv_roundtrip" -> ioCsvRoundtrip _,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q_histogram"       -> qHistogramSql,
-    "q_unpivot"         -> qUnpivotSql,
-    "q_nested"          -> qNestedSql,
-    "q_lateral"         -> qLateralSql,
-    "q_mode"            -> qModeSql,
-    "q_null_semantics"  -> qNullSemanticsSql,
-    "q_window_funcs2"   -> qWindowFuncs2Sql,
-    "q_setops_all"      -> qSetopsAllSql,
-    "io_json_roundtrip" -> ioJsonRoundtripSql,
-    "io_orc_roundtrip"  -> ioOrcRoundtripSql,
-    "io_zorder_roundtrip" -> ioZorderRoundtripSql,
-    "io_dpp_roundtrip"  -> ioDppRoundtripSql,
-    "io_compact_roundtrip" -> ioCompactRoundtripSql,
-    "q_window_funcs"   -> qWindowFuncsSql,
-    "q_grouping_sets"  -> qGroupingSetsSql,
-    "q_cube"           -> qCubeSql,
-    "q_collect_list"   -> qCollectListSql,
-    "io_csv_roundtrip" -> ioCsvRoundtripSql,
+  val gates: Seq[Gate] = Seq(
+    Gate("q_nested", qNested _, qNestedSql),
+    Gate("q_lateral", qLateral _, qLateralSql),
+    Gate("q_unpivot", qUnpivot _, qUnpivotSql),
+    Gate("q_histogram", qHistogram _, qHistogramSql),
+    Gate("q_mode", qMode _, qModeSql),
+    Gate("q_null_semantics", qNullSemantics _, qNullSemanticsSql),
+    Gate("q_window_funcs2", qWindowFuncs2 _, qWindowFuncs2Sql),
+    Gate("q_setops_all", qSetopsAll _, qSetopsAllSql),
+    Gate("io_json_roundtrip", ioJsonRoundtrip _, ioJsonRoundtripSql),
+    Gate("io_orc_roundtrip", ioOrcRoundtrip _, ioOrcRoundtripSql),
+    Gate("io_zorder_roundtrip", ioZorderRoundtrip _, ioZorderRoundtripSql),
+    Gate("io_dpp_roundtrip", ioDppRoundtrip _, ioDppRoundtripSql),
+    Gate("io_compact_roundtrip", ioCompactRoundtrip _, ioCompactRoundtripSql),
+    Gate("q_window_funcs", qWindowFuncs _, qWindowFuncsSql),
+    Gate("q_grouping_sets", qGroupingSets _, qGroupingSetsSql),
+    Gate("q_cube", qCube _, qCubeSql),
+    Gate("q_collect_list", qCollectList _, qCollectListSql),
+    Gate("io_csv_roundtrip", ioCsvRoundtrip _, ioCsvRoundtripSql),
   )
 }

@@ -205,21 +205,12 @@ object Relational4 {
        |FROM rfm, th ORDER BY o_custkey""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q4_order_priority" -> q4 _,
-    "q12_late_lines"    -> q12 _,
-    "q14_promo_share"   -> q14 _,
-    "q19_disjunctive"   -> q19 _,
-    "q16_supplier_cnt"  -> q16 _,
-    "q_rfm"             -> qRfm _,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q4_order_priority" -> q4Sql,
-    "q12_late_lines"    -> q12Sql,
-    "q14_promo_share"   -> q14Sql,
-    "q19_disjunctive"   -> q19Sql,
-    "q16_supplier_cnt"  -> q16Sql,
-    "q_rfm"             -> qRfmSql,
+  val gates: Seq[Gate] = Seq(
+    Gate("q4_order_priority", q4 _, q4Sql),
+    Gate("q12_late_lines", q12 _, q12Sql),
+    Gate("q14_promo_share", q14 _, q14Sql),
+    Gate("q19_disjunctive", q19 _, q19Sql),
+    Gate("q16_supplier_cnt", q16 _, q16Sql),
+    Gate("q_rfm", qRfm _, qRfmSql),
   )
 }

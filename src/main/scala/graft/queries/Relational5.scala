@@ -479,35 +479,19 @@ object Relational5 {
       |FROM r JOIN customer c ON c.c_custkey = r.c_custkey
       |GROUP BY r.root ORDER BY root""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_subtree_rollup"      -> qSubtreeRollup _,
-    "q_hierarchy"           -> qHierarchy _,
-    "q_window_range"        -> qWindowRange _,
-    "q2_min_cost_supp"      -> q2 _,
-    "q8_market_share"       -> q8 _,
-    "q9_product_profit"     -> q9 _,
-    "q11_important_value"   -> q11 _,
-    "q13_order_dist"        -> q13 _,
-    "q15_top_supplier"      -> q15 _,
-    "q17_small_qty"         -> q17 _,
-    "q20_promo_suppliers"   -> q20 _,
-    "q21_waiting_suppliers" -> q21 _,
-    "q22_dormant_customers" -> q22 _,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q_subtree_rollup"      -> qSubtreeRollupSql,
-    "q_hierarchy"           -> qHierarchySql,
-    "q_window_range"        -> qWindowRangeSql,
-    "q2_min_cost_supp"      -> q2Sql,
-    "q8_market_share"       -> q8Sql,
-    "q9_product_profit"     -> q9Sql,
-    "q11_important_value"   -> q11Sql,
-    "q13_order_dist"        -> q13Sql,
-    "q15_top_supplier"      -> q15Sql,
-    "q17_small_qty"         -> q17Sql,
-    "q20_promo_suppliers"   -> q20Sql,
-    "q21_waiting_suppliers" -> q21Sql,
-    "q22_dormant_customers" -> q22Sql,
+  val gates: Seq[Gate] = Seq(
+    Gate("q_subtree_rollup", qSubtreeRollup _, qSubtreeRollupSql),
+    Gate("q_hierarchy", qHierarchy _, qHierarchySql),
+    Gate("q_window_range", qWindowRange _, qWindowRangeSql),
+    Gate("q2_min_cost_supp", q2 _, q2Sql),
+    Gate("q8_market_share", q8 _, q8Sql),
+    Gate("q9_product_profit", q9 _, q9Sql),
+    Gate("q11_important_value", q11 _, q11Sql),
+    Gate("q13_order_dist", q13 _, q13Sql),
+    Gate("q15_top_supplier", q15 _, q15Sql),
+    Gate("q17_small_qty", q17 _, q17Sql),
+    Gate("q20_promo_suppliers", q20 _, q20Sql),
+    Gate("q21_waiting_suppliers", q21 _, q21Sql),
+    Gate("q22_dormant_customers", q22 _, q22Sql),
   )
 }

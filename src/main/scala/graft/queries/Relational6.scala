@@ -302,9 +302,9 @@ object Relational6 {
     // (x, count) value histogram; the boundary percentile rides the
     // frequency argument (value-identical buffer => bit-identical
     // boundaries) and the bucketing pass rides the SAME histogram — two
-    // fact scans become one plus a domain-bounded frame (OptProbe
-    // IDENTICAL=true). The approx toggle keeps the per-row form:
-    // percentile_approx has no frequency argument.
+    // fact scans become one plus a domain-bounded frame. The approx
+    // toggle keeps the per-row form: percentile_approx has no frequency
+    // argument.
     if (approx) {
       val th = li.agg(expr(
         "percentile_approx(x, array(0.125D, 0.25D, 0.375D, 0.5D, 0.625D, 0.75D, 0.875D), 10000)")
@@ -316,7 +316,7 @@ object Relational6 {
         .agg(count(lit(1)).as("n"), min(col("x")).as("lo"), max(col("x")).as("hi"))
         .orderBy(col("bucket"))
     } else {
-      val hist = li.groupBy(col("x")).agg(count(lit(1)).as("cnt")).localCheckpoint()
+      val hist = li.groupBy(col("x")).agg(count(lit(1)).as("cnt")).cpEager
       val th = hist.agg(expr(
         "percentile(x, array(0.125D, 0.25D, 0.375D, 0.5D, 0.625D, 0.75D, 0.875D), cnt)")
         .cast("array<double>").as("th"))
@@ -581,31 +581,17 @@ object Relational6 {
        |ORDER BY version, o_orderpriority""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "io_vacuum"         -> ioVacuum _,
-    "io_timetravel"     -> ioTimetravel _,
-    "q_mom_yoy"         -> qMomYoy _,
-    "q_attribution"     -> qAttribution _,
-    "q_funnel_steps"    -> qFunnelSteps _,
-    "q_abtest"          -> qAbtest _,
-    "q_quantiles_disc"  -> qQuantilesDisc _,
-    "q_histogram_eqd"   -> qHistogramEqd _,
-    "e_freshness"       -> eFreshness _,
-    "io_manifest_stats" -> ioManifestStats _,
-    "io_wap_roundtrip"  -> ioWapRoundtrip _,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "io_vacuum"         -> ioVacuumSql,
-    "io_timetravel"     -> ioTimetravelSql,
-    "q_mom_yoy"         -> qMomYoySql,
-    "q_attribution"     -> qAttributionSql,
-    "q_funnel_steps"    -> qFunnelStepsSql,
-    "q_abtest"          -> qAbtestSql,
-    "q_quantiles_disc"  -> qQuantilesDiscSql,
-    "q_histogram_eqd"   -> qHistogramEqdSql,
-    "e_freshness"       -> eFreshnessSql,
-    "io_manifest_stats" -> ioManifestStatsSql,
-    "io_wap_roundtrip"  -> ioWapRoundtripSql,
+  val gates: Seq[Gate] = Seq(
+    Gate("io_vacuum", ioVacuum _, ioVacuumSql),
+    Gate("io_timetravel", ioTimetravel _, ioTimetravelSql),
+    Gate("q_mom_yoy", qMomYoy _, qMomYoySql),
+    Gate("q_attribution", qAttribution _, qAttributionSql),
+    Gate("q_funnel_steps", qFunnelSteps _, qFunnelStepsSql),
+    Gate("q_abtest", qAbtest _, qAbtestSql),
+    Gate("q_quantiles_disc", qQuantilesDisc _, qQuantilesDiscSql),
+    Gate("q_histogram_eqd", qHistogramEqd _, qHistogramEqdSql),
+    Gate("e_freshness", eFreshness _, eFreshnessSql),
+    Gate("io_manifest_stats", ioManifestStats _, ioManifestStatsSql),
+    Gate("io_wap_roundtrip", ioWapRoundtrip _, ioWapRoundtripSql),
   )
 }

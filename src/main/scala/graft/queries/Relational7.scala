@@ -349,21 +349,12 @@ object Relational7 {
       |FROM orders JOIN customer ON c_custkey = o_custkey
       |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_acf"    -> qAcf _,
-    "q_cusum"  -> qCusum _,
-    "q_pareto" -> qPareto _,
-    "q_paths"  -> qPaths _,
-    "q_gaps"   -> qGaps _,
-    "io_bucket_join" -> ioBucketJoin _,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q_acf"    -> qAcfSql,
-    "q_cusum"  -> qCusumSql,
-    "q_pareto" -> qParetoSql,
-    "q_paths"  -> qPathsSql,
-    "q_gaps"   -> qGapsSql,
-    "io_bucket_join" -> ioBucketJoinSql,
+  val gates: Seq[Gate] = Seq(
+    Gate("q_acf", qAcf _, qAcfSql),
+    Gate("q_cusum", qCusum _, qCusumSql),
+    Gate("q_pareto", qPareto _, qParetoSql),
+    Gate("q_paths", qPaths _, qPathsSql),
+    Gate("q_gaps", qGaps _, qGapsSql),
+    Gate("io_bucket_join", ioBucketJoin _, ioBucketJoinSql),
   )
 }

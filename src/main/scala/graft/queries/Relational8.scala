@@ -843,41 +843,22 @@ object Relational8 {
       |    + (CAST(n1 AS DOUBLE) - e) * (CAST(n1 AS DOUBLE) - e) / e > 3.841 AS srm_detected
       |FROM m""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_ab_srm"          -> qAbSrm _,
-    "q_trailing7"       -> qTrailing7 _,
-    "q_movers"          -> qMovers _,
-    "q_growth_acct"     -> qGrowthAcct _,
-    "q_punchcard"       -> qPunchcard _,
-    "q_apportion"       -> qApportion _,
-    "q_gini"            -> qGini _,
-    "q_weighted_median" -> qWeightedMedian _,
-    "q_degree_dist"     -> qDegreeDist _,
-    "q_bool_agg"        -> qBoolAgg _,
-    "q_benford"       -> qBenford _,
-    "q_hhi"           -> qHhi _,
-    "q_chisq"         -> qChisq _,
-    "q_new_returning" -> qNewReturning _,
-    "q_skyline"       -> qSkyline _,
-    "q_funnel_time"   -> qFunnelTime _,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q_ab_srm"          -> qAbSrmSql,
-    "q_trailing7"       -> qTrailing7Sql,
-    "q_movers"          -> qMoversSql,
-    "q_growth_acct"     -> qGrowthAcctSql,
-    "q_punchcard"       -> qPunchcardSql,
-    "q_apportion"       -> qApportionSql,
-    "q_gini"            -> qGiniSql,
-    "q_weighted_median" -> qWeightedMedianSql,
-    "q_degree_dist"     -> qDegreeDistSql,
-    "q_bool_agg"        -> qBoolAggSql,
-    "q_benford"       -> qBenfordSql,
-    "q_hhi"           -> qHhiSql,
-    "q_chisq"         -> qChisqSql,
-    "q_new_returning" -> qNewReturningSql,
-    "q_skyline"       -> qSkylineSql,
-    "q_funnel_time"   -> qFunnelTimeSql,
+  val gates: Seq[Gate] = Seq(
+    Gate("q_ab_srm", qAbSrm _, qAbSrmSql),
+    Gate("q_trailing7", qTrailing7 _, qTrailing7Sql),
+    Gate("q_movers", qMovers _, qMoversSql),
+    Gate("q_growth_acct", qGrowthAcct _, qGrowthAcctSql),
+    Gate("q_punchcard", qPunchcard _, qPunchcardSql),
+    Gate("q_apportion", qApportion _, qApportionSql),
+    Gate("q_gini", qGini _, qGiniSql),
+    Gate("q_weighted_median", qWeightedMedian _, qWeightedMedianSql),
+    Gate("q_degree_dist", qDegreeDist _, qDegreeDistSql),
+    Gate("q_bool_agg", qBoolAgg _, qBoolAggSql),
+    Gate("q_benford", qBenford _, qBenfordSql),
+    Gate("q_hhi", qHhi _, qHhiSql),
+    Gate("q_chisq", qChisq _, qChisqSql),
+    Gate("q_new_returning", qNewReturning _, qNewReturningSql),
+    Gate("q_skyline", qSkyline _, qSkylineSql),
+    Gate("q_funnel_time", qFunnelTime _, qFunnelTimeSql),
   )
 }

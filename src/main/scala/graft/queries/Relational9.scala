@@ -856,33 +856,18 @@ object Relational9 {
       |WINDOW w AS (ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
       |ORDER BY day""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_backlog"      -> qBacklog _,
-    "q_pvm_bridge"   -> qPvmBridge _,
-    "q_rev_rec"      -> qRevRec _,
-    "q_ndr"          -> qNdr _,
-    "q_drawdown"     -> qDrawdown _,
-    "q_ols"          -> qOls _,
-    "q_bollinger"    -> qBollinger _,
-    "q_spearman"     -> qSpearman _,
-    "q_mann_whitney" -> qMannWhitney _,
-    "q_simpson"      -> qSimpson _,
-    "q_winsorize"    -> qWinsorize _,
-    "q_moments"      -> qMoments _,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q_backlog"      -> qBacklogSql,
-    "q_pvm_bridge"   -> qPvmBridgeSql,
-    "q_rev_rec"      -> qRevRecSql,
-    "q_ndr"          -> qNdrSql,
-    "q_drawdown"     -> qDrawdownSql,
-    "q_ols"          -> qOlsSql,
-    "q_bollinger"    -> qBollingerSql,
-    "q_spearman"     -> qSpearmanSql,
-    "q_mann_whitney" -> qMannWhitneySql,
-    "q_simpson"      -> qSimpsonSql,
-    "q_winsorize"    -> qWinsorizeSql,
-    "q_moments"      -> qMomentsSql,
+  val gates: Seq[Gate] = Seq(
+    Gate("q_backlog", qBacklog _, qBacklogSql),
+    Gate("q_pvm_bridge", qPvmBridge _, qPvmBridgeSql),
+    Gate("q_rev_rec", qRevRec _, qRevRecSql),
+    Gate("q_ndr", qNdr _, qNdrSql),
+    Gate("q_drawdown", qDrawdown _, qDrawdownSql),
+    Gate("q_ols", qOls _, qOlsSql),
+    Gate("q_bollinger", qBollinger _, qBollingerSql),
+    Gate("q_spearman", qSpearman _, qSpearmanSql),
+    Gate("q_mann_whitney", qMannWhitney _, qMannWhitneySql),
+    Gate("q_simpson", qSimpson _, qSimpsonSql),
+    Gate("q_winsorize", qWinsorize _, qWinsorizeSql),
+    Gate("q_moments", qMoments _, qMomentsSql),
   )
 }

@@ -1467,53 +1467,28 @@ object Similarity {
        |FROM topneg t LEFT JOIN pos p ON p.q_id = t.q_id
        |WHERE t.rnk <= 3 ORDER BY t.q_id, t.rnk""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "s_triplet_mine" -> sTripletMine _,
-    "s_bq_search"  -> sBqSearch _,
-    "s_mrl_rerank" -> sMrlRerank _,
-    "s_centroid_drift" -> sCentroidDrift _,
-    "s_hybrid_rrf" -> sHybridRrf _,
-    "s_knn_ivf_append" -> sKnnIvfAppend _,
-    "s_ivf_stats"  -> sIvfStats _,
-    "s_recall"     -> sRecall _,
-    "s_silhouette" -> sSilhouette _,
-    "s_pq"        -> sPq _,
-    "s_pq_search" -> sPqSearch _,
-    "s_ivfpq_search" -> sIvfPqSearch _,
-    "s_ivfpq_rerank" -> sIvfPqRerank _,
-    "s_ivfpq_residual" -> sIvfPqResidual _,
-    "s_quantize"  -> sQuantize _,
-    "s_sq8_search" -> sSq8Search _,
-    "s_mmr"        -> sMmr _,
-    "s_knn_brute" -> sKnnBrute _,
-    "s_filtered_knn" -> sFilteredKnn _,
-    "s_range_search" -> sRangeSearch _,
-    "s_knn_ivf"   -> sKnnIvf _,
-    "s_kmeans"    -> sKmeans _,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "s_triplet_mine" -> sTripletMineSql,
-    "s_bq_search"  -> sBqSearchSql,
-    "s_mrl_rerank" -> sMrlRerankSql,
-    "s_centroid_drift" -> sCentroidDriftSql,
-    "s_hybrid_rrf" -> sHybridRrfSql,
-    "s_knn_ivf_append" -> sKnnIvfAppendSql,
-    "s_ivf_stats"  -> sIvfStatsSql,
-    "s_recall"     -> sRecallSql,
-    "s_silhouette" -> sSilhouetteSql,
-    "s_pq"        -> sPqSql,
-    "s_pq_search" -> sPqSearchSql,
-    "s_ivfpq_search" -> sIvfPqSearchSql,
-    "s_ivfpq_rerank" -> sIvfPqRerankSql,
-    "s_ivfpq_residual" -> sIvfPqResidualSql,
-    "s_quantize"  -> sQuantizeSql,
-    "s_sq8_search" -> sSq8SearchSql,
-    "s_mmr"        -> sMmrSql,
-    "s_knn_brute" -> sKnnBruteSql,
-    "s_filtered_knn" -> sFilteredKnnSql,
-    "s_range_search" -> sRangeSearchSql,
-    "s_kmeans"    -> sKmeansSql,
-    "s_knn_ivf"   -> sKnnIvfSql,
+  val gates: Seq[Gate] = Seq(
+    Gate("s_triplet_mine", sTripletMine _, sTripletMineSql),
+    Gate("s_bq_search", sBqSearch _, sBqSearchSql),
+    Gate("s_mrl_rerank", sMrlRerank _, sMrlRerankSql),
+    Gate("s_centroid_drift", sCentroidDrift _, sCentroidDriftSql),
+    Gate("s_hybrid_rrf", sHybridRrf _, sHybridRrfSql),
+    Gate("s_knn_ivf_append", sKnnIvfAppend _, sKnnIvfAppendSql),
+    Gate("s_ivf_stats", sIvfStats _, sIvfStatsSql),
+    Gate("s_recall", sRecall _, sRecallSql),
+    Gate("s_silhouette", sSilhouette _, sSilhouetteSql),
+    Gate("s_pq", sPq _, sPqSql),
+    Gate("s_pq_search", sPqSearch _, sPqSearchSql),
+    Gate("s_ivfpq_search", sIvfPqSearch _, sIvfPqSearchSql),
+    Gate("s_ivfpq_rerank", sIvfPqRerank _, sIvfPqRerankSql),
+    Gate("s_ivfpq_residual", sIvfPqResidual _, sIvfPqResidualSql),
+    Gate("s_quantize", sQuantize _, sQuantizeSql),
+    Gate("s_sq8_search", sSq8Search _, sSq8SearchSql),
+    Gate("s_mmr", sMmr _, sMmrSql),
+    Gate("s_knn_brute", sKnnBrute _, sKnnBruteSql),
+    Gate("s_filtered_knn", sFilteredKnn _, sFilteredKnnSql),
+    Gate("s_range_search", sRangeSearch _, sRangeSearchSql),
+    Gate("s_knn_ivf", sKnnIvf _, sKnnIvfSql),
+    Gate("s_kmeans", sKmeans _, sKmeansSql),
   )
 }

@@ -837,35 +837,19 @@ object Similarity2 {
        |    / CAST(COUNT(*) AS DOUBLE) AS precision
        |FROM top GROUP BY 1 ORDER BY 1""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "s_calibration"  -> sCalibration _,
-    "s_margin"       -> sMargin _,
-    "s_probe_cost"   -> sProbeCost _,
-    "s_ndcg"         -> sNdcg _,
-    "s_knn_classify" -> sKnnClassify _,
-    "s_dim_stats"    -> sDimStats _,
-    "s_mrr"          -> sMrr _,
-    "s_mutual_knn"   -> sMutualKnn _,
-    "s_recall_curve" -> sRecallCurve _,
-    "s_ood"          -> sOod _,
-    "s_elbow"        -> sElbow _,
-    "s_purity"       -> sPurity _,
-    "s_norm_hist"    -> sNormHist _,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "s_calibration"  -> sCalibrationSql,
-    "s_margin"       -> sMarginSql,
-    "s_probe_cost"   -> sProbeCostSql,
-    "s_ndcg"         -> sNdcgSql,
-    "s_knn_classify" -> sKnnClassifySql,
-    "s_dim_stats"    -> sDimStatsSql,
-    "s_mrr"          -> sMrrSql,
-    "s_mutual_knn"   -> sMutualKnnSql,
-    "s_recall_curve" -> sRecallCurveSql,
-    "s_ood"          -> sOodSql,
-    "s_elbow"        -> sElbowSql,
-    "s_purity"       -> sPuritySql,
-    "s_norm_hist"    -> sNormHistSql,
+  val gates: Seq[Gate] = Seq(
+    Gate("s_calibration", sCalibration _, sCalibrationSql),
+    Gate("s_margin", sMargin _, sMarginSql),
+    Gate("s_probe_cost", sProbeCost _, sProbeCostSql),
+    Gate("s_ndcg", sNdcg _, sNdcgSql),
+    Gate("s_knn_classify", sKnnClassify _, sKnnClassifySql),
+    Gate("s_dim_stats", sDimStats _, sDimStatsSql),
+    Gate("s_mrr", sMrr _, sMrrSql),
+    Gate("s_mutual_knn", sMutualKnn _, sMutualKnnSql),
+    Gate("s_recall_curve", sRecallCurve _, sRecallCurveSql),
+    Gate("s_ood", sOod _, sOodSql),
+    Gate("s_elbow", sElbow _, sElbowSql),
+    Gate("s_purity", sPurity _, sPuritySql),
+    Gate("s_norm_hist", sNormHist _, sNormHistSql),
   )
 }

@@ -1546,77 +1546,40 @@ object Text {
        |FROM f ORDER BY doc_id""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "t_code_detect"  -> tCodeDetect _,
-    "t_classify"     -> tClassify _,
-    "t_curriculum"   -> tCurriculum _,
-    "t_chunk"        -> tChunk _,
-    "t_dataset_card" -> tDatasetCard _,
-    "t_bpe_train"   -> tBpeTrain _,
-    "t_dup_spans"   -> tDupSpans _,
-    "t_decontam_ngram" -> tDecontamNgram _,
-    "t_bm25"        -> tBm25 _,
-    "t_feature_hash" -> tFeatureHash _,
-    "t_encode"      -> tEncode _,
-    "t_rep_filter"  -> tRepFilter _,
-    "t_pack"        -> tPack _,
-    "t_sample_stratified" -> tSampleStratified _,
-    "t_lm_score"    -> tLmScore _,
-    "t_bigram_lm"   -> tBigramLm _,
-    "t_chat_render" -> tChatRender _,
-    "t_pref_pairs"  -> tPrefPairs _,
-    "t_mix"         -> tMix _,
-    "t_domain_weights" -> tDomainWeights _,
-    "t_rebalance"   -> tRebalance _,
-    "t_rebalance_epoch" -> tRebalanceEpoch _,
-    "t_heavy_hitters" -> tHeavyHitters _,
-    "t_split"       -> tSplit _,
-    "t_redact"      -> tRedact _,
-    "t_tfidf"       -> tTfidf _,
-    "t_vocab"       -> tVocab _,
-    "t_rolling_fp"  -> tRollingFp _,
-    "t_winnowing"   -> tWinnowing _,
-    "t_tokens"      -> tTokens _,
-    "t_quality"     -> tQuality _,
-    "t_langid"      -> tLangid _,
-    "t_fingerprint" -> tFingerprint _,
-    "t_ngrams"      -> tNgrams _,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "t_code_detect"  -> tCodeDetectSql,
-    "t_classify"     -> tClassifySql,
-    "t_curriculum"   -> tCurriculumSql,
-    "t_chunk"        -> tChunkSql,
-    "t_dataset_card" -> tDatasetCardSql,
-    "t_bpe_train"   -> tBpeTrainSql,
-    "t_dup_spans"   -> tDupSpansSql,
-    "t_decontam_ngram" -> tDecontamNgramSql,
-    "t_bm25"        -> tBm25Sql,
-    "t_feature_hash" -> tFeatureHashSql,
-    "t_encode"      -> tEncodeSql,
-    "t_rep_filter"  -> tRepFilterSql,
-    "t_pack"        -> tPackSql,
-    "t_sample_stratified" -> tSampleStratifiedSql,
-    "t_lm_score"    -> tLmScoreSql,
-    "t_bigram_lm"   -> tBigramLmSql,
-    "t_chat_render" -> tChatRenderSql,
-    "t_pref_pairs"  -> tPrefPairsSql,
-    "t_mix"         -> tMixSql,
-    "t_domain_weights" -> tDomainWeightsSql,
-    "t_rebalance"   -> tRebalanceSql,
-    "t_rebalance_epoch" -> tRebalanceEpochSql,
-    "t_heavy_hitters" -> tHeavyHittersSql,
-    "t_split"       -> tSplitSql,
-    "t_redact"      -> tRedactSql,
-    "t_tfidf"       -> tTfidfSql,
-    "t_vocab"       -> tVocabSql,
-    "t_rolling_fp"  -> tRollingFpSql,
-    "t_winnowing"   -> tWinnowingSql,
-    "t_tokens"      -> tTokensSql,
-    "t_quality"     -> tQualitySql,
-    "t_langid"      -> tLangidSql,
-    "t_fingerprint" -> tFingerprintSql,
-    "t_ngrams"      -> tNgramsSql,
+  val gates: Seq[Gate] = Seq(
+    Gate("t_code_detect", tCodeDetect _, tCodeDetectSql),
+    Gate("t_classify", tClassify _, tClassifySql),
+    Gate("t_curriculum", tCurriculum _, tCurriculumSql),
+    Gate("t_chunk", tChunk _, tChunkSql),
+    Gate("t_dataset_card", tDatasetCard _, tDatasetCardSql),
+    Gate("t_bpe_train", tBpeTrain _, tBpeTrainSql),
+    Gate("t_dup_spans", tDupSpans _, tDupSpansSql),
+    Gate("t_decontam_ngram", tDecontamNgram _, tDecontamNgramSql),
+    Gate("t_bm25", tBm25 _, tBm25Sql),
+    Gate("t_feature_hash", tFeatureHash _, tFeatureHashSql),
+    Gate("t_encode", tEncode _, tEncodeSql),
+    Gate("t_rep_filter", tRepFilter _, tRepFilterSql),
+    Gate("t_pack", tPack _, tPackSql),
+    Gate("t_sample_stratified", tSampleStratified _, tSampleStratifiedSql),
+    Gate("t_lm_score", tLmScore _, tLmScoreSql),
+    Gate("t_bigram_lm", tBigramLm _, tBigramLmSql),
+    Gate("t_chat_render", tChatRender _, tChatRenderSql),
+    Gate("t_pref_pairs", tPrefPairs _, tPrefPairsSql),
+    Gate("t_mix", tMix _, tMixSql),
+    Gate("t_domain_weights", tDomainWeights _, tDomainWeightsSql),
+    Gate("t_rebalance", tRebalance _, tRebalanceSql),
+    Gate("t_rebalance_epoch", tRebalanceEpoch _, tRebalanceEpochSql),
+    Gate("t_heavy_hitters", tHeavyHitters _, tHeavyHittersSql),
+    Gate("t_split", tSplit _, tSplitSql),
+    Gate("t_redact", tRedact _, tRedactSql),
+    Gate("t_tfidf", tTfidf _, tTfidfSql),
+    Gate("t_vocab", tVocab _, tVocabSql),
+    Gate("t_rolling_fp", tRollingFp _, tRollingFpSql),
+    Gate("t_winnowing", tWinnowing _, tWinnowingSql),
+    Gate("t_tokens", tTokens _, tTokensSql),
+    Gate("t_quality", tQuality _, tQualitySql),
+    Gate("t_langid", tLangid _, tLangidSql),
+    Gate("t_fingerprint", tFingerprint _, tFingerprintSql),
+    Gate("t_ngrams", tNgrams _, tNgramsSql),
   )
 }

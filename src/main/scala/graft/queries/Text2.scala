@@ -1120,49 +1120,26 @@ object Text2 {
        |SELECT doc_id, w_bytes, cum_bytes, CAST(n_hits AS BIGINT) AS n_hits
        |FROM h WHERE n_hits > 0 ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "t_sample_pps"    -> tSamplePps _,
-    "t_vocab_growth"  -> tVocabGrowth _,
-    "t_code_fence"    -> tCodeFence _,
-    "t_len_hist"      -> tLenHist _,
-    "t_astral"        -> tAstral _,
-    "t_oov"           -> tOov _,
-    "t_langid_margin" -> tLangidMargin _,
-    "t_fertility"    -> tFertility _,
-    "t_prefix_share" -> tPrefixShare _,
-    "t_nfc_dedup"    -> tNfcDedup _,
-    "t_license"      -> tLicense _,
-    "t_collocations" -> tCollocations _,
-    "t_readability"  -> tReadability _,
-    "t_zipf"         -> tZipf _,
-    "t_garbage"      -> tGarbage _,
-    "t_entities"     -> tEntities _,
-    "t_ctrlchars"    -> tCtrlchars _,
-    "t_ngram_coverage" -> tNgramCoverage _,
-    "t_rake"         -> tRake _,
-    "t_jsonl_export" -> tJsonlExport _,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "t_sample_pps"    -> tSamplePpsSql,
-    "t_vocab_growth"  -> tVocabGrowthSql,
-    "t_code_fence"    -> tCodeFenceSql,
-    "t_len_hist"      -> tLenHistSql,
-    "t_astral"        -> tAstralSql,
-    "t_oov"           -> tOovSql,
-    "t_langid_margin" -> tLangidMarginSql,
-    "t_fertility"    -> tFertilitySql,
-    "t_prefix_share" -> tPrefixShareSql,
-    "t_nfc_dedup"    -> tNfcDedupSql,
-    "t_license"      -> tLicenseSql,
-    "t_collocations" -> tCollocationsSql,
-    "t_readability"  -> tReadabilitySql,
-    "t_zipf"         -> tZipfSql,
-    "t_garbage"      -> tGarbageSql,
-    "t_entities"     -> tEntitiesSql,
-    "t_ctrlchars"    -> tCtrlcharsSql,
-    "t_ngram_coverage" -> tNgramCoverageSql,
-    "t_rake"         -> tRakeSql,
-    "t_jsonl_export" -> tJsonlExportSql,
+  val gates: Seq[Gate] = Seq(
+    Gate("t_sample_pps", tSamplePps _, tSamplePpsSql),
+    Gate("t_vocab_growth", tVocabGrowth _, tVocabGrowthSql),
+    Gate("t_code_fence", tCodeFence _, tCodeFenceSql),
+    Gate("t_len_hist", tLenHist _, tLenHistSql),
+    Gate("t_astral", tAstral _, tAstralSql),
+    Gate("t_oov", tOov _, tOovSql),
+    Gate("t_langid_margin", tLangidMargin _, tLangidMarginSql),
+    Gate("t_fertility", tFertility _, tFertilitySql),
+    Gate("t_prefix_share", tPrefixShare _, tPrefixShareSql),
+    Gate("t_nfc_dedup", tNfcDedup _, tNfcDedupSql),
+    Gate("t_license", tLicense _, tLicenseSql),
+    Gate("t_collocations", tCollocations _, tCollocationsSql),
+    Gate("t_readability", tReadability _, tReadabilitySql),
+    Gate("t_zipf", tZipf _, tZipfSql),
+    Gate("t_garbage", tGarbage _, tGarbageSql),
+    Gate("t_entities", tEntities _, tEntitiesSql),
+    Gate("t_ctrlchars", tCtrlchars _, tCtrlcharsSql),
+    Gate("t_ngram_coverage", tNgramCoverage _, tNgramCoverageSql),
+    Gate("t_rake", tRake _, tRakeSql),
+    Gate("t_jsonl_export", tJsonlExport _, tJsonlExportSql),
   )
 }

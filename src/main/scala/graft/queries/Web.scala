@@ -257,17 +257,10 @@ object Web {
        |FROM c GROUP BY canon_url ORDER BY canon_url""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "t_html"      -> tHtml _,
-    "t_url_canon" -> tUrlCanon _,
-    "t_robots"    -> tRobots _,
-    "d_url_dedup" -> dUrlDedup _,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "t_html"      -> tHtmlSql,
-    "t_url_canon" -> tUrlCanonSql,
-    "t_robots"    -> tRobotsSql,
-    "d_url_dedup" -> dUrlDedupSql,
+  val gates: Seq[Gate] = Seq(
+    Gate("t_html", tHtml _, tHtmlSql),
+    Gate("t_url_canon", tUrlCanon _, tUrlCanonSql),
+    Gate("t_robots", tRobots _, tRobotsSql),
+    Gate("d_url_dedup", dUrlDedup _, dUrlDedupSql),
   )
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Raw-bits GOLDEN probe for the experiment family's emitted float chains
-  * (VERDICT r14 "Next round" #7 — the KsProbe pattern, generalized):
+  * (VERDICT r14 "Next round" #7 — q_ks_test's raw-bits check, generalized):
   * every double a family gate emits is recomputed here in plain JVM
   * BigInt/BigDecimal + double arithmetic, written in EXACTLY the same
   * operation order as the Spark core, and compared by raw IEEE-754 bits.
@@ -22,8 +22,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * conversion Spark's Decimal.toDouble performs).
   *
   * Covers: anova, kruskalWallis, brownForsythe, brunnerMunzel,
-  * cliffDelta, permTest, cuped, auc — the full family (mannWhitney and
-  * ksTest already carry probes: tools/KsProbe and their invariant specs).
+  * cliffDelta, permTest, cuped, auc, welchTtest, cmh, tost, rateTest, did,
+  * bootCi, and the q_ks_test gate itself on the sf0.01 events (its d and
+  * d_crit recomputed from the emitted n1, n2 and d_num). mannWhitney
+  * carries its invariant specs.
   */
 class ExperimentBitsProbeSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
@@ -69,6 +71,26 @@ class ExperimentBitsProbeSpec extends AnyFunSuite {
   // ----------------------------------------------------------- helpers
 
   private def rowsOf(df: DataFrame): Seq[Row] = df.collect().toSeq
+
+  // ============================================================== ksTest
+  test("ksTest: d and d_crit bitwise vs pure-JVM chain from the emitted integers") {
+    // the cast path: Spark's DECIMAL→DOUBLE casts of d_num and n1·n2 are
+    // correctly rounded, as is BigDecimal.doubleValue here; a mismatch
+    // names Spark's cast path, an agreement with a red oracle hash names
+    // the other engine's conversion of the same integers
+    val got = rowsOf(graft.queries.Relational10.qKsTest(spark, "/root/testdata/sf0.01"))
+    assert(got.nonEmpty)
+    got.foreach { r =>
+      val t = r.getString(0)
+      val (n1, n2, dNum) = (r.getLong(1), r.getLong(2), r.getLong(3))
+      val n1n2 = d2(BigInt(n1) * BigInt(n2))
+      val d = d2(BigInt(dNum)) / n1n2
+      val crit = 1.628 * math.sqrt((n1 + n2).toDouble / n1n2)
+      assertDouble(r.get(4), Some(d), s"$t d")
+      assertDouble(r.get(5), Some(crit), s"$t d_crit")
+      assert(r.getBoolean(6) == (d > crit), s"$t significant")
+    }
+  }
 
   // ========================================================== cliffDelta
   test("cliffDelta: ints exact, delta bitwise vs pure-JVM chain") {

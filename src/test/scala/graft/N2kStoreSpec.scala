@@ -87,23 +87,6 @@ class N2kStoreSpec extends AnyFunSuite {
     } finally c.close()
   }
 
-  test("importPairSummaryFused (single union job) is value-identical to the pooled path") {
-    import org.apache.spark.sql.functions.col
-    val w1 = N2kBinding.window(spark, dir, "1996-01-01", "1998-01-01")
-    val w2 = N2kBinding.window(spark, dir, "1997-01-01", "1999-01-01")
-    val pooled = N2kBinding.importPairSummary(w1, w2).collect().toSeq
-    val fused = N2kBinding.importPairSummaryFused(w1, w2).collect().toSeq
-    assert(pooled.nonEmpty)
-    assert(fused == pooled,
-      "the one-job union variant must produce the identical summary frame")
-    // and the fused path still enforces validation via its observe() ride
-    val broken = w1.withColumn("sg_brand",
-      org.apache.spark.sql.functions.when(col("l_partkey") % 97 === 0, null)
-        .otherwise(col("sg_brand")))
-    val e = intercept[Exception](N2kBinding.importPairSummaryFused(broken, w2))
-    assert(e.getMessage.contains("validation failed"), s"got: ${e.getMessage}")
-  }
-
   test("whole-graph store: mid-transaction death leaves all 14 tables empty; retry converges; despawn lands") {
     createTables(url)
 

@@ -21,11 +21,23 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("driver contract: every gate query has an oracle, every oracle has a query") {
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    assert((o -- q).isEmpty, s"oracles without a query: ${(o -- q).toSeq.sorted}")
-    assert((q -- o).isEmpty,
-      s"queries without an oracle (driver records only a weak rows-only check): ${(q -- o).toSeq.sorted}")
+    // the registry rejects duplicate keys, so 379 entries are 379 gates
+    assert(SparkEntry.queries.size == 379)
+    assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet)
+    val blank = SparkEntry.oracleSql.collect { case (k, sql) if sql.trim.isEmpty => k }
+    assert(blank.isEmpty, s"gates with blank oracle SQL: ${blank.toSeq.sorted}")
+  }
+
+  test("driver contract: a gate list with a duplicate key or a blank oracle SQL fails construction") {
+    val g = Gate("k", Relational.q6 _, "SELECT 1")
+    assert(Gate.index(Seq(g)).keySet == Set("k"))
+    val dup = intercept[IllegalArgumentException](
+      Gate.index(Seq(g, g.copy(oracleSql = "SELECT 2"))))
+    assert(dup.getMessage.contains("duplicate gate keys: k"))
+    for (sql <- Seq(" ", null)) {
+      val e = intercept[IllegalArgumentException](Gate.index(Seq(g.copy(oracleSql = sql))))
+      assert(e.getMessage.contains("gates without oracle SQL: k"))
+    }
   }
 
   test("q6: all three predicates push into the parquet scan; schema pruned to 4 columns") {

@@ -110,6 +110,12 @@ class SplitSumSpec extends AnyFunSuite {
     def msgs(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
     assert(msgs(e).exists(_.contains("ansi.enabled")))
+    // a half-sum wrapped in a conditional is still a SplitSum shape
+    val wrapped = intercept[Exception] {
+      df.groupBy($"g").agg(sum(when($"v" > 0, shiftright($"v", SplitSum.Shift))).as("hi"))
+        .collect()
+    }
+    assert(msgs(wrapped).exists(_.contains("ansi.enabled")))
     s2.conf.set("spark.sql.ansi.enabled", "true")
     // and the identical plan passes with ANSI back on
     val ok = df.groupBy($"g").agg(aggs.head, aggs.tail: _*)

@@ -2,9 +2,11 @@ package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnBridge
 
+import graft.Parallel
 import graft.functions.OracleParity
-import graft.operators.{StableId, UpsertMerge, Validate}
+import graft.operators.{StableId, UpsertMerge}
 import graft.sources.JdbcUpsertSink
 import graft.sources.JdbcUpsertSink.Config
 
@@ -36,13 +38,48 @@ import graft.sources.JdbcUpsertSink.Config
   */
 object N2kBinding {
 
-  /** One table of the reference graph.
+  /** One table of the reference graph, declared once: its import extract
+    * ([[extract]]), the gate's one-pass summary ([[onePassSummary]]) and
+    * its store all derive from this entry. Every expression reads the
+    * export window's columns (see [[window]]) and is named with `.as`
+    * unless it keeps its window column's name.
     * @param stamped link/fact tables carry first/last import stamps and
     *                despawn semantics; dimension tables are
     *                insert-if-absent (the reference never soft-deletes a
-    *                species because one export lacked it). */
-  final case class Table(name: String, keyCols: Seq[String],
-      attrCols: Seq[String], stamped: Boolean)
+    *                species because one export lacked it).
+    * @param keys    the natural key
+    * @param attrs   a dimension's or link's attributes: its extract is the
+    *                DISTINCT (keys, attrs) of the window
+    * @param derived attributes computed from the key columns after that
+    *                DISTINCT, so the extract stays partitioned on its key
+    *                for the merge (and two windows never differ on them)
+    * @param measures a fact's aggregates over the window rows where a mask
+    *                holds — the extract passes `lit(true)` (folded away by
+    *                the optimizer), the one-pass summary each window's
+    *                membership; a fact's extract is one row per key
+    * @param cut     a fact's keep-rule over its aggregates, read through a
+    *                name resolver where "n" is the group's row count; groups
+    *                that fail it are not part of the extract */
+  final case class Table(name: String, stamped: Boolean, keys: Seq[Column],
+      attrs: Seq[Column] = Nil, derived: Seq[Column] = Nil,
+      measures: Option[Column => Seq[Column]] = None,
+      cut: Option[(String => Column) => Column] = None) {
+    val keyCols: Seq[String] = keys.map(nameOf)
+    val attrCols: Seq[String] = (measures.fold(attrs)(_(lit(true))) ++ derived).map(nameOf)
+  }
+
+  private def nameOf(c: Column): String = ColumnBridge.name(c).getOrElse(
+    throw new IllegalArgumentException(s"n2k column needs a name: $c"))
+
+  /** Count of the rows where `m` holds (`COUNT(*) FILTER (m)` in the oracle). */
+  private def rows(m: Column): Column = count(when(m, lit(1)))
+
+  private val revenue = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
+  /** The p_type family — this corpus's language code list. */
+  private val typeFamily = split(col("p_type"), " ").getItem(0)
+
+  /** Return-rate cutoff that makes a (group, year) an anomaly fact. */
+  val AnomalyRatio = 0.36
 
   /** FK-first order — dims, then the links, then facts — the order the
     * merges must land so no fact ever references an uncommitted dim.
@@ -51,28 +88,47 @@ object N2kBinding {
     * (geography — nations grouped into regions, sourced from each
     * window's suppliers). */
   val Graph: Seq[Table] = Seq(
-    Table("language", Seq("lang_code"), Seq("lang_desc"), stamped = false),
-    Table("datasource", Seq("ds_key"), Seq("ds_name"), stamped = false),
-    Table("species", Seq("sp_key"), Seq("sp_name", "sp_type"), stamped = false),
-    Table("species_group", Seq("sg_brand"), Nil, stamped = false),
-    Table("location", Seq("loc_key"), Seq("loc_name"), stamped = false),
-    Table("location_group", Seq("lg_key"), Seq("lg_name"), stamped = false),
-    Table("dataset", Seq("dset_key"), Seq("dset_name"), stamped = false),
-    Table("species_group_species", Seq("sg_brand", "sp_key"), Nil, stamped = true),
-    Table("location_group_location", Seq("lg_key", "loc_key"), Nil, stamped = true),
-    Table("analysis", Seq("sg_brand", "ship_yr"), Seq("n_items", "revenue"), stamped = true),
-    Table("anomaly", Seq("sg_brand", "ship_yr"), Seq("n_returned"), stamped = true),
-    Table("analysis_dataset", Seq("sg_brand", "ship_yr", "dset_key"), Nil, stamped = true),
-    Table("observation", Seq("sp_key", "loc_key", "ship_yr"), Seq("n_obs"), stamped = true),
-    Table("result", Seq("sg_brand", "ship_yr", "rf"), Seq("n_est", "estimate"), stamped = true))
-
-  /** Return-rate cutoff that makes a (group, year) an anomaly fact. */
-  val AnomalyRatio = 0.36
-
-  /** Generous FINITE bound on the driver-pool waits: imports measured in
-    * hours still fit, while a wedged job surfaces as a timeout instead of
-    * blocking the driver indefinitely (Duration.Inf did). */
-  private val PoolTimeout = scala.concurrent.duration.Duration(4, "hours")
+    Table("language", stamped = false, Seq(lower(typeFamily).as("lang_code")),
+      Seq(typeFamily.as("lang_desc"))),
+    Table("datasource", stamped = false, Seq(col("l_suppkey").as("ds_key")),
+      Seq(col("s_name").as("ds_name"))),
+    Table("species", stamped = false, Seq(col("l_partkey").as("sp_key")),
+      Seq(col("p_name").as("sp_name"), col("p_type").as("sp_type"))),
+    Table("species_group", stamped = false, Seq(col("sg_brand"))),
+    Table("location", stamped = false, Seq(col("n_nationkey").as("loc_key")),
+      Seq(col("n_name").as("loc_name"))),
+    Table("location_group", stamped = false, Seq(col("r_regionkey").as("lg_key")),
+      Seq(col("r_name").as("lg_name"))),
+    // one dataset per export ship-year — the reference's store_dataset
+    // registers each imported file; the year is this corpus's file unit
+    Table("dataset", stamped = false, Seq(col("ship_yr").as("dset_key")),
+      derived = Seq(concat(lit("export_"), col("dset_key").cast("string")).as("dset_name"))),
+    Table("species_group_species", stamped = true,
+      Seq(col("sg_brand"), col("l_partkey").as("sp_key"))),
+    Table("location_group_location", stamped = true,
+      Seq(col("r_regionkey").as("lg_key"), col("n_nationkey").as("loc_key"))),
+    Table("analysis", stamped = true, Seq(col("sg_brand"), col("ship_yr")),
+      measures = Some(m => Seq(rows(m).as("n_items"),
+        OracleParity.xsum(when(m, revenue)).as("revenue")))),
+    Table("anomaly", stamped = true, Seq(col("sg_brand"), col("ship_yr")),
+      measures = Some(m => Seq(rows(m && col("l_returnflag") === "R").as("n_returned"))),
+      cut = Some(c => c("n_returned").cast("double") / c("n").cast("double") > AnomalyRatio)),
+    // store_analysis_dataset: which datasets fed each analysis fact
+    Table("analysis_dataset", stamped = true,
+      Seq(col("sg_brand"), col("ship_yr"), col("ship_yr").as("dset_key"))),
+    // store_observation: the finest-grain fact — species seen at a
+    // location in a year, with its observation count
+    Table("observation", stamped = true,
+      Seq(col("l_partkey").as("sp_key"), col("n_nationkey").as("loc_key"), col("ship_yr")),
+      measures = Some(m => Seq(rows(m).as("n_obs")))),
+    // the n2kresult schema's terminal fact (store_n2kresult stores each
+    // analysis's RESULT rows): one estimate per analysis × parameter
+    // class — here the (sg_brand, ship_yr) analysis broken down by
+    // return-flag, FK-dependent on the analysis fact it refines
+    Table("result", stamped = true,
+      Seq(col("sg_brand"), col("ship_yr"), col("l_returnflag").as("rf")),
+      measures = Some(m => Seq(rows(m).as("n_est"),
+        OracleParity.xsum(when(m, revenue)).as("estimate")))))
 
   /** One observation-export window: orders in [lo, hi) with their line
     * items, annotated from the broadcast part/supplier dims.
@@ -101,61 +157,17 @@ object N2kBinding {
   }
 
   /** Normalize one table's rows out of an export window. */
-  def extract(t: Table, w: DataFrame): DataFrame = t.name match {
-    case "language" =>
-      w.select(split(col("p_type"), " ").getItem(0).as("tok"))
-        .select(lower(col("tok")).as("lang_code"), col("tok").as("lang_desc"))
-        .distinct()
-    case "datasource" =>
-      w.select(col("l_suppkey").as("ds_key"), col("s_name").as("ds_name")).distinct()
-    case "species" =>
-      w.select(col("l_partkey").as("sp_key"), col("p_name").as("sp_name"),
-        col("p_type").as("sp_type")).distinct()
-    case "species_group" =>
-      w.select(col("sg_brand")).distinct()
-    case "location" =>
-      w.select(col("n_nationkey").as("loc_key"), col("n_name").as("loc_name")).distinct()
-    case "location_group" =>
-      w.select(col("r_regionkey").as("lg_key"), col("r_name").as("lg_name")).distinct()
-    case "species_group_species" =>
-      w.select(col("sg_brand"), col("l_partkey").as("sp_key")).distinct()
-    case "location_group_location" =>
-      w.select(col("r_regionkey").as("lg_key"), col("n_nationkey").as("loc_key")).distinct()
-    case "analysis" =>
-      w.groupBy(col("sg_brand"), col("ship_yr"))
-        .agg(count(lit(1)).as("n_items"),
-          OracleParity.xsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-            .as("revenue"))
-    case "anomaly" =>
-      // count(when) = COUNT(*) FILTER in the oracle (BIGINT on both sides)
-      w.groupBy(col("sg_brand"), col("ship_yr"))
-        .agg(count(lit(1)).as("n"),
-          count(when(col("l_returnflag") === "R", lit(1))).as("n_returned"))
-        .filter(col("n_returned").cast("double") / col("n").cast("double") > AnomalyRatio)
-        .select(col("sg_brand"), col("ship_yr"), col("n_returned"))
-    case "dataset" =>
-      // one dataset per export ship-year — the reference's store_dataset
-      // registers each imported file; the year is this corpus's file unit
-      w.select(col("ship_yr").as("dset_key")).distinct()
-        .withColumn("dset_name", concat(lit("export_"), col("dset_key").cast("string")))
-    case "analysis_dataset" =>
-      // store_analysis_dataset: which datasets fed each analysis fact
-      w.select(col("sg_brand"), col("ship_yr"), col("ship_yr").as("dset_key")).distinct()
-    case "observation" =>
-      // store_observation: the finest-grain fact — species seen at a
-      // location in a year, with its observation count
-      w.groupBy(col("l_partkey").as("sp_key"), col("n_nationkey").as("loc_key"),
-          col("ship_yr"))
-        .agg(count(lit(1)).as("n_obs"))
-    case "result" =>
-      // the n2kresult schema's terminal fact (store_n2kresult stores each
-      // analysis's RESULT rows): one estimate per analysis × parameter
-      // class — here the (sg_brand, ship_yr) analysis broken down by
-      // return-flag, FK-dependent on the analysis fact it refines
-      w.groupBy(col("sg_brand"), col("ship_yr"), col("l_returnflag").as("rf"))
-        .agg(count(lit(1)).as("n_est"),
-          OracleParity.xsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-            .as("estimate"))
+  def extract(t: Table, w: DataFrame): DataFrame = t.measures match {
+    case None =>
+      w.select(t.keys ++ t.attrs: _*).distinct().select(col("*") +: t.derived: _*)
+    case Some(ms) =>
+      val byKey = w.groupBy(t.keys: _*)
+      t.cut match {
+        case None => byKey.agg(ms(lit(true)).head, ms(lit(true)).tail: _*)
+        case Some(cut) =>
+          byKey.agg(rows(lit(true)).as("n"), ms(lit(true)): _*).filter(cut(col))
+            .select((t.keyCols ++ t.attrCols).map(col): _*)
+      }
   }
 
   /** Pristine-state bootstrap: the table empty, with merge bookkeeping
@@ -220,75 +232,15 @@ object N2kBinding {
   def importAll(state: Map[String, DataFrame], w: DataFrame, stamp: Long): Map[String, DataFrame] =
     commitImport(state, prepareImport(w), stamp)
 
-  private def mergeOf(t: Table, tgt: DataFrame, src: DataFrame, stamp: Long): DataFrame =
-    if (t.stamped) UpsertMerge.stampedMerge(tgt, src, t.keyCols, t.attrCols, lit(stamp))
-    else UpsertMerge.merge(tgt, src, t.keyCols, t.attrCols)
+  /** The pristine store: every table's [[emptyState]]. */
+  def empty(w: DataFrame): Map[String, DataFrame] =
+    Graph.map(t => t.name -> emptyState(t, w)).toMap
 
-  /** Attach the no-NA-keys validation to an extract as observe() metrics:
-    * the null-key counts accumulate DURING whatever job consumes the
-    * extract — no separate validation pass, no extract checkpoint. */
-  private def observedExtract(t: Table, w: DataFrame,
-      obs: org.apache.spark.sql.Observation): DataFrame =
-    extract(t, w).observe(obs,
-      sum(when(t.keyCols.map(col(_).isNull).reduce(_ || _), 1L).otherwise(0L))
-        .as("null_keys"))
-
-  /** Enforce the no-NA-keys rule from an observe() metric, read with the
-    * bounded poll; if the metric never lands, count the null-key rows of
-    * the window's extract (`cond` carves the window out of `span`) the
-    * slow way rather than skip the check. */
-  private def requireValidKeys(t: Table, span: DataFrame, cond: Column,
-      obs: org.apache.spark.sql.Observation, which: String, metric: String): Unit = {
-    val nullKeys = org.apache.spark.sql.graftshim.ObservationBridge.awaitLong(obs, metric) {
-      Validate.report(extract(t, span.filter(cond)),
-          t.keyCols.map(k => Validate.Rule(s"${t.name}_${k}_nonnull", col(k).isNotNull)))
-        .agg(coalesce(sum("n_violations"), lit(0L))).head.getLong(0)
-    }
-    require(nullKeys == 0L,
-      s"validation failed: ${t.name} $which has $nullKeys null-key rows")
-  }
-
-  /** Two-extract two-import summary, the reference implementation the
-    * e_store_n2k gate's `importPairSummaryOnePass` is pinned against: each
-    * table's chain — extract₁ → merge₁ → merge₂(extract₂) → summary
-    * projection — runs end-to-end from its own pool thread with NO
-    * cross-table barrier: language's second merge proceeds while
-    * observation's first still shuffles, where the prepare/commit phasing
-    * stalls every table behind the slowest one, twice. The whole chain is
-    * ONE Spark job per table (an eager localCheckpoint of the summary):
-    * extracts read straight from the shared checkpointed span, so they
-    * need no checkpoint of their own, and the no-NA-keys validation rides
-    * the same job as observe() metrics on each extract (checked as the
-    * chain lands — speculative computation, nothing persists, so a
-    * violation still aborts the import with nothing stored). merge₁'s
-    * full-outer join hash-partitions its output on the table key, so
-    * merge₂ exchanges only the second extract. Flows that write a
-    * database keep the two-phase prepareImport/commitImport path with its
-    * in-plan key check and transaction. */
-  def importPairSummary(w1: DataFrame, w2: DataFrame): DataFrame = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(Graph.size, 16))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try {
-      val chains = Graph.toList.map { t =>
-        Future {
-          val obs1 = new org.apache.spark.sql.Observation()
-          val obs2 = new org.apache.spark.sql.Observation()
-          val m1 = mergeOf(t, emptyState(t, w1), observedExtract(t, w1, obs1), stamp = 1L)
-          val m2 = mergeOf(t, m1.drop("action"), observedExtract(t, w2, obs2), stamp = 2L)
-          // EAGER checkpoint: materializes the fused chain and fires the
-          // CollectMetrics listeners (a raw toRdd.count() would not)
-          val proj = summaryOf(t, m2).localCheckpoint()
-          requireValidKeys(t, w1, lit(true), obs1, "import 1", "null_keys")
-          requireValidKeys(t, w2, lit(true), obs2, "import 2", "null_keys")
-          proj
-        }
-      }
-      Await.result(Future.sequence(chains), PoolTimeout)
-        .reduce(_ unionByName _)
-        .repartition(1).sortWithinPartitions(col("table_name"), col("nk"))
-    } finally pool.shutdownNow()
-  }
+  /** Two-import summary through the path that writes the database —
+    * import 1 into a pristine store, then import 2 — the reference the
+    * e_store_n2k gate's `importPairSummaryOnePass` is pinned against. */
+  def importPairSummary(w1: DataFrame, w2: DataFrame): DataFrame =
+    summary(importAll(importAll(empty(w1), w1, 1L), w2, 2L))
 
   /** r16 optimization — the ONE-PASS two-import summary (guide §1.1
     * first-principles passes, §2.4 remove shuffles, §3 joins). From a
@@ -299,10 +251,11 @@ object N2kBinding {
     * extracts the DuckDB oracle's mergeSql replays. That function is
     * computable in ONE aggregation over the shared span with per-window
     * conditional aggregates (`max(when(w, attr))`, `count(when(w, 1))`,
-    * conditional xsum): no empty-state merge, no full-outer join, no
-    * second span scan per table. Plan per table: span scan → hash
-    * aggregate (map-side partial) → summary projection. Probed at sf0.1
-    * local[32]: chains 3.0 s (pooled two-extract+merge path) → ~1.0 s.
+    * the fact measures under the window mask): no empty-state merge, no
+    * full-outer join, no second span scan per table. Plan per table: span
+    * scan → hash aggregate (map-side partial) → summary projection.
+    * Probed at sf0.1 local[32]: chains 3.0 s (pooled two-extract+merge
+    * path) → ~1.0 s.
     *
     * Equivalence notes (N2kOnePassSpec pins both): the attr-difference
     * decision uses null-safe `<=>` directly — the comparison mergeSql
@@ -311,143 +264,47 @@ object N2kBinding {
     * values per window ride `max(when(w, a))`, which equals the window's
     * DISTINCT attr under the store's unique-key contract (the same
     * contract the full-outer merge requires — duplicate keys would
-    * cross-join there). The no-NA-keys validation rides the same job as
-    * observe() metrics on the pre-aggregation rows, split per window, so
-    * a violation still aborts the import with nothing stored.
+    * cross-join there). The no-NA-keys rule is the import's in-plan
+    * [[checkKeys]] filter on the rows before the aggregate, so a
+    * violation still aborts the import with nothing stored.
     *
     * `in1`/`in2` are the two windows' membership predicates over the
     * span (must cover the span: every row in at least one window —
     * e_store_n2k's overlapping [Lo1,Hi1)/[Lo2,Hi2) carve does).
     * Flows that write a database keep the two-phase
-    * prepareImport/commitImport path; importPairSummary remains the
-    * reference two-extract implementation the spec compares against. */
-  def importPairSummaryOnePass(span: DataFrame, in1: Column, in2: Column): DataFrame = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(Graph.size, 16))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try {
-      val chains = Graph.toList.map { t =>
-        Future {
-          val obs = new org.apache.spark.sql.Observation()
-          val proj = onePassSummary(t, span, in1, in2, Some(obs)).localCheckpoint()
-          requireValidKeys(t, span, in1, obs, "import 1", "null_keys_1")
-          requireValidKeys(t, span, in2, obs, "import 2", "null_keys_2")
-          proj
-        }
-      }
-      Await.result(Future.sequence(chains), PoolTimeout)
-        .reduce(_ unionByName _)
-        .repartition(1).sortWithinPartitions(col("table_name"), col("nk"))
-    } finally pool.shutdownNow()
-  }
+    * prepareImport/commitImport path. */
+  def importPairSummaryOnePass(span: DataFrame, in1: Column, in2: Column): DataFrame =
+    ordered(Parallel.map(Graph)(t => onePassSummary(t, span, in1, in2).localCheckpoint())
+      .reduce(_ unionByName _))
 
   /** One table's two-import summary rows from ONE aggregation over the
-    * span (see importPairSummaryOnePass). Package-visible so
-    * N2kOnePassSpec can compare it per-table against the two-extract
-    * merge path. */
+    * span (see importPairSummaryOnePass), derived from the table's Graph
+    * entry under the window masks `__w1`/`__w2`. Measures and the cut read
+    * the window's columns; a key or attribute shadows the window column of
+    * its name. */
   private[graft] def onePassSummary(t: Table, span: DataFrame, in1: Column,
-      in2: Column, obs: Option[org.apache.spark.sql.Observation]): DataFrame = {
-    val (w1, w2) = (col("__w1"), col("__w2"))
-    def flag(w: Column, nm: String) = max(when(w, lit(1))).as(nm)
-    def cnt(w: Column, nm: String) = count(when(w, lit(1))).as(nm)
-    // per-window attr pair + its IS-DISTINCT-FROM comparison
-    def attrPair(a: Column, nm: String): Seq[Column] =
-      Seq(max(when(w1, a)).as(s"__${nm}_1"), max(when(w2, a)).as(s"__${nm}_2"))
-    def attrDiff(nms: String*): Column =
-      nms.map(nm => !(col(s"__${nm}_1") <=> col(s"__${nm}_2"))).reduce(_ || _)
-    val rev = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-    val pFlag1 = col("__p_1").isNotNull
-    val pFlag2 = col("__p_2").isNotNull
-    val pN1 = col("__n_1") > 0L
-    val pN2 = col("__n_2") > 0L
-
-    // (row-level key/measure projection, aggregate columns, presence
-    // predicates, attr-difference) per table shape
-    val (proj, aggs, p1, p2, diff): (Seq[Column], Seq[Column], Column, Column, Column) = {
-      val tok = split(col("p_type"), " ").getItem(0)
-      t.name match {
-        case "language" =>
-          (Seq(lower(tok).as("lang_code"), tok.as("__a")),
-            Seq(flag(w1, "__p_1"), flag(w2, "__p_2")) ++ attrPair(col("__a"), "a"),
-            pFlag1, pFlag2, attrDiff("a"))
-        case "datasource" =>
-          (Seq(col("l_suppkey").as("ds_key"), col("s_name").as("__a")),
-            Seq(flag(w1, "__p_1"), flag(w2, "__p_2")) ++ attrPair(col("__a"), "a"),
-            pFlag1, pFlag2, attrDiff("a"))
-        case "species" =>
-          (Seq(col("l_partkey").as("sp_key"), col("p_name").as("__a"),
-            col("p_type").as("__b")),
-            Seq(flag(w1, "__p_1"), flag(w2, "__p_2")) ++
-              attrPair(col("__a"), "a") ++ attrPair(col("__b"), "b"),
-            pFlag1, pFlag2, attrDiff("a", "b"))
-        case "species_group" =>
-          (Seq(col("sg_brand")),
-            Seq(flag(w1, "__p_1"), flag(w2, "__p_2")), pFlag1, pFlag2, lit(false))
-        case "location" =>
-          (Seq(col("n_nationkey").as("loc_key"), col("n_name").as("__a")),
-            Seq(flag(w1, "__p_1"), flag(w2, "__p_2")) ++ attrPair(col("__a"), "a"),
-            pFlag1, pFlag2, attrDiff("a"))
-        case "location_group" =>
-          (Seq(col("r_regionkey").as("lg_key"), col("r_name").as("__a")),
-            Seq(flag(w1, "__p_1"), flag(w2, "__p_2")) ++ attrPair(col("__a"), "a"),
-            pFlag1, pFlag2, attrDiff("a"))
-        case "dataset" =>
-          // dset_name derives from the key, so the two windows' attrs are
-          // equal whenever both are present — attrDiff is identically false
-          (Seq(col("ship_yr").as("dset_key")),
-            Seq(flag(w1, "__p_1"), flag(w2, "__p_2")), pFlag1, pFlag2, lit(false))
-        case "species_group_species" =>
-          (Seq(col("sg_brand"), col("l_partkey").as("sp_key")),
-            Seq(flag(w1, "__p_1"), flag(w2, "__p_2")), pFlag1, pFlag2, lit(false))
-        case "location_group_location" =>
-          (Seq(col("r_regionkey").as("lg_key"), col("n_nationkey").as("loc_key")),
-            Seq(flag(w1, "__p_1"), flag(w2, "__p_2")), pFlag1, pFlag2, lit(false))
-        case "analysis" =>
-          (Seq(col("sg_brand"), col("ship_yr"), rev.as("__rev")),
-            Seq(cnt(w1, "__n_1"), cnt(w2, "__n_2"),
-              OracleParity.xsum(when(w1, col("__rev"))).as("__rev_1"),
-              OracleParity.xsum(when(w2, col("__rev"))).as("__rev_2")),
-            pN1, pN2, !(col("__n_1") <=> col("__n_2")) ||
-              !(col("__rev_1") <=> col("__rev_2")))
-        case "anomaly" =>
-          (Seq(col("sg_brand"), col("ship_yr"), (col("l_returnflag") === "R").as("__r")),
-            Seq(cnt(w1, "__n_1"), cnt(w2, "__n_2"),
-              cnt(w1 && col("__r"), "__nr_1"), cnt(w2 && col("__r"), "__nr_2")),
-            pN1 && col("__nr_1").cast("double") / col("__n_1").cast("double") > AnomalyRatio,
-            pN2 && col("__nr_2").cast("double") / col("__n_2").cast("double") > AnomalyRatio,
-            !(col("__nr_1") <=> col("__nr_2")))
-        case "analysis_dataset" =>
-          (Seq(col("sg_brand"), col("ship_yr"), col("ship_yr").as("dset_key")),
-            Seq(flag(w1, "__p_1"), flag(w2, "__p_2")), pFlag1, pFlag2, lit(false))
-        case "observation" =>
-          (Seq(col("l_partkey").as("sp_key"), col("n_nationkey").as("loc_key"),
-            col("ship_yr")),
-            Seq(cnt(w1, "__n_1"), cnt(w2, "__n_2")),
-            pN1, pN2, !(col("__n_1") <=> col("__n_2")))
-        case "result" =>
-          (Seq(col("sg_brand"), col("ship_yr"), col("l_returnflag").as("rf"),
-            rev.as("__rev")),
-            Seq(cnt(w1, "__n_1"), cnt(w2, "__n_2"),
-              OracleParity.xsum(when(w1, col("__rev"))).as("__est_1"),
-              OracleParity.xsum(when(w2, col("__rev"))).as("__est_2")),
-            pN1, pN2, !(col("__n_1") <=> col("__n_2")) ||
-              !(col("__est_1") <=> col("__est_2")))
-      }
+      in2: Column): DataFrame = {
+    val named = (t.keyCols ++ t.attrs.map(nameOf)).toSet
+    val rowsOf = checkKeys(t, span.select(t.keys ++ t.attrs ++
+      span.columns.filterNot(named).map(col) ++ Seq(in1.as("__w1"), in2.as("__w2")): _*))
+    // per window i: its row count `__n_i` and each attribute `__<a>_i`
+    // (derived attributes follow the key, so they never differ)
+    val compared = t.attrCols.diff(t.derived.map(nameOf))
+    def at(i: Int)(nm: String): Column = col(s"__${nm}_$i")
+    val perWindow = Seq(1, 2).flatMap { i =>
+      val m = col(s"__w$i")
+      rows(m).as(s"__n_$i") +: (t.measures match {
+        case Some(ms) => ms(m).map(c => c.as(s"__${nameOf(c)}_$i"))
+        case None => compared.map(a => max(when(m, col(a))).as(s"__${a}_$i"))
+      })
     }
-
-    // window-membership flags ride the row projection (computed BEFORE
-    // the key projection drops the carve column); the no-NA-keys
-    // validation (split per window, so the abort names its import) rides
-    // the same job as observe() metrics — nothing extra is scanned
-    val keyNull = t.keyCols.map(col(_).isNull).reduce(_ || _)
-    val flagged0 = span.select(proj ++ Seq(in1.as("__w1"), in2.as("__w2")): _*)
-    val flagged = obs match {
-      case Some(o) => flagged0.observe(o,
-        sum(when(keyNull && w1, 1L).otherwise(0L)).as("null_keys_1"),
-        sum(when(keyNull && w2, 1L).otherwise(0L)).as("null_keys_2"))
-      case None => flagged0
+    val agg = rowsOf.groupBy(t.keyCols.map(col): _*).agg(perWindow.head, perWindow.tail: _*)
+    def present(i: Int): Column = {
+      val n = at(i)("n") > 0L
+      t.cut.fold(n)(cut => n && cut(at(i)))
     }
-    val agg = flagged.groupBy(t.keyCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
+    val (p1, p2) = (present(1), present(2))
+    val diff = compared.map(a => !(at(1)(a) <=> at(2)(a))).foldLeft(lit(false))(_ || _)
     val missing = if (t.stamped) UpsertMerge.Despawn else UpsertMerge.Keep
     val action = when(!p1, lit(UpsertMerge.Insert))
       .when(!p2, lit(missing))
@@ -471,36 +328,24 @@ object N2kBinding {
     * call then throws and returns no state, and nothing reaches storeAll.
     * The per-table pipelines are independent until the single DB
     * transaction in storeAll, so BOTH driver-side costs run concurrently
-    * from a thread pool: (a) Catalyst planning — localCheckpoint plans
+    * from driver threads: (a) Catalyst planning — localCheckpoint plans
     * eagerly even when lazy, and 13 sequential analyze/optimize/plan
     * passes were the gate's hidden driver floor — and (b) the merge
     * materialization jobs, each one store-sized keyed shuffle that cannot
     * fill the cluster alone. */
   def commitImport(state: Map[String, DataFrame], extracts: Seq[(Table, DataFrame)],
-      stamp: Long): Map[String, DataFrame] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(Graph.size, 16))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try {
-      val merged = Await.result(
-        Future.sequence(extracts.map { case (t, src) => Future {
-          val tgt = state(t.name).drop("action")
-          // eager: counts the checkpointed RDD itself while siblings
-          // overlap (a lazy checkpoint counted through a plan compiled one
-          // more scan class per table)
-          t.name -> mergeOf(t, tgt, src, stamp).localCheckpoint()
-        } }), PoolTimeout)
-      merged.toMap
-    } finally pool.shutdownNow()
-  }
+      stamp: Long): Map[String, DataFrame] =
+    Parallel.map(extracts) { case (t, src) =>
+      val tgt = state(t.name).drop("action")
+      // eager: counts the checkpointed RDD itself while siblings overlap
+      // (a lazy checkpoint counted through a plan compiled one more scan
+      // class per table)
+      t.name -> UpsertMerge.mergeFor(tgt, src, t.keyCols, t.attrCols,
+        if (t.stamped) Some(lit(stamp)) else None).localCheckpoint()
+    }.toMap
 
-  /** Canonical cross-table summary of a post-import state: one row per
-    * stored row with its content-hash surrogate id, merge action and
-    * stamps (NULL stamps for the unstamped dims). This is the gate shape
-    * — it proves key hashing, classification, stamps and despawn for the
-    * ENTIRE graph in one comparable frame. */
   /** One table's summary rows (see summary). */
-  private def summaryOf(t: Table, df: DataFrame, hashAlgo: String = "md5"): DataFrame = {
+  private def summaryOf(t: Table, df: DataFrame, hashAlgo: String): DataFrame = {
     val nk = concat_ws(":", t.keyCols.map(c => col(c).cast("string")): _*)
     val (f, l, d) =
       if (t.stamped) (col("first_imported"), col("last_imported"), col("despawned"))
@@ -510,38 +355,39 @@ object N2kBinding {
       col("action"), f.as("first_imported"), l.as("last_imported"), d.as("despawned"))
   }
 
-  /** @param hashAlgo surrogate-id digest (StableId.Algos): "md5" default;
+  /** Canonical cross-table summary of a post-import state: one row per
+    * stored row with its content-hash surrogate id, merge action and
+    * stamps (NULL stamps for the unstamped dims). This is the gate shape
+    * — it proves key hashing, classification, stamps and despawn for the
+    * ENTIRE graph in one comparable frame.
+    * @param hashAlgo surrogate-id digest (StableId.Algos): "md5" default;
     *   "sha256" for new schemas (oracle-gated); "sha1" to RECONCILE ids
     *   against an existing n2kresult database (the reference's actual
     *   fingerprint — Spark-spec-verified, no DuckDB oracle). */
   def summary(state: Map[String, DataFrame], hashAlgo: String = "md5"): DataFrame =
-    Graph.map(t => summaryOf(t, state(t.name), hashAlgo)).reduce(_ unionByName _)
-      // store-sized output: hash the ids map-side in parallel, then one
-      // exchange into a single sorted partition — same fully-sorted
-      // result as orderBy without its extra range-partitioner sampling
-      // pass (which re-evaluates the md5 projection just to pick bounds;
-      // at 100 TB the summary is a diagnostic frame, not a fact scan)
-      .repartition(1).sortWithinPartitions(col("table_name"), col("nk"))
+    ordered(Graph.map(t => summaryOf(t, state(t.name), hashAlgo)).reduce(_ unionByName _))
+
+  /** Store-sized summary output: hash the ids map-side in parallel, then
+    * one exchange into a single sorted partition — same fully-sorted
+    * result as orderBy without its extra range-partitioner sampling pass
+    * (which re-evaluates the md5 projection just to pick bounds; at
+    * 100 TB the summary is a diagnostic frame, not a fact scan). */
+  private def ordered(df: DataFrame): DataFrame =
+    df.repartition(1).sortWithinPartitions(col("table_name"), col("nk"))
 
   /** Land a merged state in the database — all fourteen tables FK-first in
     * ONE transaction, exactly the reference's single-DBI-transaction
-    * contract. Only changed rows are written (plus stamp refreshes on
-    * stamped tables); despawns land as soft-delete UPDATEs. Target tables
-    * are named n2k_<name>.
+    * contract. Only the rows UpsertMerge.rowsToWrite picks are written;
+    * despawns land as soft-delete UPDATEs. Target tables are named
+    * n2k_<name>.
     *
     * @param onMergeStepForTest crash-injection seam (see
     *        JdbcUpsertSink.mergeAllStagedAtomically): N2kStoreSpec kills
     *        the flow between the dim and fact merges and proves nothing
     *        becomes visible and a plain retry converges. */
   def storeAll(state: Map[String, DataFrame], url: String,
-      onMergeStepForTest: Int => Unit = _ => ()): Unit = {
-    val writes = Graph.map { t =>
-      val m = state(t.name)
-      val changed =
-        if (t.stamped) m.filter(col("action") =!= UpsertMerge.Keep || !col("despawned"))
-        else m.filter(col("action").isin(UpsertMerge.Insert, UpsertMerge.Update))
-      changed.drop("action") -> Config(url, s"n2k_${t.name}", t.keyCols)
-    }
-    JdbcUpsertSink.upsertAllViaStaging(writes, onMergeStepForTest)
-  }
+      onMergeStepForTest: Int => Unit = _ => ()): Unit =
+    JdbcUpsertSink.upsertAllViaStaging(Graph.map(t =>
+      UpsertMerge.rowsToWrite(state(t.name), t.stamped) -> Config(url, s"n2k_${t.name}", t.keyCols)),
+      onMergeStepForTest)
 }

@@ -61,11 +61,7 @@ object StorePipeline {
       df.withColumn(sk, StableId.stableId(cols.map(col)))
     }
     val attrs = spec.attrCols ++ spec.dims.map(_._1)
-    val merged = stamp match {
-      case Some(st) => UpsertMerge.stampedMerge(curWithSks, withSks, spec.keyCols, attrs, st)
-      case None     => UpsertMerge.merge(curWithSks, withSks, spec.keyCols, attrs)
-    }
-    Result(report, dims, merged)
+    Result(report, dims, UpsertMerge.mergeFor(curWithSks, withSks, spec.keyCols, attrs, stamp))
   }
 
   /** store + write: dimension tables merge FIRST (FK order, like the
@@ -90,18 +86,7 @@ object StorePipeline {
       stamp: Option[Column] = None,
       onMergeStepForTest: Int => Unit = _ => ()): Result = {
     val r = store(spark, current, incoming, spec, strict = true, stamp)
-    // despawned rows land as UPDATES setting the soft-delete flag + stamps —
-    // rows are never dropped from the store (the reference's contract).
-    // Stamped imports must ALSO write present-but-unchanged rows: their
-    // last_imported refreshes every import (the reference pays this write
-    // too — it IS the bookkeeping). Only long-dead rows (kept AND
-    // despawned) skip the write, so a dead row costs nothing per import.
-    val changed = (stamp match {
-      case Some(_) => r.merged.filter(
-        col("action") =!= UpsertMerge.Keep || !col("despawned"))
-      case None => r.merged.filter(
-        col("action").isin(UpsertMerge.Insert, UpsertMerge.Update))
-    }).drop("action")
+    val changed = UpsertMerge.rowsToWrite(r.merged, stamped = stamp.isDefined)
     val dimWrites = for ((sk, dimTable) <- dimTables.toSeq; dim <- r.dims.get(sk))
       yield dim -> Config(jdbcUrl, dimTable, Seq(sk))
     JdbcUpsertSink.upsertAllViaStaging(

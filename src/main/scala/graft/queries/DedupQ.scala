@@ -7,6 +7,7 @@ import graft.Tables
 import graft.dedup.{Components, Dedup, EmbedLsh, MinHashLsh, SimHash128, SimHashDedup}
 import graft.functions.TextFunctions.P
 import graft.Ckpt._
+import Similarity.cosSql
 
 /** Deduplication queries (SURVEY.md §2D). The MinHash oracle SQL is
   * *generated* from the same band/row/prime constants as the Spark
@@ -621,13 +622,6 @@ object DedupQ {
       .orderBy(col("a_id"), col("b_id"))
   }
 
-  /** DuckDB cosine with the same left-fold summation order as CosineSim. */
-  private def cosSql(a: String, b: String): String = {
-    def dot(x: String, y: String) =
-      s"list_reduce([CAST($x[i+1] AS DOUBLE) * CAST($y[i+1] AS DOUBLE) for i in range(0, len($x))], (p, q) -> p + q)"
-    s"(${dot(a, b)} / (sqrt(${dot(a, a)}) * sqrt(${dot(b, b)})))"
-  }
-
   /** Oracle: identical twin augmentation (same IEEE double ops, same
     * parity rule), then the shared band CTEs over the augmented set. */
   val dEmbedNeardupSql: String =
@@ -722,7 +716,7 @@ object DedupQ {
        |${Similarity.kmAssignCte("pts", "c2", "f")},
        |pairs AS (
        |  SELECT a_id, b_id FROM (
-       |    SELECT x.p_id AS a_id, y.p_id AS b_id, ${Similarity.cosSql("x.pv", "y.pv")} AS cos
+       |    SELECT x.p_id AS a_id, y.p_id AS b_id, ${cosSql("x.pv", "y.pv")} AS cos
        |    FROM f x JOIN f y ON x.c_id = y.c_id AND x.p_id < y.p_id)
        |  WHERE cos >= $SemThreshold),
        |$closureCtes

@@ -8,6 +8,7 @@ import graft.functions.OracleParity.xsum
 import graft.multimodal.Multimodal
 import graft.streaming.Streaming
 import graft.Ckpt._
+import Similarity.cosSql
 
 /** Multimodal + streaming query bindings (SURVEY.md §2F/§2G). */
 object Modal {
@@ -94,11 +95,6 @@ object Modal {
     graft.similarity.Knn.bruteForce(s, feats, queries, "doc_id", "features", k = 3)
       .orderBy(col("q_id"), col("rnk"))
   }
-
-  private def dotSql(x: String, y: String) =
-    s"list_reduce([CAST($x[i+1] AS DOUBLE) * CAST($y[i+1] AS DOUBLE) for i in range(0, len($x))], (p, q) -> p + q)"
-  private def cosSql(a: String, b: String) =
-    s"(${dotSql(a, b)} / (sqrt(${dotSql(a, a)}) * sqrt(${dotSql(b, b)})))"
 
   val mFeaturesKnnSql: String =
     s"""WITH ch AS (SELECT doc_id, unnest(string_split_regex(text, '')) AS c FROM documents),

@@ -110,6 +110,18 @@ object Modal3 {
 
   // ------------------------------------------------------------- m_hist_eq
 
+  /** Pixel nibble j ∈ [0, 64) of image `id`: the hex digits of md5(id)
+    * then md5(id + "b") — the synthetic 8×8 raster the image gates draw
+    * (their oracles replay the same formula). */
+  private def nibbles(md: java.security.MessageDigest, id: Long): Int => Int = {
+    md.reset()
+    val hexA = md.digest(id.toString.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    md.reset()
+    val hexB = md.digest(s"${id}b".getBytes("UTF-8")).map("%02x".format(_)).mkString
+    j => if (j < 32) Integer.parseInt(hexA.substring(j, j + 1), 16)
+      else Integer.parseInt(hexB.substring(j - 32, j - 31), 16)
+  }
+
   /** m_hist_eq: HISTOGRAM EQUALIZATION in the pixel domain — the contrast
     * normalization step before perceptual hashing / feature extraction
     * (two exposures of one scene equalize to near-identical rasters; raw
@@ -132,13 +144,7 @@ object Modal3 {
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
         it.flatMap { id =>
-          md.reset()
-          val hexA = md.digest(id.toString.getBytes("UTF-8")).map("%02x".format(_)).mkString
-          md.reset()
-          val hexB = md.digest(s"${id}b".getBytes("UTF-8")).map("%02x".format(_)).mkString
-          def nib(j: Int): Int =
-            if (j < 32) Integer.parseInt(hexA.substring(j, j + 1), 16)
-            else Integer.parseInt(hexB.substring(j - 32, j - 31), 16)
+          val nib = nibbles(md, id)
           val img = new java.awt.image.BufferedImage(8, 8,
             java.awt.image.BufferedImage.TYPE_INT_RGB)
           var j = 0
@@ -299,13 +305,7 @@ object Modal3 {
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
         it.flatMap { id =>
-          md.reset()
-          val hexA = md.digest(id.toString.getBytes("UTF-8")).map("%02x".format(_)).mkString
-          md.reset()
-          val hexB = md.digest(s"${id}b".getBytes("UTF-8")).map("%02x".format(_)).mkString
-          def nib(j: Int): Int =
-            if (j < 32) Integer.parseInt(hexA.substring(j, j + 1), 16)
-            else Integer.parseInt(hexB.substring(j - 32, j - 31), 16)
+          val nib = nibbles(md, id)
           val img = new java.awt.image.BufferedImage(8, 8,
             java.awt.image.BufferedImage.TYPE_INT_RGB)
           var j = 0
@@ -384,13 +384,7 @@ object Modal3 {
           }
         }
         it.flatMap { id =>
-          md.reset()
-          val hexA = md.digest(id.toString.getBytes("UTF-8")).map("%02x".format(_)).mkString
-          md.reset()
-          val hexB = md.digest(s"${id}b".getBytes("UTF-8")).map("%02x".format(_)).mkString
-          def nib(j: Int): Int =
-            if (j < 32) Integer.parseInt(hexA.substring(j, j + 1), 16)
-            else Integer.parseInt(hexB.substring(j - 32, j - 31), 16)
+          val nib = nibbles(md, id)
           def raster(imgType: Int, icmOpt: Option[java.awt.image.IndexColorModel]) = {
             val img = icmOpt match {
               case Some(cm) => new java.awt.image.BufferedImage(8, 8, imgType, cm)

@@ -50,8 +50,9 @@ object N2k {
     // r16 opt: from a pristine store the two-import outcome is ONE
     // aggregation per table over the shared span with per-window
     // conditional aggregates (importPairSummaryOnePass's doc has the
-    // equivalence argument; N2kOnePassSpec pins it against the
-    // two-extract merge path, which remains the database-writing API)
+    // equivalence argument; N2kOnePassSpec pins it against
+    // importPairSummary, two imports through the importAll that feeds
+    // the database)
     N2kBinding.importPairSummaryOnePass(sp,
       col("o_orderdate") < lit(Hi1).cast("timestamp_ntz"),
       col("o_orderdate") >= lit(Lo2).cast("timestamp_ntz"))
@@ -150,7 +151,9 @@ object N2k {
        |  JOIN region ON n_regionkey = r_regionkey
        |WHERE o_orderdate >= TIMESTAMP '$lo' AND o_orderdate < TIMESTAMP '$hi'""".stripMargin
 
-  /** Mirror of N2kBinding.extract for one window relation. */
+  /** Mirror of N2kBinding.extract for one window relation — written by
+    * hand, apart from the Graph entries, so the oracle stays an
+    * independent check of them. */
   private def extractSql(t: Table, w: String): String = t.name match {
     case "language" =>
       s"SELECT DISTINCT lower(string_split(p_type, ' ')[1]) AS lang_code, " +

@@ -266,18 +266,20 @@ object Relational12 {
   private val d19 = org.apache.spark.sql.types.DecimalType(19, 0)
   private val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
   private val D = org.apache.spark.sql.types.DoubleType
+  private def nD(c: org.apache.spark.sql.Column) = c.cast(D)
+  // variant k's LONG conditional micro sums widened to DECIMAL(38,0)
+  // post-agg (the q_perm_test widen-late rule — same Σ|x6| < 2⁶³ headroom
+  // contract)
+  private def cSum(k: Int): org.apache.spark.sql.Column =
+    sum(when(col("variant") === k, col("x6")).otherwise(0L)).cast(d38)
+  private def cSq(k: Int): org.apache.spark.sql.Column =
+    sum(when(col("variant") === k,
+      (col("x6").cast(d19) * col("x6").cast(d19)).cast(d38))
+      .otherwise(lit(0L).cast(d38))).cast(d38)
 
   /** The Welch core over any (event_type, variant ∈ {0,1}, x6 BIGINT
     * micros) frame — factored out for ExperimentBitsProbeSpec. */
   private[graft] def welchTtest(ev: DataFrame): DataFrame = {
-    // LONG conditional micro sums widened to DECIMAL(38,0) post-agg (the
-    // q_perm_test widen-late rule — same Σ|x6| < 2⁶³ headroom contract)
-    def cSum(k: Int): org.apache.spark.sql.Column =
-      sum(when(col("variant") === k, col("x6")).otherwise(0L)).cast(d38)
-    def cSq(k: Int): org.apache.spark.sql.Column =
-      sum(when(col("variant") === k,
-        (col("x6").cast(d19) * col("x6").cast(d19)).cast(d38))
-        .otherwise(lit(0L).cast(d38))).cast(d38)
     val a = ev.groupBy(col("event_type"))
       .agg(
         sum(when(col("variant") === 0, 1L).otherwise(0L)).as("n0"),
@@ -287,7 +289,6 @@ object Relational12 {
     // exact sample-variance numerators: V_k = n_k·Q_k − S_k²  (≥ 0)
     val v0 = (col("n0").cast(d19) * col("q0") - col("s0") * col("s0")).cast(d38)
     val v1 = (col("n1").cast(d19) * col("q1") - col("s1") * col("s1")).cast(d38)
-    def nD(c: org.apache.spark.sql.Column) = c.cast(D)
     // s_k²/n_k in micro²: V_k / (n_k(n_k−1)) / n_k — one pinned chain
     val t0 = v0.cast(D) / (nD(col("n0")) * nD(col("n0") - 1L)) / nD(col("n0"))
     val t1 = v1.cast(D) / (nD(col("n1")) * nD(col("n1") - 1L)) / nD(col("n1"))
@@ -604,7 +605,6 @@ object Relational12 {
         cell(k, 0, true).as(s"c$k"), cell(k, 0, false).as(s"d$k"))
     }
     val piv = base.groupBy().agg(cells.head, cells.tail: _*)
-    def nD(c: org.apache.spark.sql.Column) = c.cast(D)
     def n(k: Int) = col(s"a$k") + col(s"b$k") + col(s"c$k") + col(s"d$k")
     // E_k and V_k: exact DECIMAL products, one double chain each.
     // V_k's guard n_k > 1 keeps the 0/0 of an empty stratum out; an
@@ -743,14 +743,6 @@ object Relational12 {
   /** The TOST core over any (event_type, variant ∈ {0,1}, x6 BIGINT
     * micros) frame — factored out for ExperimentBitsProbeSpec. */
   private[graft] def tost(ev: DataFrame): DataFrame = {
-    // LONG conditional micro sums widened to DECIMAL(38,0) post-agg (the
-    // q_perm_test widen-late rule — same Σ|x6| < 2⁶³ headroom contract)
-    def cSum(k: Int): org.apache.spark.sql.Column =
-      sum(when(col("variant") === k, col("x6")).otherwise(0L)).cast(d38)
-    def cSq(k: Int): org.apache.spark.sql.Column =
-      sum(when(col("variant") === k,
-        (col("x6").cast(d19) * col("x6").cast(d19)).cast(d38))
-        .otherwise(lit(0L).cast(d38))).cast(d38)
     val a = ev.groupBy(col("event_type"))
       .agg(
         sum(when(col("variant") === 0, 1L).otherwise(0L)).as("n0"),
@@ -759,7 +751,6 @@ object Relational12 {
         cSq(0).as("q0"), cSq(1).as("q1"))
     val v0 = (col("n0").cast(d19) * col("q0") - col("s0") * col("s0")).cast(d38)
     val v1 = (col("n1").cast(d19) * col("q1") - col("s1") * col("s1")).cast(d38)
-    def nD(c: org.apache.spark.sql.Column) = c.cast(D)
     val t0 = v0.cast(D) / (nD(col("n0")) * nD(col("n0") - 1L)) / nD(col("n0"))
     val t1 = v1.cast(D) / (nD(col("n1")) * nD(col("n1") - 1L)) / nD(col("n1"))
     val diff = col("s1").cast(D) / nD(col("n1")) -
@@ -850,7 +841,6 @@ object Relational12 {
       .groupBy(col("event_type")).agg(
         sum(when(col("variant") === 0, 1L).otherwise(0L)).as("u0"),
         sum(when(col("variant") === 1, 1L).otherwise(0L)).as("u1"))
-    def nD(c: org.apache.spark.sql.Column) = c.cast(D)
     val c = col("c0") + col("c1")
     val p = nD(col("u1")) / nD(col("u0") + col("u1"))
     val e = nD(c) * p
@@ -925,7 +915,6 @@ object Relational12 {
     val perUser = Tables.events(s, dir)
       .groupBy(col("event_type"), col("user_id"))
       .agg(count(lit(1)).as("c"))
-    def nD(c: org.apache.spark.sql.Column) = c.cast(D)
     val a = perUser.groupBy(col("event_type")).agg(
       count(lit(1)).as("n_users"),
       sum(col("c")).as("sc"),
@@ -1147,7 +1136,6 @@ object Relational12 {
       sC(0, 0), sC(0, 1), sC(1, 0), sC(1, 1),
       qC(0, 0), qC(0, 1), qC(1, 0), qC(1, 1))
     val a = ev.groupBy(col("event_type")).agg(aggs.head, aggs.tail: _*)
-    def nD(c: org.apache.spark.sql.Column) = c.cast(D)
     def m(g: Int, p: Int) = col(s"s$g$p").cast(D) / nD(col(s"n$g$p"))
     // per-cell mean-variance term: V/(n(n−1))/n  (micro², the Welch form)
     def t(g: Int, p: Int) = {

@@ -90,7 +90,7 @@ object Relational3 {
 
   /** Collision-free staging path for ingest round-trips: distinct dataset
     * dirs must never map to the same tmp location (digit-stripping did). */
-  private def roundtripPath(dir: String, fmt: String): String = {
+  private[queries] def roundtripPath(dir: String, fmt: String): String = {
     val h = java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
     s"/tmp/graft_${fmt}_roundtrip_$h"

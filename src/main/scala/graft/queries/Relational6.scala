@@ -8,6 +8,7 @@ import graft.Tables
 import graft.functions.OracleParity.xsum
 import graft.sources.Manifest
 import graft.Ckpt._
+import Relational3.roundtripPath
 
 /** Round-10 relational/product-analytics additions (SURVEY.md §2A):
   * period-over-period growth and marketing attribution — two BI staples
@@ -340,12 +341,6 @@ object Relational6 {
       |         CASE WHEN x > th[7] THEN 1 ELSE 0 END) AS bucket
       |  FROM li, th)
       |GROUP BY bucket ORDER BY bucket""".stripMargin
-
-  private def roundtripPath(dir: String, fmt: String): String = {
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    s"/tmp/graft_${fmt}_roundtrip_$h"
-  }
 
   /** io_manifest_stats: the data-skipping manifest promoted to a gate —
     * orders lands as an 8-file range-partitioned layout, the manifest

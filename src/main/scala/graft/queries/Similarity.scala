@@ -44,6 +44,8 @@ object Similarity {
       .orderBy(col("q_id"), col("rnk"))
   }
 
+  /** DuckDB dot product and cosine with the same left-fold summation
+    * order as CosineSim — the oracle SQL every cosine gate shares. */
   private[queries] def dotSql(x: String, y: String) =
     s"list_reduce([CAST($x[i+1] AS DOUBLE) * CAST($y[i+1] AS DOUBLE) for i in range(0, len($x))], (p, q) -> p + q)"
   private[queries] def cosSql(a: String, b: String) =

@@ -12,16 +12,14 @@ import org.apache.spark.sql.types._
   * target inside a transaction. On a cluster that becomes:
   *
   *  1. `stage()` — executors write partitions in parallel into a staging
-  *     table (plain batched INSERTs, one connection per partition, no
-  *     driver collect);
-  *  2. `mergeStagingIntoTarget()` — ONE driver-side MERGE statement moves
-  *     staging into the target atomically (set-based, runs inside the
-  *     database, transactional like the reference);
+  *     table per target (plain batched INSERTs, one connection per
+  *     partition, no driver collect); every table stages concurrently;
+  *  2. `mergeAllStagedAtomically()` — one driver-side MERGE statement per
+  *     table, all on ONE connection in ONE transaction, moves staging into
+  *     the targets (set-based, runs inside the database, transactional like
+  *     the reference).
   *
-  * or, when no staging table is wanted, `upsert()` runs per-partition
-  * batched MERGE statements directly — parallel, idempotent (content-keyed
-  * rows make retries safe), at-least-once under task retry which MERGE
-  * semantics absorb.
+  * `upsertAllViaStaging` runs both steps; it is the sink's only write path.
   *
   * DIALECTS: the staging/merge SQL goes through a [[Dialect]] seam. The
   * EXECUTED (spec-driven) path is embedded Derby — the JDBC engine that
@@ -38,8 +36,10 @@ object JdbcUpsertSink {
       url: String,
       table: String,
       keyCols: Seq[String],
-      batchSize: Int = 1000,
       dialect: Dialect = DerbyDialect)
+
+  /** Rows per JDBC batch in a staging INSERT. */
+  private final val BatchSize = 1000
 
   /** One table's staged-merge description (staging → target). */
   final case class MergeStep(staging: String, target: String,
@@ -131,12 +131,6 @@ object JdbcUpsertSink {
     }
   }
 
-  /** CREATE TABLE DDL under the DEFAULT (executed) dialect — kept as the
-    * historical entry point; dialect-specific DDL via `Dialect.ddl`. */
-  def ddl(table: String, schema: StructType, keyCols: Seq[String],
-      extraCols: String = ""): String =
-    DerbyDialect.ddl(table, schema, keyCols, extraCols)
-
   /** One setter per column of `schema`, binding that column of an
     * InternalRow to a statement parameter: primitives and strings read
     * straight off the row, every other type goes through Spark's
@@ -176,7 +170,7 @@ object JdbcUpsertSink {
       s"INSERT INTO ${cfg.table} (${colNames.mkString(", ")}, graft_part) " +
         s"VALUES (${colNames.map(_ => "?").mkString(", ")}, ?)"
     val deleteSql = s"DELETE FROM ${cfg.table} WHERE graft_part = ?"
-    val (url, batch) = (cfg.url, cfg.batchSize)
+    val url = cfg.url
     df.queryExecution.toRdd.foreachPartition { (rows: Iterator[InternalRow]) =>
       val part = org.apache.spark.TaskContext.getPartitionId()
       val bind = binders(schema)
@@ -191,7 +185,7 @@ object JdbcUpsertSink {
           bind.indices.foreach(i => bind(i)(ps, i + 1, r))
           ps.setInt(bind.length + 1, part)
           ps.addBatch(); n += 1
-          if (n % batch == 0) ps.executeBatch()
+          if (n % BatchSize == 0) ps.executeBatch()
         }
         ps.executeBatch()
         conn.commit()
@@ -227,12 +221,6 @@ object JdbcUpsertSink {
     } finally conn.close()
   }
 
-  /** One atomic set-based MERGE from staging into target (driver side,
-    * single transaction — the whole batch lands or none of it). */
-  def mergeStagingIntoTarget(url: String, staging: String, target: String,
-      schema: StructType, keyCols: Seq[String]): Unit =
-    mergeAllStagedAtomically(url, Seq(MergeStep(staging, target, schema, keyCols)))
-
   private def withConn[A](url: String)(f: Connection => A): A = {
     val conn = DriverManager.getConnection(url)
     try f(conn) finally conn.close()
@@ -267,26 +255,14 @@ object JdbcUpsertSink {
     // scratch space outside any transaction and each table loads its own
     // staging table, so the Spark write jobs are independent — only the
     // merges below serialize (one connection, one transaction, FK order)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(writes.size, 16))
-    try {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-      val jobs = writes.zip(steps).map { case ((df, cfg), st) =>
-        Future {
-          withConn(url) { conn =>
-            dropIfExists(conn, st.staging)
-            conn.createStatement().executeUpdate(
-              dialect.ddl(st.staging, df.schema, Nil, extraCols = ", graft_part INT"))
-          }
-          stage(df, cfg.copy(table = st.staging))
-        }
+    graft.Parallel.map(writes.zip(steps)) { case ((df, cfg), st) =>
+      withConn(url) { conn =>
+        dropIfExists(conn, st.staging)
+        conn.createStatement().executeUpdate(
+          dialect.ddl(st.staging, df.schema, Nil, extraCols = ", graft_part INT"))
       }
-      // generous FINITE bound — a wedged staging write must surface as a
-      // timeout, never hang the driver forever; on first failure the
-      // finally's shutdownNow drops queued sibling tasks (already-running
-      // Spark jobs finish and are ignored)
-      jobs.foreach(Await.result(_, scala.concurrent.duration.Duration(4, "hours")))
-    } finally pool.shutdownNow()
+      stage(df, cfg.copy(table = st.staging))
+    }
     mergeAllStagedAtomically(url, steps, onStepForTest, dialect)
     withConn(url)(conn => steps.foreach(st => dropIfExists(conn, st.staging)))
   }
@@ -294,48 +270,4 @@ object JdbcUpsertSink {
   /** Full staged upsert: create staging, parallel-load it, merge, drop. */
   def upsertViaStaging(df: DataFrame, cfg: Config): Unit =
     upsertAllViaStaging(Seq(df -> cfg))
-
-  /** Direct per-partition upsert (no staging table) via the portable
-    * UPDATE-then-INSERT pattern — Derby's MERGE only accepts base tables as
-    * source, and this shape works on every JDBC engine. Executors run in
-    * parallel, one transaction per partition; retry-safe because the
-    * operation is idempotent per content-keyed row. At scale prefer
-    * `upsertViaStaging` (set-based MERGE inside the database). */
-  def upsert(df: DataFrame, cfg: Config): Unit = {
-    val schema = df.schema
-    val colNames = schema.fieldNames.toSeq
-    val attrs = colNames.filterNot(cfg.keyCols.contains)
-    require(attrs.nonEmpty,
-      "upsert needs at least one non-key column (all-key link tables have " +
-        "nothing to UPDATE — use upsertViaStaging, whose MERGE skips the " +
-        "matched clause)")
-    val updateSql =
-      s"UPDATE ${cfg.table} SET ${attrs.map(a => s"$a = ?").mkString(", ")} " +
-        s"WHERE ${cfg.keyCols.map(k => s"$k = ?").mkString(" AND ")}"
-    val insertSql =
-      s"INSERT INTO ${cfg.table} (${colNames.mkString(", ")}) VALUES (${colNames.map(_ => "?").mkString(", ")})"
-    val url = cfg.url
-    val fieldIdx = schema.fieldNames.zipWithIndex.toMap
-    // UPDATE binds the attrs, then the keys; INSERT binds every column
-    val updFields = (attrs ++ cfg.keyCols).map(fieldIdx)
-    df.queryExecution.toRdd.foreachPartition { (rows: Iterator[InternalRow]) =>
-      if (rows.nonEmpty) {
-        val bind = binders(schema)
-        val conn = DriverManager.getConnection(url)
-        try {
-          conn.setAutoCommit(false)
-          val upd = conn.prepareStatement(updateSql)
-          val ins = conn.prepareStatement(insertSql)
-          rows.foreach { r =>
-            updFields.zipWithIndex.foreach { case (f, i) => bind(f)(upd, i + 1, r) }
-            if (upd.executeUpdate() == 0) {
-              bind.indices.foreach(i => bind(i)(ins, i + 1, r))
-              ins.executeUpdate()
-            }
-          }
-          conn.commit()
-        } finally conn.close()
-      }
-    }
-  }
 }

@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.JdbcUpsertSink
 import graft.sources.JdbcUpsertSink.Config
 
-/** Exercises the staged + direct JDBC upsert paths against embedded Derby
-  * (the JDBC engine shipped with Spark — no external DB needed). */
+/** Exercises the staged JDBC upsert path against embedded Derby (the JDBC
+  * engine shipped with Spark — no external DB needed). */
 class JdbcUpsertSinkSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -44,13 +44,6 @@ class JdbcUpsertSinkSpec extends AnyFunSuite {
     // re-running the same batch must be a no-op (reference idempotency)
     JdbcUpsertSink.upsertViaStaging(batch, Config(url, "t1", Seq("k")))
     assert(fetchAll("t1") == Map(1 -> ("one", 1.0), 2 -> ("two-v2", 2.5), 3 -> ("three", 3.0)))
-  }
-
-  test("direct per-partition MERGE upsert") {
-    freshTarget("t2")
-    val batch = Seq((1, "one-v2", 1.5), (4, "four", 4.0)).toDF("k", "name", "val").repartition(2)
-    JdbcUpsertSink.upsert(batch, Config(url, "t2", Seq("k"), batchSize = 1))
-    assert(fetchAll("t2") == Map(1 -> ("one-v2", 1.5), 2 -> ("two", 2.0), 4 -> ("four", 4.0)))
   }
 
   test("staging binds every supported type from InternalRows, nulls included") {

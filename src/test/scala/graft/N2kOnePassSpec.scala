@@ -8,10 +8,11 @@ import graft.api.N2kBinding
 
 /** r16 optimization pin: `importPairSummaryOnePass` (one aggregation per
   * table over the shared span, per-window conditional aggregates) is
-  * value-identical to the two-extract merge path `importPairSummary` —
-  * on the real corpus across all four actions, and on planted frames
-  * exercising the subtle branches (the anomaly per-window ratio filter,
-  * attribute-difference updates, null-key validation aborts). */
+  * value-identical to `importPairSummary`, two imports through the path
+  * that writes the database — on the real corpus across all four
+  * actions, and on planted frames exercising the subtle branches (the
+  * anomaly per-window ratio filter, attribute-difference updates,
+  * null-key validation aborts in either window). */
 class N2kOnePassSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
 
@@ -83,18 +84,28 @@ class N2kOnePassSpec extends AnyFunSuite {
   }
 
   test("planted: null keys abort the one-pass import loudly") {
-    val rows = Seq(
+    def withNullPart(rows: Seq[(Long, Long, String, Double, Int, String, String)]) =
+      plantedSpan(rows)
+        .withColumn("l_partkey",
+          when(col("l_partkey") === 2L, lit(null)).otherwise(col("l_partkey")))
+        .localCheckpoint()
+    // the null l_partkey in rows of both windows, then only in a row that
+    // falls in window 2
+    val inBoth = withNullPart(Seq(
       (1L, 1L, "N", 100.0, 1997, "A", "1997-06-01"),
-      (2L, 2L, "N", 120.0, 1997, "A", "1997-06-01"))
-    val sp = plantedSpan(rows)
-      .withColumn("l_partkey",
-        when(col("l_partkey") === 2L, lit(null)).otherwise(col("l_partkey")))
-      .localCheckpoint()
-    val e = intercept[Exception] {
-      N2kBinding.importPairSummaryOnePass(sp, c1, c2).collect()
-    }
+      (2L, 2L, "N", 120.0, 1997, "A", "1997-06-01")))
+    val inW2Only = withNullPart(Seq(
+      (1L, 1L, "N", 100.0, 1997, "A", "1997-06-01"),
+      (2L, 2L, "N", 120.0, 1998, "A", "1998-06-01")))
     def messages(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
-    assert(messages(e).exists(_.contains("null-key")))
+    val spKeyTables = N2kBinding.Graph.filter(_.keyCols.contains("sp_key")).map(_.name)
+    val named = s"validation failed: (${spKeyTables.mkString("|")}) has a null key".r
+    for (sp <- Seq(inBoth, inW2Only)) {
+      val e = intercept[Exception] {
+        N2kBinding.importPairSummaryOnePass(sp, c1, c2).collect()
+      }
+      assert(messages(e).exists(named.findFirstIn(_).isDefined), s"got: ${messages(e)}")
+    }
   }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.api.N2kBinding
+import graft.sources.JdbcUpsertSink
 
 /** The concrete n2kresult binding against a real database: all fourteen
   * tables (7 dims, 2 links, analysis/anomaly/observation/result facts and
@@ -19,31 +20,18 @@ class N2kStoreSpec extends AnyFunSuite {
   private val url = "jdbc:derby:memory:n2kdb;create=true"
   private val dir = "/root/testdata/sf0.001"
 
-  private def ddlFor(t: N2kBinding.Table): String = {
-    val cols = (t.keyCols ++ t.attrCols).map { c =>
-      val ty = c match {
-        case "ds_key" | "sp_key" | "n_items" | "n_returned" | "n_obs" | "n_est" => "BIGINT"
-        case "ship_yr" | "loc_key" | "lg_key" | "dset_key" => "INT"
-        case "revenue" | "estimate" => "DOUBLE"
-        case _ => "VARCHAR(200)"
-      }
-      s"$c $ty"
-    }
-    val stamps =
-      if (t.stamped) Seq("first_imported BIGINT", "last_imported BIGINT", "despawned BOOLEAN")
-      else Nil
-    s"CREATE TABLE n2k_${t.name} (${(cols ++ stamps).mkString(", ")}, " +
-      s"PRIMARY KEY (${t.keyCols.mkString(", ")}))"
-  }
-
-  /** (Re)create the fourteen target tables, empty, in the database at `db`. */
+  /** (Re)create the fourteen target tables, empty, in the database at
+    * `db`: each table's columns and types are its empty state's schema
+    * (the stamped tables' stamp columns included), keyed on its keyCols. */
   private def createTables(db: String): Unit = {
+    val w = N2kBinding.window(spark, dir, "1996-01-01", "1996-02-01")
     val conn = DriverManager.getConnection(db)
     try {
       for (t <- N2kBinding.Graph) {
         try conn.createStatement().executeUpdate(s"DROP TABLE n2k_${t.name}")
         catch { case _: Exception => () }
-        conn.createStatement().executeUpdate(ddlFor(t))
+        conn.createStatement().executeUpdate(JdbcUpsertSink.DerbyDialect.ddl(
+          s"n2k_${t.name}", N2kBinding.emptyState(t, w).schema, t.keyCols))
       }
     } finally conn.close()
   }
@@ -92,7 +80,7 @@ class N2kStoreSpec extends AnyFunSuite {
 
     val w1 = N2kBinding.window(spark, dir, "1996-01-01", "1998-01-01").localCheckpoint()
     val w2 = N2kBinding.window(spark, dir, "1997-01-01", "1999-01-01").localCheckpoint()
-    val st0 = N2kBinding.Graph.map(t => t.name -> N2kBinding.emptyState(t, w1)).toMap
+    val st0 = N2kBinding.empty(w1)
     val st1 = N2kBinding.importAll(st0, w1, stamp = 1L)
 
     // kill the single transaction AFTER all seven dim merges and both
@@ -145,7 +133,7 @@ class N2kStoreSpec extends AnyFunSuite {
     val db = "jdbc:derby:memory:n2kvalid;create=true"
     createTables(db)
     val w1 = N2kBinding.window(spark, dir, "1996-01-01", "1998-01-01").localCheckpoint()
-    val st0 = N2kBinding.Graph.map(t => t.name -> N2kBinding.emptyState(t, w1)).toMap
+    val st0 = N2kBinding.empty(w1)
     val st1 = importAndStore(st0, w1, 1L, db)
     val before = contents(db)
     assert(before.values.forall(_.nonEmpty))
@@ -186,7 +174,7 @@ class N2kStoreSpec extends AnyFunSuite {
         hi: String, stamp: Long) =
       importAndStore(state, N2kBinding.window(spark, dir, lo, hi).localCheckpoint(), stamp, db)
     val w0 = N2kBinding.window(spark, dir, "1996-01-01", "1996-02-01")
-    val st0 = N2kBinding.Graph.map(t => t.name -> N2kBinding.emptyState(t, w0)).toMap
+    val st0 = N2kBinding.empty(w0)
     val st1 = importWindow(st0, "1996-01-01", "1997-01-01", 1L)
 
     // jobs are counted up to a marker job: the listener bus delivers

@@ -14,7 +14,8 @@ import org.apache.spark.sql.DataFrame
   * un-truncated plan is lintable. Behavior with the property unset is
   * bit-identical to the direct calls.
   *
-  * Scope: gates in the queries package use these helpers. Operator-INTERNAL
+  * Scope: gates in the queries package and Dedup's pair-shingle frame use
+  * these helpers (LambdaLintSpec sweeps the latter). Operator-INTERNAL
   * checkpoints (GraphIterate's per-round loop frames, StageCache's
   * persisted stages, IvfIndex builds) keep direct calls — iterative
   * lineage must stay truncated even under the lint, and those operators

@@ -13,13 +13,19 @@ import org.apache.spark.sql.functions._
   * starts labeled with its own id; each round takes the min of its own and
   * its neighbors' labels; convergence when no label changes. Each round is
   * two key-shuffles (edge join + groupBy vertex) over data proportional to
-  * |E|, and rounds = graph diameter. Dedup graphs are near-clique clusters
-  * with tiny diameter (a pair graph at Jaccard ≥ 0.5 is dense within a
-  * cluster), so this converges in a handful of rounds at any corpus size —
-  * the pathological long-path graphs that need O(log n) star-contraction
-  * variants do not arise from similarity blocking. The loop state is
-  * localCheckpoint'ed each round so lineage stays flat, and the driver only
-  * ever sees one scalar (the changed-count) per round.
+  * |E|. Labels move one hop per round, so the rounds grow with the
+  * largest component's diameter: about diameter − 1 rounds after the
+  * one-hop seed, plus one that sees no change. Near-clique duplicate
+  * clusters converge in a handful of rounds, but similarity blocking does
+  * not bound the diameter: in a revision chain (page k edits page k−1)
+  * only neighbours pass the Jaccard threshold, the pair graph is a path,
+  * and a 60-doc chain with ordered ids needs 58 propagation rounds. A
+  * graph converges within `maxIters` (default 50) rounds iff its diameter
+  * is at most `maxIters`; a longer one fails the `require` below instead
+  * of returning partial labels (O(log n) star-contraction would lift the
+  * bound). The loop state is localCheckpoint'ed each round so
+  * lineage stays flat, and the driver only ever sees one scalar (the
+  * changed-count) per round.
   *
   * Fault-tolerance: `reliable = false` (default) uses localCheckpoint —
   * fast, but blocks are not replicated, so a lost executor fails the job
@@ -75,7 +81,8 @@ object Components {
       lbl = upd.select(col("id"), col("new_lbl").as("lbl"))
       it += 1
     }
-    require(changed == 0, s"components did not converge within $maxIters rounds")
+    require(changed == 0, s"components did not converge within $maxIters rounds: " +
+      s"the pair graph's diameter exceeded maxIters = $maxIters (labels move one hop per round)")
     lbl
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
+import graft.Ckpt._
 
 /** Exact + verified fuzzy dedup operators (SURVEY.md §2D). */
 object Dedup {
@@ -103,8 +104,9 @@ object Dedup {
       .repartition(docs.sparkSession.sparkContext.defaultParallelism, col(idCol))
       .select(col(idCol), shingles3(tokens(col(textCol))).as("sh"))
       // consumed as BOTH join sides below — materialize once so candidate
-      // docs tokenize+shingle a single time, not once per side
-      .localCheckpoint()
+      // docs tokenize+shingle a single time, not once per side (through
+      // Ckpt so LambdaLintSpec sees the shingle plan)
+      .cpEager
     val aSh = sh.select(col(idCol).as("a_id"), col("sh").as("a_sh"))
     val bSh = sh.select(col(idCol).as("b_id"), col("sh").as("b_sh"))
     pairs.join(aSh, "a_id").join(bSh, "b_id")

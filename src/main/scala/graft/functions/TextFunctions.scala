@@ -3,9 +3,16 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Text-analysis column functions (SURVEY.md §2C) — all composed from
-  * codegen'd Spark SQL functions (no UDFs), with DuckDB-expressible
-  * semantics so every operator has an exact oracle.
+/** Text-analysis column functions (SURVEY.md §2C) — composed from Spark
+  * SQL functions (no UDFs), with DuckDB-expressible semantics so every
+  * operator has an exact oracle.
+  *
+  * Higher-order functions (`transform`, `filter`, `aggregate`, ...) are
+  * NOT codegen'd: their lambda body is interpreted once per array element,
+  * and any input the body reads is re-evaluated with it. A body must read
+  * a costly input (tokens(), kgram_hashes, ...) through `let`, which binds
+  * it once per row to a lambda variable; LambdaLintSpec fails the build on
+  * a gate or dedup plan that evaluates such an input per element.
   *
   * Conventions shared with the oracle SQL:
   *  - tokens = lowercase, trim, script-aware extraction (TokenPattern):
@@ -103,12 +110,20 @@ object TextFunctions {
       s"ELSE array_remove(split(lower(trim($colExpr)), '$ws+'), '') END"
   }
 
+  /** `body(value)` with `value` evaluated once per row: the body sees it
+    * as a lambda variable, which any lambda nested in the body reads in
+    * O(1) per element. Without it, `transform(xs, i => f(value, i))`
+    * re-evaluates `value` for every element (the optimizer also inlines a
+    * projected alias back into a lambda, so a prior select is no guard). */
+  def let(value: Column)(body: Column => Column): Column =
+    element_at(transform(array(value), body), 1)
+
   /** Word 3-gram shingles, distinct. 0-based `get` mirrors DuckDB's 1-based
     * list indexing with null-skipping concat_ws on both sides. */
   def shingles3(toks: Column): Column =
-    array_distinct(transform(
-      sequence(lit(0), greatest(size(toks) - 3, lit(0))),
-      i => concat_ws(" ", get(toks, i), get(toks, i + 1), get(toks, i + 2))))
+    array_distinct(let(toks)(t => transform(
+      sequence(lit(0), greatest(size(t) - 3, lit(0))),
+      i => concat_ws(" ", get(t, i), get(t, i + 1), get(t, i + 2)))))
 
   /** (h1, h2) base hashes of a shingle for Carter–Wegman permutations. */
   def baseHashes(s: Column): Column = {
@@ -207,6 +222,6 @@ object TextFunctions {
 
   /** Word bigrams (non-distinct — frequency-carrying). */
   def bigrams(toks: Column): Column =
-    transform(sequence(lit(0), greatest(size(toks) - 2, lit(0))),
-      i => concat_ws(" ", get(toks, i), get(toks, i + 1)))
+    let(toks)(t => transform(sequence(lit(0), greatest(size(t) - 2, lit(0))),
+      i => concat_ws(" ", get(t, i), get(t, i + 1))))
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.dedup.{Components, Dedup, EmbedLsh, MinHashLsh, SimHash128, SimHashDedup}
-import graft.functions.TextFunctions.P
+import graft.functions.TextFunctions.{P, let}
 import graft.Ckpt._
 import Similarity.cosSql
 
@@ -173,8 +173,9 @@ object DedupQ {
       Tables.documents(s, dir)
         .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
         .withColumn("hs", expr(s"kgram_hashes(text, $k)"))
-        .withColumn("fps", expr(
-          s"array_sort(array_distinct(transform(sequence(0, greatest(size(hs) - $w, 0)), j -> array_min(slice(hs, j + 1, $w)))))"))
+        .withColumn("fps", array_sort(array_distinct(let(col("hs"))(h =>
+          transform(sequence(lit(0), greatest(size(h) - w, lit(0))),
+            j => array_min(slice(h, j + 1, lit(w))))))))
         .select(col("doc_id"), size(col("hs")).cast("long").as("n_grams"), col("fps"))
         .cpLazy
     }

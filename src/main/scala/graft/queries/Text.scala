@@ -925,10 +925,11 @@ object Text {
   /** Hashed token 5-grams of a `toks` column — ONE definition feeding
     * t_dup_spans and t_decontam_ngram on both engines (md5 so shuffles
     * carry a fixed-width key, never the gram text). */
-  private[queries] val gram5Expr: org.apache.spark.sql.Column =
-    when(size(col("toks")) >= 5,
-      expr("transform(sequence(0, size(toks) - 5), i -> md5(concat_ws(' ', get(toks, i), get(toks, i+1), get(toks, i+2), get(toks, i+3), get(toks, i+4))))"))
-      .otherwise(array().cast("array<string>"))
+  private[graft] val gram5Expr: org.apache.spark.sql.Column =
+    let(col("toks"))(t => when(size(t) >= 5,
+      transform(sequence(lit(0), size(t) - 5),
+        i => md5(concat_ws(" ", get(t, i), get(t, i + 1), get(t, i + 2), get(t, i + 3), get(t, i + 4)))))
+      .otherwise(array().cast("array<string>")))
   private[queries] val gram5Sql =
     "list_transform(range(1, len(toks) - 3), i -> md5(concat_ws(' ', toks[i], toks[i+1], toks[i+2], toks[i+3], toks[i+4])))"
 

@@ -258,6 +258,15 @@ class DedupSimilaritySpec extends AnyFunSuite {
     } finally prev.foreach(spark.sparkContext.setCheckpointDir)
   }
 
+  test("Components.labels converges iff the graph's diameter is at most maxIters, and says so") {
+    // a revision chain: the path 1-2-...-6 has diameter 5
+    val chain = (1L until 6L).map(k => (k, k + 1)).toDF("a_id", "b_id")
+    val got = graft.dedup.Components.labels(chain, maxIters = 5).as[(Long, Long)].collect().toMap
+    assert(got == (1L to 6L).map(_ -> 1L).toMap)
+    val e = intercept[IllegalArgumentException](graft.dedup.Components.labels(chain, maxIters = 4))
+    assert(e.getMessage.contains("diameter exceeded maxIters = 4"), e.getMessage)
+  }
+
   test("s_pq: every vector gets one code per subspace; codebooks actually partition the space") {
     val out = graft.queries.Similarity.sPq(spark, "/root/testdata/sf0.001").cache()
     val n = Tables.embeddings(spark, "/root/testdata/sf0.001").count()

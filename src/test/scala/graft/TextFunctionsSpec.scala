@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ColumnBridge
 import org.scalatest.funsuite.AnyFunSuite
@@ -26,6 +27,38 @@ class TextFunctionsSpec extends AnyFunSuite {
     val df = Seq("one two", "solo", "a b c d").toDF("text")
     val sizes = df.select(size(shingles3(tokens(col("text"))))).as[Int].collect().toSeq
     assert(sizes == Seq(1, 1, 2))
+  }
+
+  test("shingles3, bigrams and gram5Expr equal their per-element lambda forms, element for element") {
+    val texts: Seq[String] = Seq(null, "", "   ", "\t \n", "solo", "one two",
+      "one two three", "a b c d e", "a b c d e f g", "a b a b a b",
+      "a b a b a b a b a b a b", "我们的数据是在中国", "カタカナ の ひらがな テスト です",
+      "\tleading and trailing tabs\t", "The Quick  brown\tfox\njumps")
+    val df = texts.toDF("text").withColumn("toks", tokens(col("text")))
+    def pairOf(got: org.apache.spark.sql.Column, ref: org.apache.spark.sql.Column) =
+      df.select(got.as("got"), ref.as("ref")).as[(Option[Seq[String]], Option[Seq[String]])]
+        .collect().toSeq
+    val cases = Seq(
+      "shingles3" -> pairOf(shingles3(col("toks")), TextFunctionsSpec.shingles3Ref(col("toks"))),
+      "shingles3(tokens)" -> pairOf(shingles3(tokens(col("text"))),
+        TextFunctionsSpec.shingles3Ref(tokens(col("text")))),
+      "bigrams" -> pairOf(bigrams(col("toks")), TextFunctionsSpec.bigramsRef(col("toks"))),
+      "gram5Expr" -> pairOf(graft.queries.Text.gram5Expr, TextFunctionsSpec.gram5Ref))
+    cases.foreach { case (name, rows) =>
+      assert(rows.size == texts.size)
+      rows.zip(texts).foreach { case ((got, ref), t) =>
+        assert(got == ref, s"$name differs on ${Option(t).map(_.replace("\t", "\\t"))}")
+      }
+    }
+    // the planted inputs exercise every regime, not just the common one
+    val sh = cases.head._2.map(_._1)
+    assert(sh(0).contains(Seq("")), "null text: one empty partial shingle")
+    assert(sh(4).contains(Seq("solo")) && sh(6).contains(Seq("one two three")))
+    assert(sh(9).contains(Seq("a b a", "b a b")), "repeated shingles collapse in order")
+    assert(sh(11).exists(_.head == "我 们 的"), "Han tokenizes per character")
+    assert(cases(3)._2.map(_._1.map(_.size)) ==
+      Seq(Some(0), Some(0), Some(0), Some(0), Some(0), Some(0), Some(0), Some(1), Some(3),
+        Some(2), Some(8), Some(5), Some(1), Some(0), Some(1)))
   }
 
   test("charFingerprint is stable and order-sensitive") {
@@ -223,4 +256,23 @@ class TextFunctionsSpec extends AnyFunSuite {
     val agree = out.count { case (_, s, _, p) => s == p }
     assert(agree >= 375, s"classifier no better than chance: $agree/500 agree")
   }
+}
+
+/** The per-element lambda formulations the text n-gram functions had before
+  * they bound their input with `let` — kept as value references for the
+  * equality test above and as LambdaLintSpec's planted control. */
+object TextFunctionsSpec {
+  def shingles3Ref(toks: Column): Column =
+    array_distinct(transform(
+      sequence(lit(0), greatest(size(toks) - 3, lit(0))),
+      i => concat_ws(" ", get(toks, i), get(toks, i + 1), get(toks, i + 2))))
+
+  def bigramsRef(toks: Column): Column =
+    transform(sequence(lit(0), greatest(size(toks) - 2, lit(0))),
+      i => concat_ws(" ", get(toks, i), get(toks, i + 1)))
+
+  val gram5Ref: Column =
+    when(size(col("toks")) >= 5,
+      expr("transform(sequence(0, size(toks) - 5), i -> md5(concat_ws(' ', get(toks, i), get(toks, i+1), get(toks, i+2), get(toks, i+3), get(toks, i+4))))"))
+      .otherwise(array().cast("array<string>"))
 }

@@ -15,11 +15,12 @@ import org.apache.spark.sql.DataFrame
   * bit-identical to the direct calls.
   *
   * Scope: gates in the queries package and Dedup's pair-shingle frame use
-  * these helpers (LambdaLintSpec sweeps the latter). Operator-INTERNAL
-  * checkpoints (GraphIterate's per-round loop frames, StageCache's
-  * persisted stages, IvfIndex builds) keep direct calls — iterative
-  * lineage must stay truncated even under the lint, and those operators
-  * carry their own plan/shape specs.
+  * these helpers (LambdaLintSpec sweeps the latter). Round frames of
+  * iterative loops (`GraphIterate.converge`, the q_bfs/q_kcore/
+  * q_label_prop round folds) and operator-internal checkpoints
+  * (StageCache's persisted stages, IvfIndex builds) keep direct calls —
+  * iterative lineage must stay truncated even under the lint, and the
+  * window lint sweeps each round function on its own.
   */
 object Ckpt {
   private def bypass: Boolean = java.lang.Boolean.getBoolean("graft.lint.noCheckpoint")

@@ -133,10 +133,6 @@ object TextFunctions {
       (conv(substring(m, 16, 15), 16, 10).cast("long") % P).as("h2"))
   }
 
-  /** i-th minhash over a pre-hashed shingle array (array of (h1,h2)). */
-  def minhash(hashed: Column, i: Int): Column =
-    array_min(transform(hashed, h => (h.getField("h1") + lit(i.toLong) * h.getField("h2")) % P))
-
   /** BPE-ish token count: letter runs, digit runs, single punctuation. */
   def bpeTokenCount(text: Column): Column =
     size(regexp_extract_all(lower(text), lit(s"[a-z]+|[0-9]+|[^a-z0-9 \\t\\n\\r\\f]"), lit(0)))

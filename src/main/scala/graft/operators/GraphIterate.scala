@@ -1,51 +1,74 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ObservationBridge.awaitLong
 
-/** CONVERGENCE-CHECKED iteration for the edge-sized graph loops (BFS
-  * relaxation, k-core peeling, synchronous label propagation) — the
-  * Hierarchy.resolve contract lifted to the other iterative gates: a
-  * fixed unroll silently under-converges the moment the graph's diameter
-  * or peeling depth outgrows the constant (exactly what happens at 100×
-  * data), so every loop here runs to a PROVEN fixed point or fails
-  * loudly.
+/** CONVERGENCE-CHECKED iteration: one driver, [[converge]], runs every
+  * iterative operator (BFS relaxation, k-core peeling, synchronous label
+  * propagation here; Hierarchy.resolve's pointer doubling; Components'
+  * min-label propagation). A fixed unroll silently under-converges the
+  * moment the graph's diameter or peeling depth outgrows the constant
+  * (exactly what happens at 100× data), so each of these runs to a PROVEN
+  * fixed point or fails loudly.
   *
-  * Mechanics shared by all three:
-  *  - each round is one edge-keyed join + one vertex-keyed aggregate
-  *    (work ∝ |E|), state localCheckpoint'd per round to keep lineage
-  *    flat — identical plans to the unrolled gates;
-  *  - the convergence signal rides the checkpoint job as an observe()
-  *    metric (the Hierarchy/Components discipline — no second pass);
-  *  - `strict = true` (the production default) materializes each round
-  *    (eager localCheckpoint, metric on that job), EARLY-EXITS at the
-  *    proven fixed point, and RAISES on round exhaustion instead of
-  *    returning a truncated answer;
-  *  - `strict = false` is the FIXED-DEPTH semantics the oracle gates pin
-  *    (exactly `maxRounds` rounds): rounds stay LAZY (lazy
-  *    localCheckpoint, no per-round job), so the plan and cost are
-  *    identical to a hand-unrolled loop — convergence bookkeeping costs
-  *    the gates nothing (measured: eager rounds were +0.7 s on q_kcore
-  *    at sf0.1).
+  * Each round is one edge-keyed join + one vertex-keyed aggregate (work ∝
+  * |E|), materialized by one eager checkpoint that keeps the lineage flat;
+  * the convergence signal rides that checkpoint job as observe() metrics,
+  * so a round costs no second pass.
+  *
+  * The oracle gates (q_bfs, q_kcore, q_label_prop) pin FIXED-DEPTH
+  * semantics instead: they fold [[bfsRound]], [[kcoreRound]] and
+  * [[labelPropRound]] a constant number of times under lazy
+  * `localCheckpoint(false)`, so their plan and cost are those of a
+  * hand-unrolled loop (measured: eager rounds were +0.7 s on q_kcore at
+  * sf0.1).
   */
 object GraphIterate {
 
-  private def exhausted(what: String, maxRounds: Int): Nothing =
-    throw new IllegalStateException(
-      s"$what did not converge within $maxRounds rounds — the graph's " +
-        "diameter/peeling depth exceeds the round budget; raise maxRounds " +
-        "(a truncated answer is never silently returned under strict=true)")
+  /** Eager checkpoint of an iterative operator's state: reliable
+    * `checkpoint()` when the session has a checkpoint dir, so long loops
+    * survive executor loss, else `localCheckpoint()` (Spark ML's
+    * PeriodicCheckpointer uses the same rule). */
+  private[graft] def materialize(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
+    else df.localCheckpoint()
 
-  /** BFS distance relaxation from `seed` (v, dist) over directed adjacency
-    * `bi` (v, nbr): dist' = min(dist, min over in-neighbors dist+1) until a
-    * round changes nothing. Monotone — rows only append and distances only
-    * decrease — so "(row count, Σdist) unchanged" is a SOUND fixed-point
-    * test and rides the round's checkpoint job as two observe() metrics.
-    * Returns (v, dist) for every reached vertex. */
-  /** ONE bfs relaxation round — factored `private[graft]` so the window
-    * lint sweeps a representative round plan: the loop checkpoints per
-    * round, which truncates lineage and hides every round from any
+  /** The convergence loop. Each round runs `round(state)`, observes
+    * `metrics` on it and [[materialize]]s it — one job per round. The
+    * metrics are read off that job; one that never lands is recomputed by
+    * a single `agg(metrics)` over the round's materialized frame, so the
+    * check is never skipped. The loop returns the first round whose
+    * metrics satisfy `done(previous round's, this round's)` (the previous
+    * is empty on round 1) and throws `IllegalStateException(exhausted)`
+    * after `maxRounds` rounds without. A round's frame may carry a flag
+    * column its metrics read; the next round must ignore it. `seed` is
+    * used as given: callers choose whether to checkpoint it. */
+  def converge(seed: DataFrame, maxRounds: Int, exhausted: => String)(
+      round: DataFrame => DataFrame)(metrics: Column*)(
+      done: (Seq[Long], Seq[Long]) => Boolean): DataFrame = {
+    val named = metrics.zipWithIndex.map { case (m, i) => m.as(s"m$i") }
+    @annotation.tailrec
+    def loop(state: DataFrame, prev: Seq[Long], r: Int): DataFrame = {
+      if (r == maxRounds) throw new IllegalStateException(exhausted)
+      val obs = new Observation()
+      val next = materialize(round(state).observe(obs, named.head, named.tail: _*))
+      lazy val again = next.agg(named.head, named.tail: _*).head()
+      val cur = named.indices.map(i => awaitLong(obs, s"m$i")(
+        if (again.isNullAt(i)) 0L else again.getLong(i))) // metric lost
+      if (done(prev, cur)) next else loop(next, cur, r + 1)
+    }
+    loop(seed, Seq.empty, 0)
+  }
+
+  private def notConverged(what: String, maxRounds: Int): String =
+    s"$what did not converge within $maxRounds rounds — the graph's " +
+      "diameter/peeling depth exceeds the round budget; raise maxRounds " +
+      "(a truncated answer is never silently returned)"
+
+  /** ONE bfs relaxation round — factored `private[graft]` so q_bfs folds
+    * it and the window lint sweeps a representative round plan: every
+    * round is checkpointed, which truncates lineage and hides it from any
     * gate-level plan sweep (WindowLintSpec "operator rounds"). */
   private[graft] def bfsRound(bi: DataFrame, dist: DataFrame): DataFrame =
     dist.join(bi, "v")
@@ -53,38 +76,17 @@ object GraphIterate {
       .unionByName(dist)
       .groupBy(col("v")).agg(min(col("dist")).as("dist"))
 
-  def bfs(bi: DataFrame, seed: DataFrame, maxRounds: Int,
-      strict: Boolean = true): DataFrame = {
-    def step(dist: DataFrame): DataFrame = bfsRound(bi, dist)
-    if (!strict) { // fixed-depth gate semantics: lazy fused rounds
-      var dist = seed.localCheckpoint(false)
-      for (_ <- 1 to maxRounds) dist = step(dist).localCheckpoint(false)
-      return dist
-    }
-    var dist = seed.localCheckpoint()
-    var prev = (-1L, -1L)
-    var round = 0
-    while (round < maxRounds) {
-      val obs = new Observation()
-      val next = step(dist)
-        .observe(obs, count(lit(1)).as("n"), sum(col("dist")).as("s"))
-      dist = next.localCheckpoint()
-      val cur = (awaitLong(obs, "n")(dist.count()),
-        awaitLong(obs, "s")(dist.agg(sum(col("dist"))).head.getLong(0)))
-      if (cur == prev) return dist // fixed point: further rounds are identity
-      prev = cur
-      round += 1
-    }
-    exhausted("BFS", maxRounds)
-  }
+  /** BFS distance relaxation from `seed` (v, dist) over directed adjacency
+    * `bi` (v, nbr): dist' = min(dist, min over in-neighbors dist+1) until a
+    * round changes nothing. Monotone — rows only append and distances only
+    * decrease — so "(row count, Σdist) unchanged" is a SOUND fixed-point
+    * test. Returns (v, dist) for every reached vertex. */
+  def bfs(bi: DataFrame, seed: DataFrame, maxRounds: Int): DataFrame =
+    converge(materialize(seed), maxRounds, notConverged("BFS", maxRounds))(
+      bfsRound(bi, _))(count(lit(1)), sum(col("dist")))(_ == _)
 
-  /** k-core peeling over undirected edges `und` (a, b): simultaneously
-    * drop vertices with degree < k until no round removes anything.
-    * Monotone — the edge set only shrinks — so "edge count unchanged" is
-    * a sound fixed-point test, observed on the round's checkpoint job.
-    * Returns the surviving edge list (a, b). */
-  /** ONE k-core peel round — lint-visible for the same reason as
-    * [[bfsRound]]. */
+  /** ONE k-core peel round — foldable and lint-visible for the same reason
+    * as [[bfsRound]]. */
   private[graft] def kcoreRound(edges: DataFrame, k: Int): DataFrame = {
     val bi = edges.select(col("a").as("v"), col("b").as("nbr"))
       .unionByName(edges.select(col("b").as("v"), col("a").as("nbr")))
@@ -97,51 +99,20 @@ object GraphIterate {
       .select(col("a"), col("b"))
   }
 
-  def kcore(und: DataFrame, k: Int, maxRounds: Int,
-      strict: Boolean = true): DataFrame = {
-    def step(edges: DataFrame): DataFrame = kcoreRound(edges, k)
-    if (!strict) { // fixed-depth gate semantics: lazy fused rounds
-      var edges = und
-      for (_ <- 1 to maxRounds) edges = step(edges).localCheckpoint(false)
-      return edges
-    }
-    var edges = und.localCheckpoint()
-    var prev = -1L
-    var round = 0
-    while (round < maxRounds) {
-      val obs = new Observation()
-      val next = step(edges).observe(obs, count(lit(1)).as("n"))
-      edges = next.localCheckpoint()
-      val cur = awaitLong(obs, "n")(edges.count())
-      if (cur == prev) return edges // nothing peeled: stable core reached
-      prev = cur
-      round += 1
-    }
-    exhausted("k-core peeling", maxRounds)
-  }
+  /** k-core peeling over undirected edges `und` (a, b): simultaneously
+    * drop vertices with degree < k until no round removes anything.
+    * Monotone — the edge set only shrinks — so "edge count unchanged" is
+    * a sound fixed-point test. Returns the surviving edge list (a, b). */
+  def kcore(und: DataFrame, k: Int, maxRounds: Int): DataFrame =
+    converge(materialize(und), maxRounds, notConverged("k-core peeling", maxRounds))(
+      kcoreRound(_, k))(count(lit(1)))(_ == _)
 
-  /** Synchronous label propagation over directed adjacency `edges`
-    * (v, nbr), labels seeded as vertex ids, deterministic argmax
-    * (count desc, label asc). NOT monotone — sync LPA can 2-cycle on
-    * bipartite structures — so the fixed-point test is EXACT: each
-    * round's result joins back to the previous labels and the changed-
-    * vertex count rides the checkpoint job as an observe() metric.
-    * On SYMMETRIC adjacency every vertex keeps a row each round and the
-    * inner join is total; on a general DIRECTED adjacency a vertex whose
-    * out-neighbors all lack labels drops out of step(), which the join
-    * alone cannot observe — so the row count rides the same observe()
-    * (the bfs discipline) and a count change is treated as
-    * non-convergence: strict mode then exhausts rather than return a
-    * silently partial labeling.
-    * Returns (v, label). Exhaustion under strict raises — for LPA that
-    * can mean oscillation, which a larger budget will NOT fix; the error
-    * says so. */
   /** ONE synchronous label-propagation round (deterministic argmax) —
-    * lint-visible for the same reason as [[bfsRound]]. The argmax window
-    * partitions by the VERTEX id: |V| partitions of ≤|neighbor labels|
-    * rows each, the keyed-scalable shape (a bounded partition key here —
-    * e.g. the label — would single-reduce at 100×; the lint's negative
-    * control pins that). */
+    * foldable and lint-visible for the same reason as [[bfsRound]]. The
+    * argmax window partitions by the VERTEX id: |V| partitions of
+    * ≤|neighbor labels| rows each, the keyed-scalable shape (a bounded
+    * partition key here — e.g. the label — would single-reduce at 100×;
+    * the lint's negative control pins that). */
   private[graft] def labelPropRound(edges: DataFrame, labels: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("v")).orderBy(col("n").desc, col("label"))
@@ -153,49 +124,42 @@ object GraphIterate {
   }
 
   /** The labelProp identity seed — exposed with [[labelPropRound]] so the
-    * lint builds a faithful round-1 plan. */
+    * gate and the lint build a faithful round-1 plan. */
   private[graft] def labelPropSeed(edges: DataFrame): DataFrame =
     edges.select(col("v")).distinct()
       .select(col("v"), col("v").as("label"))
 
-  def labelProp(edges: DataFrame, maxRounds: Int,
-      strict: Boolean = true): DataFrame = {
-    def step(labels: DataFrame): DataFrame = labelPropRound(edges, labels)
-    val seed = labelPropSeed(edges)
-    if (!strict) { // fixed-depth gate semantics: lazy fused rounds
-      var labels = seed.localCheckpoint(false)
-      for (_ <- 1 to maxRounds) labels = step(labels).localCheckpoint(false)
-      return labels
-    }
-    var labels = seed.localCheckpoint()
-    val seedN = labels.count()
-    var round = 0
-    while (round < maxRounds) {
-      val obs = new Observation()
-      val next = step(labels)
-        .join(labels.select(col("v"), col("label").as("prev_label")), "v")
-        .observe(obs,
-          sum(when(col("label") =!= col("prev_label"), 1L).otherwise(0L)).as("changed"),
-          count(lit(1)).as("n"))
-        .select(col("v"), col("label"))
-      labels = next.localCheckpoint()
-      val changed = awaitLong(obs, "changed")(-1L)
-      val curN = awaitLong(obs, "n")(-1L)
-      // fixed point requires BOTH no label flips AND every seed vertex
-      // still holding a row — on directed adjacency step() can silently
-      // drop vertices whose out-neighbors all lack labels, which the
-      // inner join alone cannot observe. Loss is permanent (the join is
-      // inner), so a lossy run exhausts with the loud error below.
-      if (changed == 0L && curN == seedN) return labels
-      round += 1
-    }
-    throw new IllegalStateException(
+  /** Synchronous label propagation over directed adjacency `edges`
+    * (v, nbr), labels seeded as vertex ids, deterministic argmax
+    * (count desc, label asc). NOT monotone — sync LPA can 2-cycle on
+    * bipartite structures — so the fixed-point test is EXACT: each
+    * round's result joins back to the previous labels and flags the
+    * vertices whose label changed. On SYMMETRIC adjacency every vertex
+    * keeps a row each round and the inner join is total; on a general
+    * DIRECTED adjacency a vertex whose out-neighbors all lack labels drops
+    * out of the round, which the flag alone cannot observe — so the row
+    * count is a second metric, and a fixed point needs both no flips AND
+    * every seed vertex still present. Loss is permanent (the join is
+    * inner), so a lossy run exhausts. Returns (v, label). Exhaustion can
+    * mean oscillation, which a larger budget will NOT fix; the error says
+    * so. */
+  def labelProp(edges: DataFrame, maxRounds: Int): DataFrame = {
+    val seed = materialize(labelPropSeed(edges))
+    val seedN = seed.count()
+    converge(seed, maxRounds,
       s"label propagation did not stabilize within $maxRounds rounds — " +
         "either raise maxRounds or, if the change count is oscillating " +
-        "(sync LPA 2-cycles on bipartite structure), switch the consumer " +
-        "to a fixed-round semantics (strict = false); if the adjacency is " +
-        "DIRECTED and vertices dropped out (sinks with unlabeled " +
-        "out-neighborhoods), no budget converges — symmetrize the " +
-        "adjacency instead")
+        "(sync LPA 2-cycles on bipartite structure), run a fixed number " +
+        "of rounds by folding labelPropRound (as q_label_prop does); if the " +
+        "adjacency is DIRECTED and vertices dropped out (sinks with " +
+        "unlabeled out-neighborhoods), no budget converges — symmetrize " +
+        "the adjacency instead")(labels =>
+      labelPropRound(edges, labels)
+        .join(labels.select(col("v"), col("label").as("prev_label")), "v")
+        .select(col("v"), col("label"),
+          (col("label") =!= col("prev_label")).as("changed")))(
+      sum(when(col("changed"), 1L).otherwise(0L)), count(lit(1)))(
+      (_, cur) => cur(0) == 0L && cur(1) == seedN)
+      .select(col("v"), col("label"))
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.Ckpt._
+import graft.operators.GraphIterate
 
 /** Graph analytics over relational data (SURVEY.md §2A) — the iterative
   * and join-explosive workloads that complete the engine's graph story
@@ -241,12 +242,11 @@ object GraphQ {
     val edges = und.select(col("a").as("v"), col("b").as("nbr"))
       .unionByName(und.select(col("b").as("v"), col("a").as("nbr")))
       .cpLazy
-    // GraphIterate.labelProp: strict=false is the oracle-pinned fixed
-    // unroll (lazy fused rounds — identical plan/cost to hand-unrolling);
-    // production callers use strict=true for convergence-checked rounds
-    // with early exit and loud exhaustion (VERDICT r11 missing #2).
-    val labels = graft.operators.GraphIterate.labelProp(
-      edges, maxRounds = LpIters, strict = false)
+    // the oracle pins exactly LpIters rounds: lazy fused rounds, the plan
+    // and cost of a hand-unrolled loop (no convergence check)
+    val seed = GraphIterate.labelPropSeed(edges).localCheckpoint(false)
+    val labels = (1 to LpIters).foldLeft(seed)(
+      (l, _) => GraphIterate.labelPropRound(edges, l).localCheckpoint(false))
     val comm = labels.groupBy(col("label")).agg(count(lit(1)).as("size"))
     // top-25 as TakeOrderedAndProject (orderBy().limit() — per-partition
     // heaps, 25-row driver merge); the rank window then sees 25 rows, never
@@ -392,16 +392,14 @@ object GraphQ {
     * Scale shape per round: one degree aggregation + two semi-joins
     * restricting the edge list — work ∝ |E| per round, the same
     * iterate-and-shuffle contract as q_pagerank/q_label_prop; edges
-    * localCheckpoint between rounds. Rounds run through
-    * GraphIterate.kcore — convergence-checked like Hierarchy's pointer
-    * doubling, early-exiting at the fixed point. */
+    * localCheckpoint between rounds. The rounds are
+    * GraphIterate.kcoreRound folded exactly KCoreRounds times, as the
+    * oracle unrolls them; GraphIterate.kcore is the convergence-checked
+    * form. */
   def qKcore(s: SparkSession, dir: String): DataFrame = {
     val (und, _) = edgeFrames(s, dir)
-    // GraphIterate.kcore: strict=false is the oracle-pinned fixed unroll
-    // (lazy fused rounds); strict=true gives production the convergence-
-    // checked early-exit/raise contract (VERDICT r11 missing #2).
-    val edges = graft.operators.GraphIterate.kcore(
-      und, k = KCoreK, maxRounds = KCoreRounds, strict = false)
+    val edges = (1 to KCoreRounds).foldLeft(und)(
+      (e, _) => GraphIterate.kcoreRound(e, KCoreK).localCheckpoint(false))
     edges.select(col("a").as("v")).unionByName(edges.select(col("b").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("deg"))
       .orderBy(col("v"))
@@ -438,16 +436,14 @@ object GraphQ {
     * Scale shape per round: one edge join + one vertex-keyed min — the
     * same work ∝ |E| contract as q_pagerank/q_label_prop/q_kcore;
     * distances localCheckpoint between rounds. Output is
-    * ≤rounds+2 rows. Rounds run through GraphIterate.bfs —
-    * convergence-checked like Hierarchy's pointer doubling. */
+    * ≤rounds+2 rows. The rounds are GraphIterate.bfsRound folded exactly
+    * BfsRounds times, as the oracle unrolls them; GraphIterate.bfs is the
+    * convergence-checked form. */
   def qBfs(s: SparkSession, dir: String): DataFrame = {
     val (_, bi) = edgeFrames(s, dir)
     val seed = bi.agg(min(col("v")).as("v")).select(col("v"), lit(0L).as("dist"))
-    // GraphIterate.bfs: strict=false is the oracle-pinned fixed unroll
-    // (lazy fused rounds); strict=true gives production the convergence-
-    // checked early-exit/raise contract (VERDICT r11 missing #2).
-    val dist = graft.operators.GraphIterate.bfs(
-      bi, seed, maxRounds = BfsRounds, strict = false)
+    val dist = (1 to BfsRounds).foldLeft(seed.localCheckpoint(false))(
+      (d, _) => GraphIterate.bfsRound(bi, d).localCheckpoint(false))
     bi.select(col("v")).distinct()
       .join(dist, Seq("v"), "left")
       .select(coalesce(col("dist"), lit(-1L)).as("dist"))

@@ -214,48 +214,38 @@ class DedupSimilaritySpec extends AnyFunSuite {
   }
 
   test("Components: ONE job per propagation round — the changed-count rides the round's observe metric") {
-    // with AQE off, an eager localCheckpoint is exactly 2 jobs in this
-    // Spark version (plan compute + the checkpoint's cache-reading
-    // count), so the path graph 1-2-3-4 (one-hop seed, then 3 rounds to
-    // converge) costs (edges + seed + 3 rounds) × 2 = 10; a separate
+    // the path graph 1-2-3-4 (one-hop seed, then 3 rounds to converge)
+    // costs (edges + seed + 3 rounds) × 2 = 10 with AQE off; a separate
     // changed-count() pass per round — what the observe() fold removed —
     // would add 3 more and fail this pin
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.sparkContext.setJobGroup("components-jobs", "")
-    try {
+    val jobs = SparkTestBase.jobsWithAqeOff("components-jobs") {
       val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("a_id", "b_id")
       val got = graft.dedup.Components.labels(pairs).as[(Long, Long)].collect().toMap
       assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.conf.set("spark.sql.adaptive.enabled", prev)
     }
-    // poll the async status store until the job count stabilizes
-    def jobs(): Int = spark.sparkContext.statusTracker.getJobIdsForGroup("components-jobs").length
-    var last = -1; var cur = jobs(); var i = 0
-    while (cur != last && i < 50) { last = cur; Thread.sleep(100); cur = jobs(); i += 1 }
     // the final collect() in the assertion above is +1 on top of the 10
-    assert(cur == 11, s"expected 10 labels jobs + 1 collect, got $cur")
+    assert(jobs == 11, s"expected 10 labels jobs + 1 collect, got $jobs")
   }
 
   test("Components.labels with reliable checkpointing matches the localCheckpoint path") {
     import graft.dedup.Components
+    // path graph 1-2-3-4, separate pair (10,11)
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("a_id", "b_id")
+    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L)
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toFile
+    def files(): Int = org.apache.commons.io.FileUtils.listFiles(ckpt, null, true).size
     val prev = spark.sparkContext.getCheckpointDir
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    spark.sparkContext.setCheckpointDir(ckpt)
     try {
-      // path graph 1-2-3-4, separate pair (10,11), singleton via canonicalize
-      val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("a_id", "b_id")
-      def canon(reliable: Boolean) =
-        Components.labels(pairs, reliable = reliable)
-          .as[(Long, Long)].collect().toMap
-      val viaReliable = canon(reliable = true)
-      assert(viaReliable == canon(reliable = false))
-      assert(viaReliable == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
-      // reliable state actually landed in the checkpoint dir
-      assert(new java.io.File(ckpt).listFiles().nonEmpty, "checkpoint dir must hold RDD state")
-    } finally prev.foreach(spark.sparkContext.setCheckpointDir)
+      // with a checkpoint dir, the loop state lands there as RDD files
+      spark.sparkContext.setCheckpointDir(ckpt.toString)
+      assert(Components.labels(pairs).as[(Long, Long)].collect().toMap == want)
+      val written = files()
+      assert(written > 0, "checkpoint dir must hold RDD state")
+      // without one, the same labels come from localCheckpoint and no file lands
+      spark.sparkContext.setCheckpointDir(null)
+      assert(Components.labels(pairs).as[(Long, Long)].collect().toMap == want)
+      assert(files() == written, "no checkpoint dir set, yet RDD files were written")
+    } finally spark.sparkContext.setCheckpointDir(prev.orNull)
   }
 
   test("Components.labels converges iff the graph's diameter is at most maxIters, and says so") {
@@ -263,7 +253,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val chain = (1L until 6L).map(k => (k, k + 1)).toDF("a_id", "b_id")
     val got = graft.dedup.Components.labels(chain, maxIters = 5).as[(Long, Long)].collect().toMap
     assert(got == (1L to 6L).map(_ -> 1L).toMap)
-    val e = intercept[IllegalArgumentException](graft.dedup.Components.labels(chain, maxIters = 4))
+    val e = intercept[IllegalStateException](graft.dedup.Components.labels(chain, maxIters = 4))
     assert(e.getMessage.contains("diameter exceeded maxIters = 4"), e.getMessage)
   }
 

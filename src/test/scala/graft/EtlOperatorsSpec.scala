@@ -335,7 +335,7 @@ class EtlOperatorsSpec extends AnyFunSuite {
     import spark.implicits._
     // 3-cycle: no root is ever reachable; must throw, never return
     val cyc = Seq((1L, Some(3L)), (2L, Some(1L)), (3L, Some(2L))).toDF("key", "parent")
-    val e1 = intercept[IllegalArgumentException] {
+    val e1 = intercept[IllegalStateException] {
       graft.operators.Hierarchy.resolve(cyc, "key", "parent", maxRounds = 5).collect()
     }
     assert(e1.getMessage.contains("did not resolve"))
@@ -343,7 +343,7 @@ class EtlOperatorsSpec extends AnyFunSuite {
     // not a quietly-wrong "root"
     val deep = ((1L to 40L).map(k => (k, Some(k - 1))) :+ ((0L, None)))
       .toDF("key", "parent")
-    val e2 = intercept[IllegalArgumentException] {
+    val e2 = intercept[IllegalStateException] {
       graft.operators.Hierarchy.resolve(deep, "key", "parent", maxRounds = 3).collect()
     }
     assert(e2.getMessage.contains("did not resolve"))
@@ -356,15 +356,42 @@ class EtlOperatorsSpec extends AnyFunSuite {
 
   test("Hierarchy.resolve: reliable-checkpoint path yields identical resolution") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("hier-ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
     val nodes = ((1L to 12L).map(k => (k, Some(k - 1))) :+ ((0L, None)))
       .toDF("key", "parent")
-    val local = graft.operators.Hierarchy.resolve(nodes, "key", "parent")
+    def resolved() = graft.operators.Hierarchy.resolve(nodes, "key", "parent")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val rel = graft.operators.Hierarchy.resolve(nodes, "key", "parent", reliable = true)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(rel == local)
+    val ckpt = java.nio.file.Files.createTempDirectory("hier-ckpt").toFile
+    def files(): Int = org.apache.commons.io.FileUtils.listFiles(ckpt, null, true).size
+    val prev = spark.sparkContext.getCheckpointDir
+    try {
+      // with a checkpoint dir, each round's state lands there as RDD files
+      spark.sparkContext.setCheckpointDir(ckpt.toString)
+      val rel = resolved()
+      val written = files()
+      assert(written > 0, "checkpoint dir must hold RDD state")
+      // without one, rounds use localCheckpoint and no file lands
+      spark.sparkContext.setCheckpointDir(null)
+      assert(resolved() == rel)
+      assert(files() == written, "no checkpoint dir set, yet RDD files were written")
+      assert(rel == (0L to 12L).map(k => (k, 0L, k)).toSet)
+    } finally spark.sparkContext.setCheckpointDir(prev.orNull)
+  }
+
+  test("Hierarchy.resolve: ONE job per doubling round — the jump-hit count rides the round's observe metric") {
+    import spark.implicits._
+    // chain 0 <- 1 <- ... <- 8: pointer doubling needs 3 rounds that jump
+    // and a 4th that jumps nothing. The seed stays lazy, and with AQE off
+    // the 4 round checkpoints cost 6 jobs. A second hit-count pass per
+    // round would add at least 4 more and fail this pin.
+    val nodes = ((1L to 8L).map(k => (k, Some(k - 1))) :+ ((0L, None)))
+      .toDF("key", "parent")
+    val jobs = SparkTestBase.jobsWithAqeOff("hierarchy-jobs") {
+      val out = graft.operators.Hierarchy.resolve(nodes, "key", "parent")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(out == (0L to 8L).map(k => (k, 0L, k)).toSet)
+    }
+    // the final collect() in the assertion above is +1 on top of the 6
+    assert(jobs == 7, s"expected 6 resolve jobs + 1 collect, got $jobs")
   }
 
   test("KAnon.audit: exactly the sub-k groups, at-k groups stay invisible") {

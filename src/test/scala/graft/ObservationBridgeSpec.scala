@@ -5,10 +5,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ObservationBridge
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The non-blocking metric read every bounded poll relies on
-  * (GraphIterate.metric, Hierarchy.resolve, Components, the n2k key
-  * checks): before the metrics land it must read as empty — so the poll
-  * waits — and never throw. */
+/** The non-blocking metric read the convergence driver's bounded poll
+  * relies on (`GraphIterate.converge`): before the metrics land it must
+  * read as empty — so the poll waits — and never throw. */
 class ObservationBridgeSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
 

@@ -18,17 +18,21 @@ object Bench {
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     // SPARK_GRAFT_BENCH_ONLY=q_a,q_b limits the run for local perf
     // iteration (same contract as Verify's SPARK_GRAFT_ONLY; driver never
-    // sets it, so the round bench always measures the full surface)
+    // sets it, so the round bench always measures the full surface). The
+    // listed gates run in the listed order, so a gate and its control can
+    // be A/B'd in both orders: ctl,gate then gate,ctl.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .filter(_.nonEmpty)
     only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, s"SPARK_GRAFT_BENCH_ONLY names unknown queries: $unknown")
+      val unknown = names.filterNot(SparkEntry.queries.contains)
+      require(unknown.isEmpty, s"SPARK_GRAFT_BENCH_ONLY names unknown queries: ${unknown.mkString(", ")}")
+      val repeated = names.diff(names.distinct).distinct
+      require(repeated.isEmpty, s"SPARK_GRAFT_BENCH_ONLY repeats: ${repeated.mkString(", ")}")
     }
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
+    val selected = only.fold(SparkEntry.queries.toSeq.sortBy(_._1))(
+      _.map(name => name -> SparkEntry.queries(name)))
+    val results = selected.map { case (name, fn) =>
       // toRdd.count() materializes every output row of the optimized plan —
       // .count() would let Catalyst prune unfiltered windows/sorts away.
       // Failures report as -1, never as a plausible-looking time.

@@ -16,8 +16,10 @@ import graft.functions.TextFunctions
   * Scale shape is the same as d_curate's (SURVEY.md §5.1): the quality
   * filter is narrow and runs FIRST so signatures are computed only for
   * survivors; exact-dup groups collapse to one representative before
-  * signatures; candidate generation is band-bucketed star expansion
-  * (linear per bucket, never all-pairs); exact Jaccard touches candidates
+  * signatures; candidate generation is bucket-size-adaptive
+  * (MinHashLsh.bucketPairs: all pairs in band buckets of at most 16
+  * members, min-id star edges in hotter ones, so never quadratic in a hot
+  * bucket); exact Jaccard touches candidates
   * only; component labeling shuffles edge-sized data; the split is a
   * per-row content hash.
   */
@@ -102,7 +104,7 @@ object Curation {
         .drop("__toks")
     }
     val good = scored.filter(col("keep_quality")).select(id, col(cfg.textCol))
-    // exact-dup collapse + star-edge LSH + Jaccard + components, expanded
+    // exact-dup collapse + adaptive LSH + Jaccard + components, expanded
     // back over every quality-kept doc (same machinery as d_curate)
     val canon = Dedup.fuzzyCanonical(good, cfg.idCol, cfg.textCol, cfg.jaccardMin)
     // THE shared split assignment (Text.splitBucket) — t_split and

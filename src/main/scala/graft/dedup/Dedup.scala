@@ -31,7 +31,9 @@ object Dedup {
     * docs contributes ONE signature row instead of m AND identical docs
     * can never be separated by a failed bucket-min Jaccard verification
     * (their connectivity comes from the rep map, not from LSH edges).
-    * Representatives then run star-edge LSH candidates → exact Jaccard →
+    * Representatives then run bucket-size-adaptive LSH candidates
+    * (MinHashLsh.bucketPairs: all pairs per small bucket, min-id star
+    * edges per hot one) → exact Jaccard →
     * connected components, and the rep map expands the canonical label
     * back over every input row. Output: (idCol, canonical_id), one row per
     * input doc; a doc survives dedup iff canonical_id == its own id. */

@@ -67,30 +67,16 @@ object EmbedLsh {
     ColumnBridge.column(VectorExpressions.HyperplaneBandKeys(
       ColumnBridge.expression(vec), signs, BitsPerBand))
 
-  /** Candidate edges (a_id < b_id), bucket-size-adaptive — the same
-    * policy as MinHashLsh.candidatePairs: buckets at or below
-    * MinHashLsh.MaxAllPairsBucket emit every pair (full recall for the
-    * cosine-verified consumers), hot buckets (duplicate images all
-    * hashing to one sign pattern) fall back to min-id STAR EXPANSION —
-    * m−1 edges instead of m²/2 — and a components consumer sees the same
-    * connectivity. Input needs columns (vec_id, embedding). */
+  /** Candidate edges (a_id < b_id) under MinHashLsh.bucketPairs' rule:
+    * small band buckets emit every pair (full recall for the
+    * cosine-verified consumers), hot buckets (duplicate images all hashing
+    * to one sign pattern) min-id star edges — m−1 edges instead of m²/2.
+    * Input needs columns (vec_id, embedding). */
   def candidatePairs(e: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val B = MinHashLsh.MaxAllPairsBucket
     val spread = e.repartition(
       e.sparkSession.sparkContext.defaultParallelism, col("vec_id"))
-    val bk = spread.select(col("vec_id"), explode(bandKeys(col("embedding"))).as("bk"))
-    val w = Window.partitionBy(col("bk"))
-    val sized = bk.withColumn("m", min(col("vec_id")).over(w))
-      .withColumn("n", count(lit(1)).over(w))
-    val star = sized.filter(col("n") > B && col("vec_id") =!= col("m"))
-      .select(col("m").as("a_id"), col("vec_id").as("b_id"))
-    val small = sized.filter(col("n") <= B)
-    val allPairs = small.select(col("vec_id").as("a_id"), col("bk"))
-      .join(small.select(col("vec_id").as("b_id"), col("bk")), Seq("bk"))
-      .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"))
-    star.unionByName(allPairs).distinct()
+    MinHashLsh.bucketPairs(
+      spread.select(col("vec_id"), explode(bandKeys(col("embedding"))).as("bk")), "vec_id")
   }
 
   // ---- oracle SQL generation (same constants, same fold order) ----

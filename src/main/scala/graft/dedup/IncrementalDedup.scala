@@ -26,9 +26,7 @@ import org.apache.spark.sql.functions._
 object IncrementalDedup {
 
   private def bandsOf(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    MinHashLsh.signatures(docs, idCol, textCol)
-      .select(col(idCol).as("doc_id"),
-        explode(array((0 until MinHashLsh.Bands).map(MinHashLsh.bandKey): _*)).as("bk"))
+    MinHashLsh.banded(MinHashLsh.signatures(docs, idCol, textCol), Seq(col(idCol).as("doc_id")))
 
   /** The live band table: part files under `bands/batch=&#42;` — the batch
     * partition column is layout bookkeeping, never read. */

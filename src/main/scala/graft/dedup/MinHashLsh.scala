@@ -71,26 +71,37 @@ object MinHashLsh {
     concat_ws(",", lit(band.toString) +:
       (band * Rows until (band + 1) * Rows).map(i => col(s"sig_$i")): _*)
 
-  private def banded(sigs: DataFrame, keep: Seq[Column]): DataFrame =
+  /** (keep..., bk): one row per band, the band key exploded beside the kept
+    * columns. The one band explode: candidate generation and
+    * IncrementalDedup's persisted store both read bands through it. */
+  private[dedup] def banded(sigs: DataFrame, keep: Seq[Column]): DataFrame =
     sigs.select(keep :+ explode(array((0 until Bands).map(bandKey): _*)).as("bk"): _*)
 
-  /** Candidate near-duplicate edges (a_id < b_id), bucket-size-adaptive
-    * (see the class note): all pairs for buckets ≤ MaxAllPairsBucket, min-id
-    * star edges above. One bk-keyed shuffle computes the per-bucket min and
-    * count; the small-bucket self-join reuses that same exchange on both
-    * sides (ReuseExchange — the bk partitioning is already in place), so
-    * signatures are computed once and no extra corpus shuffle appears. */
+  /** Candidate near-duplicate edges (a_id < b_id), bucketed by
+    * bucketPairs. */
   def candidatePairs(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     candidatePairsFromSigs(signatures(docs, idCol, textCol), idCol)
 
   /** candidatePairs over a PRECOMPUTED signature frame (idCol, sig_0..) —
     * the shared-stage entry: one corpus signature pass (see DedupQ's
     * cached stage) feeds every banding consumer instead of each gate
-    * re-reading and re-hashing the corpus. Extra columns pass through
-    * banded() untouched. */
-  def candidatePairsFromSigs(sigs: DataFrame, idCol: String): DataFrame = {
+    * re-reading and re-hashing the corpus. */
+  def candidatePairsFromSigs(sigs: DataFrame, idCol: String): DataFrame =
+    bucketPairs(banded(sigs, Seq(col(idCol))), idCol)
+
+  /** The bucketing rule of every LSH self-pair blocker, over an
+    * (idCol, bk) frame of one row per (item, band bucket): a bucket of at
+    * most MaxAllPairsBucket members emits all its pairs, a hotter one
+    * emits min-id star edges (see the class note). Output: distinct
+    * (a_id, b_id), a_id < b_id. One bk-keyed shuffle computes the
+    * per-bucket min and count; the small-bucket self-join reuses that same
+    * exchange on both sides (ReuseExchange — the bk partitioning is
+    * already in place), so no extra shuffle appears. MinHash documents and
+    * EmbedLsh vectors both bucket here; DedupQ.candSql is the oracle
+    * mirror. */
+  def bucketPairs(bands: DataFrame, idCol: String): DataFrame = {
     val w = Window.partitionBy(col("bk"))
-    val sized = banded(sigs, Seq(col(idCol)))
+    val sized = bands
       .withColumn("m", min(col(idCol)).over(w))
       .withColumn("n", count(lit(1)).over(w))
     val star = sized.filter(col("n") > MaxAllPairsBucket && col(idCol) =!= col("m"))

@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorExpressions
@@ -38,16 +38,26 @@ object SimHashDedup {
   /** The 64-bit signature as a column over `textCol` (requires
     * VectorExpressions.register on the session — simhash64 is a registered
     * SQL expression). Shared by signatures() and DedupQ's cached stage. */
-  def signatureCol(textCol: String): org.apache.spark.sql.Column =
-    // the shared two-path tokenizer (fast split for script-free text,
-    // script-aware extraction otherwise — value-identical either way)
-    expr(s"simhash64(transform(${graft.functions.TextFunctions.tokensSqlExpr(textCol)}, t -> $TokenHashSql))")
+  def signatureCol(textCol: String): Column = wordCol(textCol, TokenHashSql)
 
-  def signatures(spark: SparkSession, docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+  /** One 64-bit signature word: the simhash64 fold of `tokenHashSql` (an
+    * expression over token `t`) across the shared two-path tokenizer
+    * (fast split for script-free text, script-aware extraction
+    * otherwise — value-identical either way). */
+  private def wordCol(textCol: String, tokenHashSql: String): Column =
+    expr(s"simhash64(transform(${graft.functions.TextFunctions.tokensSqlExpr(textCol)}, t -> $tokenHashSql))")
+
+  /** (idCol, word...) — one signature word column per (name, token hash),
+    * one narrow projection after the spread, no other shuffle. */
+  private[dedup] def wordSignatures(spark: SparkSession, docs: DataFrame, idCol: String,
+      textCol: String, words: Seq[(String, String)]): DataFrame = {
     VectorExpressions.register(spark)
     docs.repartition(docs.sparkSession.sparkContext.defaultParallelism, col(idCol))
-      .select(col(idCol), signatureCol(textCol).as("simhash"))
+      .select(col(idCol) +: words.map { case (w, h) => wordCol(textCol, h).as(w) }: _*)
   }
+
+  def signatures(spark: SparkSession, docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    wordSignatures(spark, docs, idCol, textCol, Seq("simhash" -> TokenHashSql))
 
   /** Candidate retrieval + exact Hamming filter over precomputed
     * signatures (idCol, simhash). Retrieval is COMPLETE up to hamming-0
@@ -74,19 +84,32 @@ object SimHashDedup {
     * boilerplate mass that used to concentrate there), quadratic in n
     * beyond ~10⁸ distinct signatures. Past that, use the 128-bit variant
     * (SimHash128.pairsFromSignatures: w=32 at c=4, ~n/2³² per bucket). */
-  def pairsFromSignatures(sigs: DataFrame, idCol: String): DataFrame = {
-    val reps = sigs.groupBy(col("simhash")).agg(min(col(idCol)).as("rep_id"))
-    val star = sigs.join(reps, "simhash")
+  def pairsFromSignatures(sigs: DataFrame, idCol: String): DataFrame =
+    wordPairs(sigs, idCol, Seq("simhash"))
+
+  /** The one retrieval body, over a signature of 64-bit `words` (most
+    * significant first): hamming-0 cliques collapse to min-id rep-star
+    * edges, the signature splits into Chunks equal chunks counted from
+    * its least significant bit, reps join on (chunk index, chunk value),
+    * and the Hamming distance is the sum of bit_count(xor) per word. */
+  private[dedup] def wordPairs(sigs: DataFrame, idCol: String, words: Seq[String]): DataFrame = {
+    val reps = sigs.groupBy(words.map(col): _*).agg(min(col(idCol)).as("rep_id"))
+    val star = sigs.join(reps, words)
       .filter(col(idCol) =!= col("rep_id"))
       .select(col("rep_id").as("a_id"), col(idCol).as("b_id"), lit(0).as("hamming"))
-    val repSigs = reps.select(col("rep_id"), col("simhash"))
-    val chunked = repSigs.select(col("rep_id"), col("simhash"),
-      explode(array((0 until Chunks).map(j =>
-        struct(lit(j).as("ci"), shiftrightunsigned(col("simhash"), 16 * j).bitwiseAND(lit(0xFFFFL)).as("cv"))): _*)).as("ch"))
-    val a = chunked.select(col("rep_id").as("a_id"), col("simhash").as("a_sh"), col("ch"))
-    val b = chunked.select(col("rep_id").as("b_id"), col("simhash").as("b_sh"), col("ch"))
-    val cross = a.join(b, "ch").filter(col("a_id") < col("b_id"))
-      .withColumn("hamming", bit_count(col("a_sh").bitwiseXOR(col("b_sh"))))
+    val perWord = Chunks / words.size
+    val width = 64 / perWord
+    val chunks = (0 until Chunks).map { j =>
+      val word = col(words(words.size - 1 - j / perWord))
+      struct(lit(j).as("ci"),
+        shiftrightunsigned(word, width * (j % perWord)).bitwiseAND(lit((1L << width) - 1)).as("cv"))
+    }
+    val chunked = reps.select(col("rep_id") +: words.map(col) :+ explode(array(chunks: _*)).as("ch"): _*)
+    def side(p: String) = chunked.select(
+      col("rep_id").as(s"${p}_id") +: words.map(w => col(w).as(s"${p}_$w")) :+ col("ch"): _*)
+    val cross = side("a").join(side("b"), "ch").filter(col("a_id") < col("b_id"))
+      .withColumn("hamming",
+        words.map(w => bit_count(col(s"a_$w").bitwiseXOR(col(s"b_$w")))).reduce(_ + _))
       .filter(col("hamming") <= MaxHamming)
       .select(col("a_id"), col("b_id"), col("hamming")).distinct()
     star.unionByName(cross)
@@ -113,49 +136,22 @@ object SimHashDedup {
   * distances.
   */
 object SimHash128 {
-  val Chunks = 4
-  val MaxHamming = 3
+  val MaxHamming: Int = SimHashDedup.MaxHamming
   /** Disjoint md5 halves, 60 effective bits each (15 hex chars keep the
     * conv→bigint in signed range, same trick as SimHashDedup). */
   val TokenHashHiSql = "cast(conv(substring(md5(t), 1, 15), 16, 10) as bigint)"
   val TokenHashLoSql = "cast(conv(substring(md5(t), 17, 15), 16, 10) as bigint)"
+  private val Words = Seq("simhash_hi", "simhash_lo")
 
   /** (idCol, simhash_hi, simhash_lo) — one narrow projection, no shuffle. */
-  def signatures(spark: SparkSession, docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
-    val toks = s"transform(${graft.functions.TextFunctions.tokensSqlExpr(textCol)}, t -> %s)"
-    docs.repartition(docs.sparkSession.sparkContext.defaultParallelism, col(idCol))
-      .select(col(idCol),
-        expr(s"simhash64(${toks.format(TokenHashHiSql)})").as("simhash_hi"),
-        expr(s"simhash64(${toks.format(TokenHashLoSql)})").as("simhash_lo"))
-  }
+  def signatures(spark: SparkSession, docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    SimHashDedup.wordSignatures(spark, docs, idCol, textCol, Words.zip(Seq(TokenHashHiSql, TokenHashLoSql)))
 
   /** Retrieval over (idCol, simhash_hi, simhash_lo): hamming-0 cliques
     * collapse to min-id rep-star edges, then the c=4 × 32-bit-chunk
     * equality join retrieves every rep pair within total Hamming ≤ 3. */
-  def pairsFromSignatures(sigs: DataFrame, idCol: String): DataFrame = {
-    val reps = sigs.groupBy(col("simhash_hi"), col("simhash_lo")).agg(min(col(idCol)).as("rep_id"))
-    val star = sigs.join(reps, Seq("simhash_hi", "simhash_lo"))
-      .filter(col(idCol) =!= col("rep_id"))
-      .select(col("rep_id").as("a_id"), col(idCol).as("b_id"), lit(0).as("hamming"))
-    val chunkExprs = Seq(0, 1, 2, 3).map { j =>
-      val word = if (j < 2) col("simhash_lo") else col("simhash_hi")
-      struct(lit(j).as("ci"),
-        shiftrightunsigned(word, 32 * (j % 2)).bitwiseAND(lit(0xFFFFFFFFL)).as("cv"))
-    }
-    val chunked = reps.select(col("rep_id"), col("simhash_hi"), col("simhash_lo"),
-      explode(array(chunkExprs: _*)).as("ch"))
-    val a = chunked.select(col("rep_id").as("a_id"), col("simhash_hi").as("a_hi"),
-      col("simhash_lo").as("a_lo"), col("ch"))
-    val b = chunked.select(col("rep_id").as("b_id"), col("simhash_hi").as("b_hi"),
-      col("simhash_lo").as("b_lo"), col("ch"))
-    val cross = a.join(b, "ch").filter(col("a_id") < col("b_id"))
-      .withColumn("hamming", bit_count(col("a_hi").bitwiseXOR(col("b_hi")))
-        + bit_count(col("a_lo").bitwiseXOR(col("b_lo"))))
-      .filter(col("hamming") <= MaxHamming)
-      .select(col("a_id"), col("b_id"), col("hamming")).distinct()
-    star.unionByName(cross)
-  }
+  def pairsFromSignatures(sigs: DataFrame, idCol: String): DataFrame =
+    SimHashDedup.wordPairs(sigs, idCol, Words)
 
   def pairs(spark: SparkSession, docs: DataFrame, idCol: String, textCol: String): DataFrame =
     pairsFromSignatures(signatures(spark, docs, idCol, textCol), idCol)

@@ -46,23 +46,25 @@ object DedupQ {
     s"bands AS (\n  SELECT doc_id, unnest([$keys]) AS bk FROM sigs)"
   }
 
-  /** Bucket-size-adaptive candidates, mirroring MinHashLsh.candidatePairs:
-    * buckets ≤ MaxAllPairsBucket emit every pair (full recall for the
-    * verified-pair gates), hot buckets emit min-id star edges (linear in
-    * bucket size, never an unbounded in-bucket cross join). */
-  private val candSelect = {
+  /** Oracle mirror of MinHashLsh.bucketPairs over the (`id`, bk) CTE
+    * `bands`: buckets ≤ MaxAllPairsBucket emit every pair, hot buckets
+    * min-id star edges. The MinHash gates read it over `bands`, the
+    * embedding gates over EmbedLsh.bandsCteSql's `bk`. */
+  private[queries] def candSql(bands: String, id: String): String = {
     val b = MinHashLsh.MaxAllPairsBucket
     s"""SELECT DISTINCT a_id, b_id FROM (
-       |  SELECT m AS a_id, doc_id AS b_id
-       |  FROM (SELECT doc_id, MIN(doc_id) OVER (PARTITION BY bk) AS m,
-       |               COUNT(*) OVER (PARTITION BY bk) AS n FROM bands)
-       |  WHERE n > $b AND doc_id <> m
+       |  SELECT m AS a_id, $id AS b_id
+       |  FROM (SELECT $id, MIN($id) OVER (PARTITION BY bk) AS m,
+       |               COUNT(*) OVER (PARTITION BY bk) AS n FROM $bands)
+       |  WHERE n > $b AND $id <> m
        |  UNION ALL
-       |  SELECT a.doc_id AS a_id, b.doc_id AS b_id
-       |  FROM bands a JOIN bands b ON a.bk = b.bk AND a.doc_id < b.doc_id
-       |  JOIN (SELECT bk, COUNT(*) AS n FROM bands GROUP BY bk) z ON z.bk = a.bk
+       |  SELECT a.$id AS a_id, b.$id AS b_id
+       |  FROM $bands a JOIN $bands b ON a.bk = b.bk AND a.$id < b.$id
+       |  JOIN (SELECT bk, COUNT(*) AS n FROM $bands GROUP BY bk) z ON z.bk = a.bk
        |  WHERE z.n <= $b)""".stripMargin
   }
+
+  private val candSelect = candSql("bands", "doc_id")
 
   /** Jaccard cutoff for verified near-dup pairs — ONE constant feeding the
     * Spark filters and every generated oracle (d_jaccard, d_components,
@@ -200,8 +202,9 @@ object DedupQ {
       |  COUNT(*) AS n_docs, MIN(doc_id) AS canonical_id
       |FROM documents GROUP BY 1 ORDER BY content_hash""".stripMargin
 
-  /** d_minhash_pairs: LSH banding candidate edges (star expansion per band
-    * bucket — linear in bucket size, see MinHashLsh.candidatePairs). */
+  /** d_minhash_pairs: LSH banding candidate edges, bucket-size-adaptive
+    * (all pairs per small band bucket, min-id star edges per hot one —
+    * linear in bucket size, see MinHashLsh.bucketPairs). */
   def dMinhashPairs(s: SparkSession, dir: String): DataFrame =
     candidates(s, dir).orderBy(col("a_id"), col("b_id"))
 
@@ -295,7 +298,7 @@ object DedupQ {
 
   /** d_curate: the training-data curation pipeline END-TO-END — quality
     * scoring → threshold filter → fuzzy dedup with exact-dup collapse
-    * (Dedup.fuzzyCanonical: content-hash rep collapse, star-edge LSH
+    * (Dedup.fuzzyCanonical: content-hash rep collapse, adaptive LSH
     * candidates, exact Jaccard, connected components) → canonical
     * survivors only. The cheap narrow quality filter runs FIRST so the
     * expensive shingle/signature machinery only ever sees surviving
@@ -584,6 +587,50 @@ object DedupQ {
         |ORDER BY a_id, b_id""".stripMargin
   }
 
+  /** The embedding corpus cast to doubles plus a perturbed twin of every
+    * `every`-th vector at id + `offset`: each component scaled by
+    * 1 ± 0.3, the (vec_id + j) parity picking the sign, which lands a twin
+    * at cos ≈ 0.95-0.97 of its source. Every step is the same IEEE double
+    * op as twinSql's, so both engines build the identical corpus. */
+  private def twinAugmented(e: DataFrame, every: Int, offset: Long): DataFrame = {
+    val base = e.select(col("vec_id"),
+      expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("embedding"))
+    val twins = e.filter(col("vec_id") % every === 0)
+      .select((col("vec_id") + offset).as("vec_id"),
+        expr("""transform(embedding, (x, j) ->
+                 CAST(x AS DOUBLE) * (1.0D + CASE WHEN (vec_id + j) % 2 = 0
+                                             THEN 0.3D ELSE -0.3D END))""").as("embedding"))
+    base.unionByName(twins)
+  }
+
+  /** Oracle mirror of twinAugmented, as a CTE body over `embeddings`. */
+  private def twinSql(every: Int, offset: Long): String =
+    s"""SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS embedding FROM embeddings
+       |  UNION ALL
+       |  SELECT vec_id + $offset,
+       |    [CAST(embedding[j+1] AS DOUBLE) * (1.0 + CASE WHEN (vec_id + j) % 2 = 0
+       |                                              THEN 0.3 ELSE -0.3 END)
+       |     for j in range(0, len(embedding))]
+       |  FROM embeddings WHERE vec_id % $every = 0""".stripMargin
+
+  /** (a_id, b_id, a_e, b_e, cos): each candidate pair joined to both of
+    * its vectors in `aug` and scored with the exact cosine. */
+  private def candCos(cands: DataFrame, aug: DataFrame): DataFrame = {
+    val ea = aug.select(col("vec_id").as("a_id"), col("embedding").as("a_e"))
+    val eb = aug.select(col("vec_id").as("b_id"), col("embedding").as("b_e"))
+    cands.join(ea, "a_id").join(eb, "b_id")
+      .withColumn("cos", expr("cosine_sim(a_e, b_e)"))
+  }
+
+  /** Oracle mirror of candCos over the `cand` and `aug` CTEs: the `keep`
+    * pair columns, then cos. */
+  private def candCosSql(keep: String*): String = {
+    val cols = keep :+ s"${cosSql("ea.embedding", "eb.embedding")} AS cos"
+    s"""SELECT ${cols.mkString(", ")}
+       |  FROM cand JOIN aug ea ON ea.vec_id = a_id
+       |            JOIN aug eb ON eb.vec_id = b_id""".stripMargin
+  }
+
   /** d_embed_neardup: embedding near-dups AT THE TUNED OPERATING POINT —
     * random-hyperplane LSH band blocking (EmbedLsh, b=10 bands × r=12
     * bits targeting cos ≥ 0.9), exact cosine only on band-collision
@@ -603,21 +650,9 @@ object DedupQ {
   def dEmbedNeardup(s: SparkSession, dir: String): DataFrame = {
     graft.functions.VectorExpressions.register(s)
     val e = Tables.embeddings(s, dir)
-    // same double-cast + perturbation SHAPE as the oracle's aug CTE:
-    // every arithmetic step is the identical IEEE op on both engines
-    val base = e.select(col("vec_id"),
-      expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("embedding"))
-    val twins = e.filter(col("vec_id") % 20 === 0)
-      .select((col("vec_id") + 1000000L).as("vec_id"),
-        expr("""transform(embedding, (x, j) ->
-                 CAST(x AS DOUBLE) * (1.0D + CASE WHEN (vec_id + j) % 2 = 0
-                                             THEN 0.3D ELSE -0.3D END))""").as("embedding"))
-    val aug = base.unionByName(twins)
+    val aug = twinAugmented(e, 20, 1000000L)
     val cands = EmbedLsh.candidatePairs(aug)
-    val ea = aug.select(col("vec_id").as("a_id"), col("embedding").as("a_e"))
-    val eb = aug.select(col("vec_id").as("b_id"), col("embedding").as("b_e"))
-    cands.join(ea, "a_id").join(eb, "b_id")
-      .withColumn("cos", expr("cosine_sim(a_e, b_e)"))
+    candCos(cands, aug)
       .filter(col("cos") >= EmbedLsh.Threshold)
       .select(col("a_id"), col("b_id"), col("cos"))
       .orderBy(col("a_id"), col("b_id"))
@@ -627,28 +662,11 @@ object DedupQ {
     * parity rule), then the shared band CTEs over the augmented set. */
   val dEmbedNeardupSql: String =
     s"""WITH aug AS (
-       |  SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS embedding FROM embeddings
-       |  UNION ALL
-       |  SELECT vec_id + 1000000,
-       |    [CAST(embedding[j+1] AS DOUBLE) * (1.0 + CASE WHEN (vec_id + j) % 2 = 0
-       |                                              THEN 0.3 ELSE -0.3 END)
-       |     for j in range(0, len(embedding))]
-       |  FROM embeddings WHERE vec_id % 20 = 0),
+       |  ${twinSql(20, 1000000)}),
        |${graft.dedup.EmbedLsh.bandsCteSql("aug")},
-       |cand AS (SELECT DISTINCT a_id, b_id FROM (
-       |           SELECT m AS a_id, vec_id AS b_id
-       |           FROM (SELECT vec_id, MIN(vec_id) OVER (PARTITION BY bk) AS m,
-       |                        COUNT(*) OVER (PARTITION BY bk) AS n FROM bk)
-       |           WHERE n > ${MinHashLsh.MaxAllPairsBucket} AND vec_id <> m
-       |           UNION ALL
-       |           SELECT a.vec_id AS a_id, b.vec_id AS b_id
-       |           FROM bk a JOIN bk b ON a.bk = b.bk AND a.vec_id < b.vec_id
-       |           JOIN (SELECT bk, COUNT(*) AS n FROM bk GROUP BY bk) z ON z.bk = a.bk
-       |           WHERE z.n <= ${MinHashLsh.MaxAllPairsBucket}))
+       |cand AS (${candSql("bk", "vec_id")})
        |SELECT a_id, b_id, cos FROM (
-       |  SELECT a_id, b_id, ${cosSql("ea.embedding", "eb.embedding")} AS cos
-       |  FROM cand JOIN aug ea ON ea.vec_id = a_id
-       |            JOIN aug eb ON eb.vec_id = b_id)
+       |  ${candCosSql("a_id", "b_id")})
        |WHERE cos >= ${graft.dedup.EmbedLsh.Threshold} ORDER BY a_id, b_id""".stripMargin
 
   /** SemDeDup cosine cutoff (the tuned near-dup regime; twins land at
@@ -671,14 +689,7 @@ object DedupQ {
     * perturbed twins) so the DuckDB oracle's unrolled fold stays fast. */
   def dSemdedup(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
-    val base = e.select(col("vec_id"),
-      expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("embedding"))
-    val twins = e.filter(col("vec_id") % 20 === 0)
-      .select((col("vec_id") + 1000000L).as("vec_id"),
-        expr("""transform(embedding, (x, j) ->
-                 CAST(x AS DOUBLE) * (1.0D + CASE WHEN (vec_id + j) % 2 = 0
-                                             THEN 0.3D ELSE -0.3D END))""").as("embedding"))
-    val aug = base.unionByName(twins).filter(col("vec_id") % 5 === 0)
+    val aug = twinAugmented(e, 20, 1000000L).filter(col("vec_id") % 5 === 0)
       .cpEager // feeds training, assignment and the final expand
     // k derives from the cluster budget (125-row slice / 16 → k = 8 at
     // the gate's sf0.01, the same k the static oracle SQL unrolls); the
@@ -700,13 +711,7 @@ object DedupQ {
       Similarity.kmAssignCte("pts", s"c${i - 1}", s"a$i"),
       Similarity.kmRecenterCte(s"a$i", s"c$i")))
     s"""WITH RECURSIVE rawaug AS (
-       |  SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS embedding FROM embeddings
-       |  UNION ALL
-       |  SELECT vec_id + 1000000,
-       |    [CAST(embedding[j+1] AS DOUBLE) * (1.0 + CASE WHEN (vec_id + j) % 2 = 0
-       |                                              THEN 0.3 ELSE -0.3 END)
-       |     for j in range(0, len(embedding))]
-       |  FROM embeddings WHERE vec_id % 20 = 0),
+       |  ${twinSql(20, 1000000)}),
        |aug AS (SELECT * FROM rawaug WHERE vec_id % 5 = 0),
        |rm AS (SELECT vec_id, embedding,
        |         MIN(vec_id) OVER (PARTITION BY embedding) AS rep FROM aug),
@@ -786,7 +791,7 @@ object DedupQ {
     * count, duplicate-cluster count and membership, the dedup ratio
     * (fraction of docs removed keeping one survivor per cluster), and a
     * cluster-size histogram. Composes the full fuzzyCanonical pipeline
-    * (exact-dup collapse → star-edge LSH → Jaccard → components) and
+    * (exact-dup collapse → adaptive LSH → Jaccard → components) and
     * reduces it to a fixed handful of metric rows — cluster-count-sized
     * aggregations, nothing corpus-sized leaves the executors. */
   def dReport(s: SparkSession, dir: String): DataFrame = {
@@ -814,7 +819,7 @@ object DedupQ {
     metrics.reduce(_ unionByName _).unionByName(hist).orderBy(col("metric"))
   }
 
-  /** Oracle: the collapsed star-edge pipeline over ALL documents (rm =
+  /** Oracle: the collapsed adaptive-LSH pipeline over ALL documents (rm =
     * rep map with no quality gate), closure over reps, expand, then the
     * same metric unions. */
   val dReportSql: String =
@@ -947,20 +952,10 @@ object DedupQ {
   def dDecontamSem(s: SparkSession, dir: String): DataFrame = {
     graft.functions.VectorExpressions.register(s)
     val e = Tables.embeddings(s, dir)
-    val base = e.select(col("vec_id"),
-      expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("embedding"))
-    val leaked = e.filter(col("vec_id") % 39 === 0)
-      .select((col("vec_id") + 2000000L).as("vec_id"),
-        expr("""transform(embedding, (x, j) ->
-                 CAST(x AS DOUBLE) * (1.0D + CASE WHEN (vec_id + j) % 2 = 0
-                                             THEN 0.3D ELSE -0.3D END))""").as("embedding"))
-    val aug = base.unionByName(leaked)
+    val aug = twinAugmented(e, 39, 2000000L)
     val cands = EmbedLsh.candidatePairs(aug)
       .filter((col("a_id") % 13 === 0) =!= (col("b_id") % 13 === 0))
-    val ea = aug.select(col("vec_id").as("a_id"), col("embedding").as("a_e"))
-    val eb = aug.select(col("vec_id").as("b_id"), col("embedding").as("b_e"))
-    cands.join(ea, "a_id").join(eb, "b_id")
-      .withColumn("cos", expr("cosine_sim(a_e, b_e)"))
+    candCos(cands, aug)
       .filter(col("cos") >= EmbedLsh.Threshold)
       .select(
         when(col("a_id") % 13 === 0, col("a_id")).otherwise(col("b_id")).as("eval_id"),
@@ -973,31 +968,14 @@ object DedupQ {
     * adaptive candidate policy, cross-side filter, cosine verify. */
   val dDecontamSemSql: String =
     s"""WITH aug AS (
-       |  SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS embedding FROM embeddings
-       |  UNION ALL
-       |  SELECT vec_id + 2000000,
-       |    [CAST(embedding[j+1] AS DOUBLE) * (1.0 + CASE WHEN (vec_id + j) % 2 = 0
-       |                                              THEN 0.3 ELSE -0.3 END)
-       |     for j in range(0, len(embedding))]
-       |  FROM embeddings WHERE vec_id % 39 = 0),
+       |  ${twinSql(39, 2000000)}),
        |${graft.dedup.EmbedLsh.bandsCteSql("aug")},
-       |cand AS (SELECT DISTINCT a_id, b_id FROM (
-       |           SELECT m AS a_id, vec_id AS b_id
-       |           FROM (SELECT vec_id, MIN(vec_id) OVER (PARTITION BY bk) AS m,
-       |                        COUNT(*) OVER (PARTITION BY bk) AS n FROM bk)
-       |           WHERE n > ${MinHashLsh.MaxAllPairsBucket} AND vec_id <> m
-       |           UNION ALL
-       |           SELECT a.vec_id AS a_id, b.vec_id AS b_id
-       |           FROM bk a JOIN bk b ON a.bk = b.bk AND a.vec_id < b.vec_id
-       |           JOIN (SELECT bk, COUNT(*) AS n FROM bk GROUP BY bk) z ON z.bk = a.bk
-       |           WHERE z.n <= ${MinHashLsh.MaxAllPairsBucket})
+       |cand AS (${candSql("bk", "vec_id")}
        |         WHERE (a_id % 13 = 0) <> (b_id % 13 = 0))
        |SELECT CASE WHEN a_id % 13 = 0 THEN a_id ELSE b_id END AS eval_id,
        |       CASE WHEN a_id % 13 = 0 THEN b_id ELSE a_id END AS train_id, cos
        |FROM (
-       |  SELECT a_id, b_id, ${cosSql("ea.embedding", "eb.embedding")} AS cos
-       |  FROM cand JOIN aug ea ON ea.vec_id = a_id
-       |            JOIN aug eb ON eb.vec_id = b_id)
+       |  ${candCosSql("a_id", "b_id")})
        |WHERE cos >= ${graft.dedup.EmbedLsh.Threshold} ORDER BY eval_id, train_id""".stripMargin
 
   /** d_substring_overlap: winnowing put to its actual MOSS use — LOCAL
@@ -1214,19 +1192,9 @@ object DedupQ {
   def dCosHist(s: SparkSession, dir: String): DataFrame = {
     graft.functions.VectorExpressions.register(s)
     val e = Tables.embeddings(s, dir)
-    val base = e.select(col("vec_id"),
-      expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("embedding"))
-    val twins = e.filter(col("vec_id") % 20 === 0)
-      .select((col("vec_id") + 1000000L).as("vec_id"),
-        expr("""transform(embedding, (x, j) ->
-                 CAST(x AS DOUBLE) * (1.0D + CASE WHEN (vec_id + j) % 2 = 0
-                                             THEN 0.3D ELSE -0.3D END))""").as("embedding"))
-    val aug = base.unionByName(twins)
+    val aug = twinAugmented(e, 20, 1000000L)
     val cands = EmbedLsh.candidatePairs(aug)
-    val ea = aug.select(col("vec_id").as("a_id"), col("embedding").as("a_e"))
-    val eb = aug.select(col("vec_id").as("b_id"), col("embedding").as("b_e"))
-    cands.join(ea, "a_id").join(eb, "b_id")
-      .withColumn("cos", expr("cosine_sim(a_e, b_e)"))
+    candCos(cands, aug)
       .select(floor(col("cos") * 20).cast("long").as("cos_bucket"), col("cos"))
       .groupBy(col("cos_bucket"))
       .agg(count(lit(1)).as("n_pairs"),
@@ -1237,28 +1205,11 @@ object DedupQ {
 
   val dCosHistSql: String =
     s"""WITH aug AS (
-       |  SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS embedding FROM embeddings
-       |  UNION ALL
-       |  SELECT vec_id + 1000000,
-       |    [CAST(embedding[j+1] AS DOUBLE) * (1.0 + CASE WHEN (vec_id + j) % 2 = 0
-       |                                              THEN 0.3 ELSE -0.3 END)
-       |     for j in range(0, len(embedding))]
-       |  FROM embeddings WHERE vec_id % 20 = 0),
+       |  ${twinSql(20, 1000000)}),
        |${graft.dedup.EmbedLsh.bandsCteSql("aug")},
-       |cand AS (SELECT DISTINCT a_id, b_id FROM (
-       |           SELECT m AS a_id, vec_id AS b_id
-       |           FROM (SELECT vec_id, MIN(vec_id) OVER (PARTITION BY bk) AS m,
-       |                        COUNT(*) OVER (PARTITION BY bk) AS n FROM bk)
-       |           WHERE n > ${MinHashLsh.MaxAllPairsBucket} AND vec_id <> m
-       |           UNION ALL
-       |           SELECT a.vec_id AS a_id, b.vec_id AS b_id
-       |           FROM bk a JOIN bk b ON a.bk = b.bk AND a.vec_id < b.vec_id
-       |           JOIN (SELECT bk, COUNT(*) AS n FROM bk GROUP BY bk) z ON z.bk = a.bk
-       |           WHERE z.n <= ${MinHashLsh.MaxAllPairsBucket})),
+       |cand AS (${candSql("bk", "vec_id")}),
        |sc AS (
-       |  SELECT ${cosSql("ea.embedding", "eb.embedding")} AS cos
-       |  FROM cand JOIN aug ea ON ea.vec_id = a_id
-       |            JOIN aug eb ON eb.vec_id = b_id)
+       |  ${candCosSql()})
        |SELECT CAST(floor(cos * 20) AS BIGINT) AS cos_bucket, COUNT(*) AS n_pairs,
        |  CAST(CAST(MIN(cos) AS DECIMAL(18,6)) AS DOUBLE) AS min_cos,
        |  CAST(CAST(MAX(cos) AS DECIMAL(18,6)) AS DOUBLE) AS max_cos

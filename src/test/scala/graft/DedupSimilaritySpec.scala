@@ -3,13 +3,19 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.dedup.{Dedup, MinHashLsh, SimHashDedup}
+import graft.dedup.{Dedup, EmbedLsh, IncrementalDedup, MinHashLsh, SimHashDedup}
 import graft.functions.VectorExpressions
 import graft.similarity.Knn
 
 class DedupSimilaritySpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
+
+  private val boiler = "same boilerplate paragraph repeated verbatim across the whole corpus today"
+
+  /** A vector whose every hyperplane dot product is nonzero (the first
+    * component outweighs the rest), so its negation flips every bit. */
+  private val vec = (0 until EmbedLsh.Dim).map(j => math.pow(2, -j))
 
   private val docs = Seq(
     (0L, "the quick brown fox jumps over the lazy dog again and again today"),
@@ -37,22 +43,45 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // the 100 TB scale guard — a boilerplate cluster all landing in one
     // band bucket must produce O(m) candidate edges (star expansion from
     // the bucket min), never the O(m²) in-bucket cross join
-    val hot = ((0 until 1000).map(i =>
-        (i.toLong, "same boilerplate paragraph repeated verbatim across the whole corpus today")) :+
+    // the same rule holds for hyperplane-band vectors (EmbedLsh)
+    val hot = ((0 until 1000).map(i => (i.toLong, boiler)) :+
       (5000L, "entirely different content about spark engines and data pipelines here"))
       .toDF("doc_id", "text")
-    val pairs = MinHashLsh.candidatePairs(hot, "doc_id", "text").cache()
-    try {
-      assert(pairs.count() == 999, "candidate volume must be linear in bucket size")
-      assert(pairs.filter(col("a_id") =!= 0L).count() == 0, "every edge must come from the bucket min")
-      assert(pairs.filter(col("a_id") >= col("b_id")).count() == 0, "a_id < b_id invariant")
-    } finally pairs.unpersist()
+    val hotVecs = ((0 until 1000).map(i => (i.toLong, vec)) :+ (5000L, vec.map(-_)))
+      .toDF("vec_id", "embedding")
+    for ((who, candidates) <- Seq(
+        "MinHashLsh" -> MinHashLsh.candidatePairs(hot, "doc_id", "text"),
+        "EmbedLsh" -> EmbedLsh.candidatePairs(hotVecs))) {
+      val pairs = candidates.cache()
+      try {
+        assert(pairs.count() == 999, s"$who: candidate volume must be linear in bucket size")
+        assert(pairs.filter(col("a_id") =!= 0L).count() == 0, s"$who: every edge must come from the bucket min")
+        assert(pairs.filter(col("a_id") >= col("b_id")).count() == 0, s"$who: a_id < b_id invariant")
+      } finally pairs.unpersist()
+    }
+  }
+
+  test("LSH tier boundary: a bucket of MaxAllPairsBucket identical members emits all pairs, one more emits star edges") {
+    val b = MinHashLsh.MaxAllPairsBucket
+    for (m <- Seq(b, b + 1)) {
+      val ids = (0 until m).map(_.toLong)
+      val want =
+        if (m <= b) (for (x <- ids; y <- ids if x < y) yield (x, y)).toSet
+        else ids.tail.map(y => (0L, y)).toSet
+      for ((who, candidates) <- Seq(
+          "MinHashLsh" -> MinHashLsh.candidatePairs(ids.map(i => (i, boiler)).toDF("doc_id", "text"),
+            "doc_id", "text"),
+          "EmbedLsh" -> EmbedLsh.candidatePairs(ids.map(i => (i, vec)).toDF("vec_id", "embedding")))) {
+        val got = candidates.as[(Long, Long)].collect().toSet
+        assert(got == want, s"$who, bucket of $m: ${got.size} edges, want ${want.size}")
+      }
+    }
+    assert(b * (b - 1) / 2 == 120, "the boundary this case pins: 16 members, 120 pairs")
   }
 
   test("IncrementalDedup.probe hot store band yields ONE witness per batch doc, not m pairs") {
     import graft.dedup.IncrementalDedup
     val path = java.nio.file.Files.createTempDirectory("graft_incdedup_hot").toString
-    val boiler = "same boilerplate paragraph repeated verbatim across the whole corpus today"
     val corpus = (0 until 500).map(i => (i.toLong, boiler)).toDF("doc_id", "text")
     IncrementalDedup.buildStore(corpus, "doc_id", "text", path)
     val batch = Seq((9000L, boiler)).toDF("doc_id", "text")
@@ -60,6 +89,19 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .as[(Long, Long)].collect().toSet
     assert(hits == Set((9000L, 0L)),
       s"hot band must collapse to the min corpus witness, got ${hits.size} pairs")
+  }
+
+  test("IncrementalDedup.probe tier boundary: MaxAllPairsBucket stored dups give one witness each, one more gives one") {
+    val b = MinHashLsh.MaxAllPairsBucket
+    for (m <- Seq(b, b + 1)) {
+      val path = java.nio.file.Files.createTempDirectory("graft_incdedup_tier").toString
+      IncrementalDedup.buildStore((0 until m).map(i => (i.toLong, boiler)).toDF("doc_id", "text"),
+        "doc_id", "text", path)
+      val hits = IncrementalDedup.probe(spark, path, Seq((9000L, boiler)).toDF("doc_id", "text"),
+        "doc_id", "text").as[(Long, Long)].collect().toSet
+      val want = if (m <= b) (0 until m).map(i => (9000L, i.toLong)).toSet else Set((9000L, 0L))
+      assert(hits == want, s"store bucket of $m: ${hits.size} witnesses, want ${want.size}")
+    }
   }
 
   test("fuzzyCanonical: exact dups collapse unconditionally, near-dups via LSH, unrelated survive") {

@@ -313,12 +313,18 @@ class PlanSpec extends AnyFunSuite {
     // guarded by the bucket-size bound on BOTH sides (n <= B before the
     // join), and the star tier by its complement (n > B) — an unguarded
     // band self-join means the unbounded quadratic path came back
+    // — for MinHash documents and for EmbedLsh vectors alike
+    import org.apache.spark.sql.functions.{col, expr}
     val b = graft.dedup.MinHashLsh.MaxAllPairsBucket
-    val p = plan(graft.dedup.MinHashLsh.candidatePairs(
-      Tables.documents(spark, dir), "doc_id", "text"))
-    assert(p.contains("Window"), s"bucket-min/count window missing:\n${p.take(3000)}")
-    assert(p.contains(s"<= $b"), s"all-pairs tier lost its bucket-size guard:\n${p.take(3000)}")
-    assert(p.contains(s"> $b"), s"star tier lost its hot-bucket filter:\n${p.take(3000)}")
+    val vecs = Tables.embeddings(spark, dir).select(col("vec_id"),
+      expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("embedding"))
+    for (p <- Seq(
+        plan(graft.dedup.MinHashLsh.candidatePairs(Tables.documents(spark, dir), "doc_id", "text")),
+        plan(graft.dedup.EmbedLsh.candidatePairs(vecs)))) {
+      assert(p.contains("Window"), s"bucket-min/count window missing:\n${p.take(3000)}")
+      assert(p.contains(s"<= $b"), s"all-pairs tier lost its bucket-size guard:\n${p.take(3000)}")
+      assert(p.contains(s"> $b"), s"star tier lost its hot-bucket filter:\n${p.take(3000)}")
+    }
   }
 
   test("s_pq: code assembly is ONE projection — zero joins, zero shuffles over the corpus") {
